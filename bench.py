@@ -287,6 +287,9 @@ def main() -> int:
         if redo and min(redo)[0] < timings[name]:
             record(name, redo)
     total = sum(v for v in timings.values() if v == v)
+    # a key that errored has no sample (NaN): it is a failure, not a
+    # speedup, and must be visible in the one-line record
+    failed = sorted(k for k, v in timings.items() if v != v)
     calib_end = calib_sec()
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -305,6 +308,8 @@ def main() -> int:
                 "value": round(total, 3),
                 "unit": "sec",
                 "n_queries": len(timings),
+                "n_failed": len(failed),
+                "failed": failed,
                 "queries": timings,
                 "external_cpus_at_recorded_sample": loads,
                 "sf": sf_val,
@@ -325,6 +330,8 @@ def main() -> int:
         "value": round(total, 3),
         "unit": "sec",
         "n_queries": len(timings),
+        "n_failed": len(failed),
+        "failed": failed,
         "queries": {},
         "sf": sf_val,
         # shared-host context for the whole run: worst EXTERNAL busy-cpu

@@ -181,7 +181,7 @@ def asof_join_delta(
         bag_diff_cdc,
     )
     from ivm_extension_spark.operators.rewrite import MULT_COL
-    from ivm_extension_spark.operators.thetajoin import _ns_join
+    from ivm_extension_spark.operators.countjoin import _ns_join
 
     if d_left is None and d_right is None:
         raise ValueError("at least one side needs a delta")

@@ -24,6 +24,8 @@ or schema-derived identifiers pass through here, always backtick-quoted
 
 from __future__ import annotations
 
+import functools
+import re
 import threading
 
 from pyspark.sql import Column, DataFrame, functions as F
@@ -34,12 +36,32 @@ def q(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+# a ``{name}`` placeholder, or a quoted span the binder must leave
+# alone: a backticked identifier or a single/double-quoted literal (a
+# user theta condition may legitimately contain '{r}' in a literal)
+_BIND_RX = re.compile(
+    r"`(?:[^`]|``)*`|'(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\"|\{(\w+)\}"
+)
+
+
+@functools.cache
+def _global_temp_db(sc) -> str:
+    """The global temp-view database — a static conf, fixed per context."""
+    return sc.getConf().get("spark.sql.globalTempDatabase", "global_temp")
+
+
 def sql_over(text: str, **dfs: DataFrame) -> DataFrame:
     """Run one SQL text over the given DataFrames — ``{name}``
-    placeholders in ``text`` are bound by registering each frame under a
-    thread-locally REUSED temp-view slot (``spark.sql`` analyzes
-    eagerly, so the returned plan holds the resolved relations and the
-    slot can be overwritten by the next construction).
+    placeholders in ``text`` (outside quoted literals and identifiers)
+    are bound by registering each frame under a thread-locally REUSED
+    global temp-view slot (``spark.sql`` analyzes eagerly, so the
+    returned plan holds the resolved relations and the slot can be
+    overwritten by the next construction).
+
+    Global, not session-local: under ``foreachBatch`` the micro-batch
+    lives on a cloned session, so a local view of it is invisible to
+    ``spark.sql`` on the engine's session — a global temp view resolves
+    from every session of the context.
 
     Cost model: ``len(dfs) + 1`` round trips and ONE Catalyst analysis
     pass for the whole construction, however many renames / joins /
@@ -47,15 +69,17 @@ def sql_over(text: str, **dfs: DataFrame) -> DataFrame:
     this module's diet (a fused rule level that took 4 Dataset calls
     paid 4 analyses of ever-growing trees).  Slots are per (thread,
     position): concurrent ``build_all`` branches never collide, and at
-    most ``threads x slots`` views ever exist per session."""
+    most ``threads x slots`` views ever exist per context."""
     spark = next(iter(dfs.values())).sparkSession
+    db = q(_global_temp_db(spark.sparkContext))
+    views: dict[str, str] = {}
     for i, (k, df) in enumerate(dfs.items()):
         v = f"__ivm_sql_{threading.get_ident()}_{i}"
-        df.createOrReplaceTempView(v)
-        # plain replace, not str.format: a user-supplied theta condition
-        # may legitimately contain braces inside string literals
-        text = text.replace("{" + k + "}", v)
-    return spark.sql(text)
+        df.createOrReplaceGlobalTempView(v)
+        views[k] = f"{db}.{q(v)}"
+    return spark.sql(
+        _BIND_RX.sub(lambda m: views.get(m.group(1), m.group(0)), text)
+    )
 
 
 def ns_eq(cols, prefix: str) -> Column:

@@ -26,11 +26,9 @@ broadcast when one side is a delta, shuffle otherwise — and the
 ``levels``-fold row expansion (default 21 for 2^21 bins) happens inside
 whole-stage codegen between the scan and the join, never materialized.
 
-The reference's growth direction is the poster's general join delta
-rule, which does not restrict to equi conditions (SURVEY.md §2c); the
-equi rewrite rejects theta conditions (rewrite.py _equi_pairs), and
-this operator plus :func:`ineq_join_delta` is the maintained path for
-the one-sided shape.
+This module supplies the dyadic PAIR GENERATOR for the counting-join
+rule (countjoin.py): :func:`ineq_join`.  The LEFT/FULL/SEMI/ANTI
+computes and every delta rule are that shared rule bound onto it.
 """
 
 from __future__ import annotations
@@ -40,9 +38,8 @@ import re
 
 from pyspark.sql import DataFrame, functions as F
 
-from ivm_extension_spark.operators import colops
+from ivm_extension_spark.operators import colops, countjoin as cj
 from ivm_extension_spark.operators.colops import q
-from ivm_extension_spark.operators.pin import build_all, pin_all
 
 _LVL, _IDX = "__dy_lvl", "__dy_idx"
 _BIN = "__dy_bin"
@@ -52,29 +49,23 @@ _OPS = {"<", "<=", ">", ">="}
 _BARE_RX = re.compile(r"[A-Za-z_]\w*")
 
 
+def _bare(expr: str, cols: list[str]) -> bool:
+    """``expr`` is one existing column name, not an expression."""
+    e = expr.strip()
+    return bool(_BARE_RX.fullmatch(e)) and e in cols
+
+
 def _as_column(df: DataFrame, expr: str, scratch: str):
     """Resolve a value-axis operand that may be an EXPRESSION (the SQL
     front routes conditions like ``o_totalprice < cutoff * scale`` here)
     to a real column: bare existing columns pass through, anything else
     is materialized as ``scratch``.  Returns (df, col_name, added)."""
     e = expr.strip()
-    if _BARE_RX.fullmatch(e) and e in df.columns:
+    if _bare(e, df.columns):
         return df, e, None
     if scratch in df.columns:
         raise ValueError(f"scratch column name {scratch!r} already exists")
     return df.withColumn(scratch, F.expr(e)), scratch, scratch
-
-
-def _extra_refs(extra_cond: str | None, cols: list[str]) -> list[str]:
-    """Columns of ``cols`` referenced by ``extra_cond`` — they extend the
-    match-count probe key, because with a residual condition a row's
-    match fate is determined by ALL condition inputs, not just the
-    dyadic axis column."""
-    if not extra_cond:
-        return []
-    from ivm_extension_spark.operators.thetajoin import referenced_cols
-
-    return referenced_cols(extra_cond, cols, ())
 
 
 def auto_dyadic_bins(
@@ -275,34 +266,42 @@ def ineq_join(
     )
 
 
-def _probe_back(
-    side: DataFrame, mk: DataFrame, kp: list[str], how: str
-) -> DataFrame:
-    """Broadcast semi/anti join of ``side`` against the matched-key set
-    ``mk`` on ``kp`` — NULL-SAFE, because with an ``extra_cond``
-    residual a row can match through NULL referenced columns (e.g. a
-    condition wrapped in ``coalesce``); plain name-equality would drop
-    those keys silently."""
-    mkd = colops.renamed(mk, kp, "__mk_")
-    return side.join(F.broadcast(mkd), on=colops.ns_eq(kp, "__mk_"), how=how)
-
-
-def _null_pad_anti(
-    side: DataFrame,
-    mk: DataFrame,
-    probe_cols: list[str],
-    other: DataFrame,
+def _bind(
+    left: DataFrame,
+    right: DataFrame,
+    left_col: str,
+    right_col: str,
+    op: str,
+    bin_width: float,
+    max_bins: int,
     key_cols: tuple[str, ...],
-) -> DataFrame:
-    """Rows of ``side`` whose ``probe_cols`` never appear in ``mk``
-    (null-safe probe), padded with NULLs for ``other``'s non-key
-    columns — the preserved-side construction shared with the banded
-    rule (rangejoin._null_pad_anti)."""
-    mkd = colops.renamed(mk, probe_cols, "__mk_").distinct()
-    out = side.join(
-        F.broadcast(mkd), on=colops.ns_eq(probe_cols, "__mk_"), how="left_anti"
+    origin: float,
+    extra_cond: str | None = None,
+) -> cj.Matcher:
+    """The dyadic generator plus both sides' match columns: the columns
+    each axis operand and ``extra_cond`` reference (with a residual, a
+    row's match fate depends on ALL condition inputs).  Bare axis
+    columns with no residual never match through a NULL, so the count
+    bookkeeping may use plain equality."""
+    from ivm_extension_spark.operators.thetajoin import referenced_cols
+
+    def on(axis: str, cols: list[str]) -> list[str]:
+        exprs = [axis, extra_cond] if extra_cond else [axis]
+        return list(dict.fromkeys(
+            c for e in exprs for c in referenced_cols(e, cols, key_cols)
+        ))
+
+    return cj.Matcher(
+        lambda a, b, bc: ineq_join(
+            a, b, left_col, right_col, op, bin_width, max_bins, key_cols,
+            bc, origin, extra_cond,
+        ),
+        key_cols,
+        on(left_col, left.columns),
+        on(right_col, right.columns),
+        null_safe=bool(extra_cond)
+        or not (_bare(left_col, left.columns) and _bare(right_col, right.columns)),
     )
-    return colops.null_pad(out, other, key_cols)
 
 
 def ineq_left_join(
@@ -317,31 +316,12 @@ def ineq_left_join(
     origin: float = 0.0,
     extra_cond: str | None = None,
 ) -> DataFrame:
-    """LEFT OUTER inequality join: matched pairs plus left rows with no
-    qualifying right row, NULL-padded.  A left row's match status
-    depends only on (``key_cols``…, ``left_col``, columns referenced by
-    ``extra_cond``), so the anti probe is the dyadic join of the
-    DISTINCT left keys against the right side — never a second pass
-    over the full left relation.  Expression axes and ``extra_cond``
-    residuals as in :func:`ineq_join`."""
-    out_cols = [*left.columns, *[c for c in right.columns if c not in key_cols]]
-    left, left_col, _ = _as_column(left, left_col, "__ineq_lv")
-    right, right_col, _ = _as_column(right, right_col, "__ineq_rv")
-    kp = list(dict.fromkeys(
-        [*key_cols, left_col, *_extra_refs(extra_cond, left.columns)]
-    ))
-    # the matched relation feeds BOTH the output union and the anti
-    # probe's matched-key set — checkpointed EAGER so the dyadic join
-    # runs exactly once: the anti probe's key set is a concurrent
-    # broadcast-build subjob, and a lazy checkpoint races with the main
-    # stage (each consumer that starts before the first block lands
-    # recomputes the whole join — measured r8 on the range lifecycle)
-    matched = ineq_join(
+    """LEFT OUTER inequality join (countjoin.outer_join) — expression
+    axes and ``extra_cond`` residuals as in :func:`ineq_join`."""
+    return cj.outer_join(left, right, _bind(
         left, right, left_col, right_col, op, bin_width, max_bins, key_cols,
-        None, origin, extra_cond,
-    ).localCheckpoint(eager=True)
-    anti = _null_pad_anti(left, matched.select(*kp), kp, right, key_cols)
-    return matched.unionByName(anti.select(*matched.columns)).select(*out_cols)
+        origin, extra_cond,
+    ), full=False)
 
 
 def ineq_full_join(
@@ -356,56 +336,11 @@ def ineq_full_join(
     origin: float = 0.0,
     extra_cond: str | None = None,
 ) -> DataFrame:
-    """FULL OUTER inequality join: matched pairs plus BOTH sides'
-    matchless rows NULL-padded.  A right row's match status depends
-    only on (``key_cols``…, ``right_col``, ``extra_cond`` references) —
-    symmetric to the left side — so both anti probes are null-safe
-    broadcast anti-joins against the (checkpointed-once) matched
-    relation's key projections, never a second dyadic pass.
-    Expression axes and ``extra_cond`` residuals as in
-    :func:`ineq_join`."""
-    out_cols = [*left.columns, *[c for c in right.columns if c not in key_cols]]
-    left, left_col, _ = _as_column(left, left_col, "__ineq_lv")
-    right, right_col, _ = _as_column(right, right_col, "__ineq_rv")
-    kp_l = list(dict.fromkeys(
-        [*key_cols, left_col, *_extra_refs(extra_cond, left.columns)]
-    ))
-    kp_r = list(dict.fromkeys(
-        [*key_cols, right_col, *_extra_refs(extra_cond, right.columns)]
-    ))
-    matched = ineq_join(
+    """FULL OUTER inequality join (countjoin.outer_join)."""
+    return cj.outer_join(left, right, _bind(
         left, right, left_col, right_col, op, bin_width, max_bins, key_cols,
-        None, origin, extra_cond,
-    ).localCheckpoint(eager=True)
-    anti_l = _null_pad_anti(left, matched.select(*kp_l), kp_l, right, key_cols)
-    anti_r = _null_pad_anti(right, matched.select(*kp_r), kp_r, left, key_cols)
-    return (
-        matched
-        .unionByName(anti_l.select(*matched.columns))
-        .unionByName(anti_r.select(*matched.columns))
-        .select(*out_cols)
-    )
-
-
-def _crossings(dm: DataFrame, m_old: DataFrame, kp: list[str]) -> DataFrame:
-    """Join Δm per key (``__dm``) against the old match count
-    (``__mold``) and keep the keys whose count crosses zero:
-    ``__flip`` = +1 when the key ENTERS the matched set (m_old = 0,
-    m_new > 0), −1 when it LEAVES (m_old > 0, m_new ≤ 0).  Shared by
-    the outer rules' NULL-pad anti terms (which negate the flip: a key
-    entering the matched set REMOVES its preserved row) and the
-    semi/anti rules (which use it directly)."""
-    return (
-        dm.join(m_old, on=kp, how="left")
-        .selectExpr(
-            *[q(c) for c in kp],
-            "CASE WHEN coalesce(`__mold`, 0) = 0 AND"
-            " coalesce(`__mold`, 0) + `__dm` > 0 THEN 1"
-            " WHEN coalesce(`__mold`, 0) > 0 AND"
-            " coalesce(`__mold`, 0) + `__dm` <= 0 THEN -1 END AS `__flip`",
-        )
-        .filter("`__flip` IS NOT NULL")
-    )
+        origin, extra_cond,
+    ), full=True)
 
 
 def ineq_semi_join(
@@ -420,35 +355,13 @@ def ineq_semi_join(
     origin: float = 0.0,
     extra_cond: str | None = None,
 ) -> DataFrame:
-    """LEFT SEMI inequality join: left rows with ≥1 qualifying right
-    row — ``EXISTS (right WHERE l.left_col <op> r.right_col AND key
-    equality)``.  Match status depends only on (``key_cols``…,
-    ``left_col``, ``extra_cond`` references), so the dyadic probe runs
-    over the DISTINCT left keys and the matched-key set is
-    broadcast-semi-joined back to the full left relation — the 100 TB
-    left side is never shuffled and never expanded ``levels``-fold.
-    Output: left columns only (scratch axes for expression
-    ``left_col`` are internal)."""
-    out_cols = list(left.columns)
-    left, left_col, scratch = _as_column(left, left_col, "__ineq_lv")
-    right, right_col, _ = _as_column(right, right_col, "__ineq_rv")
-    kp = list(dict.fromkeys(
-        [*key_cols, left_col, *_extra_refs(extra_cond, left.columns)]
-    ))
-    rsel = list(dict.fromkeys(
-        [*key_cols, right_col, *_extra_refs(extra_cond, right.columns)]
-    ))
-    mk = (
-        ineq_join(
-            left.select(*kp).distinct(),
-            right.select(*rsel),
-            left_col, right_col, op, bin_width, max_bins, key_cols,
-            None, origin, extra_cond,
-        )
-        .select(*kp)
-        .distinct()
-    )
-    return _probe_back(left, mk, kp, "leftsemi").select(*out_cols)
+    """LEFT SEMI inequality join — EXISTS (countjoin.semi_anti_join):
+    the dyadic probe runs over the DISTINCT left keys, so the large
+    left side is never expanded ``levels``-fold."""
+    return cj.semi_anti_join(left, right, _bind(
+        left, right, left_col, right_col, op, bin_width, max_bins, key_cols,
+        origin, extra_cond,
+    ), anti=False)
 
 
 def ineq_anti_join(
@@ -463,505 +376,12 @@ def ineq_anti_join(
     origin: float = 0.0,
     extra_cond: str | None = None,
 ) -> DataFrame:
-    """LEFT ANTI inequality join: left rows with NO qualifying right
-    row (NULL ``left_col`` rows qualify — NULL never satisfies the
-    predicate).  Same broadcast matched-key probe as
-    :func:`ineq_semi_join`, with ``left_anti`` instead of
-    ``leftsemi``.  Output: left columns only."""
-    out_cols = list(left.columns)
-    left, left_col, _ = _as_column(left, left_col, "__ineq_lv")
-    right, right_col, _ = _as_column(right, right_col, "__ineq_rv")
-    kp = list(dict.fromkeys(
-        [*key_cols, left_col, *_extra_refs(extra_cond, left.columns)]
-    ))
-    rsel = list(dict.fromkeys(
-        [*key_cols, right_col, *_extra_refs(extra_cond, right.columns)]
-    ))
-    mk = (
-        ineq_join(
-            left.select(*kp).distinct().filter(F.col(left_col).isNotNull()),
-            right.select(*rsel),
-            left_col, right_col, op, bin_width, max_bins, key_cols,
-            None, origin, extra_cond,
-        )
-        .select(*kp)
-        .distinct()
-    )
-    return _probe_back(left, mk, kp, "left_anti").select(*out_cols)
-
-
-def ineq_semi_join_delta(
-    left: DataFrame,
-    right: DataFrame,
-    d_left: DataFrame | None,
-    d_right: DataFrame | None,
-    left_col: str,
-    right_col: str,
-    op: str = "<",
-    bin_width: float = 1.0,
-    max_bins: int = 1 << 21,
-    key_cols: tuple[str, ...] = (),
-    origin: float = 0.0,
-) -> DataFrame:
-    """Δ(L ⋉θ R) for the one-sided inequality SEMI join.  A left row
-    is in the view iff its key's match count m > 0, so:
-
-      term 1 (ΔL rows):  w_ℓ · [m'(ℓ.key) > 0], m' counted against
-        the post-delta right R' = R ∪ ΔR;
-      term 2 (existing L rows): keys whose m crosses zero under ΔR —
-        0→+ inserts the key's old-L rows, +→0 deletes them
-        (:func:`_crossings`).
-
-    Scale shape: both terms probe the bases only through DISTINCT
-    delta-derived key sets; no base relation is dyadically expanded.
-    Output: left columns + the bool multiplicity."""
-    return _semi_anti_delta(
-        left, right, d_left, d_right, left_col, right_col, op,
-        bin_width, max_bins, key_cols, origin, anti=False,
-    )
-
-
-def ineq_anti_join_delta(
-    left: DataFrame,
-    right: DataFrame,
-    d_left: DataFrame | None,
-    d_right: DataFrame | None,
-    left_col: str,
-    right_col: str,
-    op: str = "<",
-    bin_width: float = 1.0,
-    max_bins: int = 1 << 21,
-    key_cols: tuple[str, ...] = (),
-    origin: float = 0.0,
-) -> DataFrame:
-    """Δ(L ▷θ R) for the one-sided inequality ANTI join — the
-    complement of :func:`ineq_semi_join_delta`: ΔL rows contribute on
-    m'(key) ≤ 0 (NULL ``left_col`` rows always — they never match),
-    and zero crossings flip with the OPPOSITE sign (a key entering the
-    matched set leaves the anti view)."""
-    return _semi_anti_delta(
-        left, right, d_left, d_right, left_col, right_col, op,
-        bin_width, max_bins, key_cols, origin, anti=True,
-    )
-
-
-def _semi_anti_delta(
-    left: DataFrame,
-    right: DataFrame,
-    d_left: DataFrame | None,
-    d_right: DataFrame | None,
-    left_col: str,
-    right_col: str,
-    op: str,
-    bin_width: float,
-    max_bins: int,
-    key_cols: tuple[str, ...],
-    origin: float,
-    anti: bool,
-) -> DataFrame:
-    from ivm_extension_spark.operators.rewrite import MULT_COL
-
-    if d_left is None and d_right is None:
-        raise ValueError("at least one side needs a delta")
-    sign = "__ivm_sign"
-    kp = [*key_cols, left_col]
-    kpq = [q(c) for c in kp]
-    lcq = [q(c) for c in left.columns]
-
-    def signed(d: DataFrame, w: str) -> DataFrame:
-        return colops.signed(d, MULT_COL, w)
-
-    dl = signed(d_left, "__wl") if d_left is not None else None
-    dr = signed(d_right, "__wr") if d_right is not None else None
-
-    def ij(a, b, bcast):
-        return ineq_join(
-            a, b, left_col, right_col, op, bin_width, max_bins, key_cols,
-            bcast, origin,
-        )
-
-    rproj = right.selectExpr(*[q(c) for c in (*key_cols, right_col)])
-
-    # ---- term 1: ΔL rows gated on the post-delta match count m'
-    def _term1() -> DataFrame:
-        rprime = rproj.selectExpr("*", "1 AS `__wr`")
-        if dr is not None:
-            rprime = rprime.unionByName(
-                dr.selectExpr(*[q(c) for c in (*key_cols, right_col)], "`__wr`")
-            )
-        m_pos = (
-            ij(
-                dl.selectExpr(*kpq).distinct().filter(f"{q(left_col)} IS NOT NULL"),
-                rprime, "left",
-            )
-            .groupBy(*kp)
-            .agg(F.sum("__wr").alias("__m"))
-            .filter(F.col("__m") > 0)
-            .selectExpr(*kpq)
-        )
-        t1 = dl.join(
-            F.broadcast(m_pos), on=kp, how="left_anti" if anti else "leftsemi"
-        )
-        return t1.selectExpr(*lcq, f"`__wl` AS {sign}")
-
-    # ---- term 2: existing L keys whose match count crosses zero
-    def _term2() -> DataFrame:
-        dm = (
-            ij(
-                left.selectExpr(*kpq).distinct().filter(f"{q(left_col)} IS NOT NULL"),
-                dr, "right",
-            )
-            .groupBy(*kp)
-            .agg(F.sum("__wr").alias("__dm"))
-            .filter(F.col("__dm") != 0)
-        )
-        m_old = (
-            ij(dm.selectExpr(*kpq), rproj, "left")
-            .groupBy(*kp)
-            .agg(F.count(F.lit(1)).alias("__mold"))
-        )
-        flips = _crossings(dm, m_old, kp)
-        t2 = left.join(F.broadcast(flips), on=kp, how="inner")
-        fsign = "-`__flip`" if anti else "`__flip`"
-        return t2.selectExpr(*lcq, f"{fsign} AS {sign}")
-
-    # independent constructions — built concurrently (pin.build_all)
-    thunks: list = []
-    if dl is not None:
-        thunks.append(_term1)
-    if dr is not None:
-        thunks.append(_term2)
-    branches: list[DataFrame] = build_all(*thunks)
-
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    return out.selectExpr(*lcq, f"{sign} > 0 AS {q(MULT_COL)}")
-
-
-def ineq_left_join_delta(
-    left: DataFrame,
-    right: DataFrame,
-    d_left: DataFrame | None,
-    d_right: DataFrame | None,
-    left_col: str,
-    right_col: str,
-    op: str = "<",
-    bin_width: float = 1.0,
-    max_bins: int = 1 << 21,
-    key_cols: tuple[str, ...] = (),
-    origin: float = 0.0,
-) -> DataFrame:
-    """Δ(L ⟕θ R) for the one-sided inequality LEFT join — the banded
-    outer rule's algebra (matched three-branch + NULL-pad anti terms via
-    match-count zero crossings, rangejoin.range_left_join_delta) with
-    the dyadic equi-join as the matcher, so no branch ever plans a
-    nested loop.  Deltas carry the bool multiplicity column; output =
-    joined columns + the multiplicity bool.
-
-    Branch fusion (same trick as :func:`ineq_full_join_delta`): ONE
-    tagged dyadic join A = ΔL × (R ∪ ΔR) yields the ΔL⋈R and ΔL⋈ΔR
-    matched branches AND the per-ΔL-key post-delta match counts for
-    the anti term — a key's count summed over duplicate delta rows
-    scales by a positive factor, so the m > 0 existence test is
-    unchanged; A is checkpointed so its branches materialize it once.
-
-    Scale shape: the base sides are probed only through broadcast
-    delta-derived key sets (distinct ΔL match keys, ΔR rows, flip
-    sets); the only shuffles are match-count aggregations over
-    delta-matched slices — O(|Δ| + affected keys)."""
-    from ivm_extension_spark.operators.rewrite import MULT_COL
-
-    if d_left is None and d_right is None:
-        raise ValueError("at least one side needs a delta")
-    sign = "__ivm_sign"
-    kp = [*key_cols, left_col]
-    kpq = [q(c) for c in kp]
-    lcq = [q(c) for c in left.columns]
-    out_cols = [*left.columns, *[c for c in right.columns if c not in key_cols]]
-    ocq = [q(c) for c in out_cols]
-    null_r = colops.null_lit_exprs(
-        right, [c for c in right.columns if c not in key_cols]
-    )
-    tag_r = "__dy_dr"
-
-    def signed(d: DataFrame, w: str) -> DataFrame:
-        return colops.signed(d, MULT_COL, w)
-
-    dl = signed(d_left, "__wl") if d_left is not None else None
-    dr = signed(d_right, "__wr") if d_right is not None else None
-
-    def ij(a, b, bcast):
-        return ineq_join(
-            a, b, left_col, right_col, op, bin_width, max_bins, key_cols,
-            bcast, origin,
-        )
-
-    # ---- fused join A = ΔL × (R ∪ ΔR): the ΔL⋈R (sign __wl) and
-    # ΔL⋈ΔR (sign __wl·__wr) matched branches plus anti term 1 — ΔL
-    # rows with zero matches in R' get the NULL-padded delta row
-    def _a_group() -> list[DataFrame]:
-        rprime = right.selectExpr("*", "1 AS `__wr`", f"false AS {q(tag_r)}")
-        if dr is not None:
-            rprime = rprime.unionByName(dr.selectExpr("*", f"true AS {q(tag_r)}"))
-        A = ij(dl, rprime, "left").localCheckpoint(eager=True)
-        matched = A.selectExpr(
-            *ocq,
-            f"`__wl` * (CASE WHEN {q(tag_r)} THEN `__wr` ELSE 1 END) AS {sign}",
-        )
-        m_pos = (
-            A.groupBy(*kp)
-            .agg(F.sum("__wr").alias("__m"))
-            .filter(F.col("__m") > 0)
-            .selectExpr(*kpq)
-        )
-        t1 = _null_pad_anti(dl, m_pos, kp, right, key_cols)
-        return [
-            matched,
-            t1.selectExpr(*lcq, *null_r, f"`__wl` AS {sign}"),
-        ]
-
-    # ---- matched branch L ⋈ ΔR (old-L rows; ΔL⋈ΔR came from A)
-    def _matched_dr() -> list[DataFrame]:
-        return [
-            ij(left, dr, "right").selectExpr(*ocq, f"`__wr` AS {sign}")
-        ]
-
-    # ---- anti term 2: existing L keys whose match count crosses zero
-    def _anti2() -> list[DataFrame]:
-        # Δm per affected DISTINCT left key (several left rows sharing a
-        # key flip together — the match count is a per-KEY quantity)
-        dm = (
-            ij(left.selectExpr(*kpq).distinct(), dr, "right")
-            .groupBy(*kp)
-            .agg(F.sum("__wr").alias("__dm"))
-            .filter(F.col("__dm") != 0)
-        )
-        m_old = (
-            ij(
-                dm.selectExpr(*kpq),
-                right.selectExpr(*[q(c) for c in (*key_cols, right_col)]),
-                "left",
-            )
-            .groupBy(*kp)
-            .agg(F.count(F.lit(1)).alias("__mold"))
-        )
-        # a key ENTERING the matched set removes its NULL-pad row, so
-        # the preserved-row sign is the crossing's negation
-        flips = _crossings(dm, m_old, kp)
-        t2 = left.join(F.broadcast(flips), on=kp, how="inner")
-        return [
-            t2.selectExpr(*lcq, *null_r, f"-`__flip` AS {sign}")
-        ]
-
-    # independent groups, built concurrently (pin.build_all) — the A
-    # group's eager checkpoint job overlaps the sibling constructions
-    thunks: list = []
-    if dl is not None:
-        thunks.append(_a_group)
-    if dr is not None:
-        thunks.append(_matched_dr)
-        thunks.append(_anti2)
-    branches: list[DataFrame] = [b for g in build_all(*thunks) for b in g]
-
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    return out.selectExpr(*ocq, f"{sign} > 0 AS {q(MULT_COL)}")
-
-
-def ineq_full_join_delta(
-    left: DataFrame,
-    right: DataFrame,
-    d_left: DataFrame | None,
-    d_right: DataFrame | None,
-    left_col: str,
-    right_col: str,
-    op: str = "<",
-    bin_width: float = 1.0,
-    max_bins: int = 1 << 21,
-    key_cols: tuple[str, ...] = (),
-    origin: float = 0.0,
-) -> DataFrame:
-    """Δ(L ⟗θ R) for the one-sided inequality FULL OUTER join: the
-    matched three-branch rule, the LEFT rule's NULL-pad anti terms,
-    and the two symmetric right-preserved terms — ΔR rows with zero
-    matches in L' = L ∪ ΔL, and existing DISTINCT right keys whose
-    left-match count crosses zero under ΔL.  The self-cancelling
-    counting algebra makes the branch union exact under arbitrary
-    insert/delete mixes (the property test drives all three join
-    shapes through random batches).
-
-    Branch fusion: ONE tagged dyadic join ΔL × (R ∪ ΔR) yields the
-    ΔL⋈R and ΔL⋈ΔR matched branches AND the per-ΔL-key post-delta
-    match counts for the left anti term (a key's count summed over
-    duplicate delta rows scales by a positive factor, so the m > 0
-    existence test is unchanged); symmetrically (L ∪ ΔL) × ΔR yields
-    L⋈ΔR and the right anti counts — six dyadic joins total instead
-    of nine, each fused relation checkpointed so its branches
-    materialize it once.
-
-    Scale shape unchanged from the LEFT rule: base relations are only
-    probed through broadcast delta-derived sets; the only shuffles are
-    match-count aggregations over delta-matched slices."""
-    from ivm_extension_spark.operators.rewrite import MULT_COL
-
-    if d_left is None and d_right is None:
-        raise ValueError("at least one side needs a delta")
-    sign = "__ivm_sign"
-    kp_l = [*key_cols, left_col]
-    kp_r = [*key_cols, right_col]
-    kp_lq = [q(c) for c in kp_l]
-    kp_rq = [q(c) for c in kp_r]
-    out_cols = [*left.columns, *[c for c in right.columns if c not in key_cols]]
-    ocq = [q(c) for c in out_cols]
-    tag_l, tag_r = "__dy_dl", "__dy_dr"
-
-    def signed(d: DataFrame, w: str) -> DataFrame:
-        return colops.signed(d, MULT_COL, w)
-
-    dl = signed(d_left, "__wl") if d_left is not None else None
-    dr = signed(d_right, "__wr") if d_right is not None else None
-
-    def ij(a, b, bcast):
-        return ineq_join(
-            a, b, left_col, right_col, op, bin_width, max_bins, key_cols,
-            bcast, origin,
-        )
-
-    # A and C are independent plans, each eagerly pinned (fan-out
-    # consumers below) — pin them CONCURRENTLY so the two narrow
-    # checkpoint jobs and their planning prologues overlap (pin.py)
-    A_lazy = C_lazy = None
-    if dl is not None:
-        rprime = right.selectExpr("*", "1 AS `__wr`", f"false AS {q(tag_r)}")
-        if dr is not None:
-            rprime = rprime.unionByName(dr.selectExpr("*", f"true AS {q(tag_r)}"))
-        A_lazy = ij(dl, rprime, "left")
-    if dr is not None:
-        lprime = left.selectExpr("*", "1 AS `__wl`", f"false AS {q(tag_l)}")
-        if dl is not None:
-            lprime = lprime.unionByName(dl.selectExpr("*", f"true AS {q(tag_l)}"))
-        C_lazy = ij(lprime, dr, "right")
-    A, C = pin_all(A_lazy, C_lazy)
-
-    # ---- fused join A = ΔL × (R ∪ ΔR): matched branches ΔL⋈R (sign
-    # __wl) and ΔL⋈ΔR (sign __wl·__wr) in one pass, plus the left anti
-    # term's match counts — ΔL keys with m ≤ 0 matches in R' get the
-    # NULL-padded delta row
-    def _a_group() -> list[DataFrame]:
-        matched = A.selectExpr(
-            *ocq,
-            f"`__wl` * (CASE WHEN {q(tag_r)} THEN `__wr` ELSE 1 END) AS {sign}",
-        )
-        m_pos = (
-            A.groupBy(*kp_l)
-            .agg(F.sum("__wr").alias("__m"))
-            .filter(F.col("__m") > 0)
-            .selectExpr(*kp_lq)
-        )
-        t1 = _null_pad_anti(dl, m_pos, kp_l, right, key_cols)
-        return [matched, t1.selectExpr(*ocq, f"`__wl` AS {sign}")]
-
-    # ---- fused join C = (L ∪ ΔL) × ΔR: the L⋈ΔR matched branch
-    # (old-L rows only — ΔL⋈ΔR already came from A) plus the right
-    # anti term's match counts against the post-delta left
-    def _c_group() -> list[DataFrame]:
-        b2 = C.filter(f"NOT {q(tag_l)}") if dl is not None else C
-        m_pos_r = (
-            C.groupBy(*kp_r)
-            .agg(F.sum("__wl").alias("__m"))
-            .filter(F.col("__m") > 0)
-            .selectExpr(*kp_rq)
-        )
-        t1r = _null_pad_anti(dr, m_pos_r, kp_r, left, key_cols)
-        return [
-            b2.selectExpr(*ocq, f"`__wr` AS {sign}"),
-            t1r.selectExpr(*ocq, f"`__wr` AS {sign}"),
-        ]
-
-    # ---- left anti term 2: existing L keys whose match count crosses
-    # zero under ΔR (identical to the LEFT rule's term)
-    def _left_anti2() -> list[DataFrame]:
-        dm = (
-            ij(left.selectExpr(*kp_lq).distinct(), dr, "right")
-            .groupBy(*kp_l)
-            .agg(F.sum("__wr").alias("__dm"))
-            .filter(F.col("__dm") != 0)
-        )
-        m_old = (
-            ij(
-                dm.selectExpr(*kp_lq),
-                right.selectExpr(*[q(c) for c in (*key_cols, right_col)]),
-                "left",
-            )
-            .groupBy(*kp_l)
-            .agg(F.count(F.lit(1)).alias("__mold"))
-        )
-        flips = _crossings(dm, m_old, kp_l)
-        t2 = left.join(F.broadcast(flips), on=kp_l, how="inner")
-        null_r = colops.null_lit_exprs(
-            right, [c for c in right.columns if c not in key_cols]
-        )
-        return [
-            t2.selectExpr(
-                *[q(c) for c in left.columns], *null_r, f"-`__flip` AS {sign}"
-            )
-        ]
-
-    # ---- right anti term 2: existing R keys whose left-match count
-    # crosses zero under ΔL (joined against OLD right — deleted right
-    # rows intentionally included; their spurious terms cancel against
-    # the matched/anti branches exactly as on the left side)
-    def _right_anti2() -> list[DataFrame]:
-        dm_r = (
-            ij(dl, right.selectExpr(*kp_rq).distinct(), "left")
-            .groupBy(*kp_r)
-            .agg(F.sum("__wl").alias("__dm"))
-            .filter(F.col("__dm") != 0)
-        )
-        m_old_r = (
-            ij(
-                left.selectExpr(*[q(c) for c in (*key_cols, left_col)]),
-                dm_r.selectExpr(*kp_rq),
-                "right",
-            )
-            .groupBy(*kp_r)
-            .agg(F.count(F.lit(1)).alias("__mold"))
-        )
-        flips_r = _crossings(dm_r, m_old_r, kp_r)
-        t2r = right.join(F.broadcast(flips_r), on=kp_r, how="inner")
-        null_l = [
-            q(c)
-            if c in key_cols
-            else f"CAST(NULL AS {left.schema[c].dataType.simpleString()}) AS {q(c)}"
-            for c in left.columns
-        ]
-        return [
-            t2r.selectExpr(
-                *null_l,
-                *[q(c) for c in right.columns if c not in key_cols],
-                f"-`__flip` AS {sign}",
-            )
-        ]
-
-    # independent groups over the pinned A/C — built concurrently
-    # (pin.build_all); flattened order matches the serial construction
-    thunks: list = []
-    if A is not None:
-        thunks.append(_a_group)
-    if C is not None:
-        thunks.append(_c_group)
-    if dr is not None:
-        thunks.append(_left_anti2)
-    if dl is not None:
-        thunks.append(_right_anti2)
-    branches: list[DataFrame] = [b for g in build_all(*thunks) for b in g]
-
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    return out.selectExpr(*ocq, f"{sign} > 0 AS {q(MULT_COL)}")
+    """LEFT ANTI inequality join — NOT EXISTS (countjoin.semi_anti_join);
+    NULL ``left_col`` rows qualify, NULL never satisfies the predicate."""
+    return cj.semi_anti_join(left, right, _bind(
+        left, right, left_col, right_col, op, bin_width, max_bins, key_cols,
+        origin, extra_cond,
+    ), anti=True)
 
 
 def ineq_join_delta(
@@ -977,55 +397,94 @@ def ineq_join_delta(
     key_cols: tuple[str, ...] = (),
     origin: float = 0.0,
 ) -> DataFrame:
-    """Δ(L ⋈θ R) for the one-sided inequality join — the poster's
-    general inner-join delta rule (ΔL⋈R ∪ L⋈ΔR ∪ ΔL⋈ΔR with sign
-    products), each branch planned by :func:`ineq_join` with the
-    delta side broadcast.  Deltas carry the bool multiplicity column;
-    output = joined columns + the multiplicity bool.
+    """Δ(L ⋈θ R) for the one-sided inequality join
+    (countjoin.inner_delta).  Deltas carry the bool multiplicity
+    column; output = joined columns + the multiplicity bool."""
+    return cj.inner_delta(left, right, d_left, d_right, _bind(
+        left, right, left_col, right_col, op, bin_width, max_bins, key_cols,
+        origin,
+    ))
 
-    Scale shape: the base sides are scanned once per branch and only
-    ever hash-joined against broadcast delta-derived rows; no shuffle
-    of L or R, no nested loop, comparisons O((|base| + |Δ|)·levels).
-    """
-    from ivm_extension_spark.operators.rewrite import MULT_COL
 
-    if d_left is None and d_right is None:
-        raise ValueError("at least one side needs a delta")
-    sign = "__ivm_sign"
+def ineq_left_join_delta(
+    left: DataFrame,
+    right: DataFrame,
+    d_left: DataFrame | None,
+    d_right: DataFrame | None,
+    left_col: str,
+    right_col: str,
+    op: str = "<",
+    bin_width: float = 1.0,
+    max_bins: int = 1 << 21,
+    key_cols: tuple[str, ...] = (),
+    origin: float = 0.0,
+) -> DataFrame:
+    """Δ(L ⟕θ R) for the one-sided inequality join
+    (countjoin.outer_delta)."""
+    return cj.outer_delta(left, right, d_left, d_right, _bind(
+        left, right, left_col, right_col, op, bin_width, max_bins, key_cols,
+        origin,
+    ), full=False)
 
-    def signed(d: DataFrame, w: str) -> DataFrame:
-        return colops.signed(d, MULT_COL, w)
 
-    dl = signed(d_left, "__wl") if d_left is not None else None
-    dr = signed(d_right, "__wr") if d_right is not None else None
-    out_cols = [*left.columns, *[c for c in right.columns if c not in key_cols]]
-    ocq = [q(c) for c in out_cols]
+def ineq_full_join_delta(
+    left: DataFrame,
+    right: DataFrame,
+    d_left: DataFrame | None,
+    d_right: DataFrame | None,
+    left_col: str,
+    right_col: str,
+    op: str = "<",
+    bin_width: float = 1.0,
+    max_bins: int = 1 << 21,
+    key_cols: tuple[str, ...] = (),
+    origin: float = 0.0,
+) -> DataFrame:
+    """Δ(L ⟗θ R) for the one-sided inequality join
+    (countjoin.outer_delta)."""
+    return cj.outer_delta(left, right, d_left, d_right, _bind(
+        left, right, left_col, right_col, op, bin_width, max_bins, key_cols,
+        origin,
+    ), full=True)
 
-    def ij(a, b, bcast):
-        return ineq_join(
-            a, b, left_col, right_col, op, bin_width, max_bins, key_cols,
-            bcast, origin,
-        )
 
-    # the three matched branches are independent constructions — build
-    # them concurrently (pin.build_all); union order is preserved
-    thunks: list = []
-    if dl is not None:
-        thunks.append(
-            lambda: ij(dl, right, "left").selectExpr(*ocq, f"`__wl` AS {sign}")
-        )
-    if dr is not None:
-        thunks.append(
-            lambda: ij(left, dr, "right").selectExpr(*ocq, f"`__wr` AS {sign}")
-        )
-    if dl is not None and dr is not None:
-        thunks.append(
-            lambda: ij(dl, dr, "left").selectExpr(
-                *ocq, f"`__wl` * `__wr` AS {sign}"
-            )
-        )
-    branches: list[DataFrame] = build_all(*thunks)
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    return out.selectExpr(*ocq, f"{sign} > 0 AS {q(MULT_COL)}")
+def ineq_semi_join_delta(
+    left: DataFrame,
+    right: DataFrame,
+    d_left: DataFrame | None,
+    d_right: DataFrame | None,
+    left_col: str,
+    right_col: str,
+    op: str = "<",
+    bin_width: float = 1.0,
+    max_bins: int = 1 << 21,
+    key_cols: tuple[str, ...] = (),
+    origin: float = 0.0,
+) -> DataFrame:
+    """Δ(L ⋉θ R) for the one-sided inequality SEMI join
+    (countjoin.semi_anti_delta)."""
+    return cj.semi_anti_delta(left, right, d_left, d_right, _bind(
+        left, right, left_col, right_col, op, bin_width, max_bins, key_cols,
+        origin,
+    ), anti=False)
+
+
+def ineq_anti_join_delta(
+    left: DataFrame,
+    right: DataFrame,
+    d_left: DataFrame | None,
+    d_right: DataFrame | None,
+    left_col: str,
+    right_col: str,
+    op: str = "<",
+    bin_width: float = 1.0,
+    max_bins: int = 1 << 21,
+    key_cols: tuple[str, ...] = (),
+    origin: float = 0.0,
+) -> DataFrame:
+    """Δ(L ▷θ R) for the one-sided inequality ANTI join
+    (countjoin.semi_anti_delta)."""
+    return cj.semi_anti_delta(left, right, d_left, d_right, _bind(
+        left, right, left_col, right_col, op, bin_width, max_bins, key_cols,
+        origin,
+    ), anti=True)

@@ -16,14 +16,18 @@ route them through the broadcast fallback.
 At 100 TB: the binned join is a plain shuffle/broadcast hash join on
 (key?, bin) — all of Spark's join machinery (AQE, skew splitting)
 applies; nothing here is local-mode specific.
+
+This module supplies the banded PAIR GENERATOR for the counting-join
+rule (countjoin.py): :func:`_band_pairs`.  The maintained LEFT/FULL
+delta rules are that shared rule bound onto it; a point row's match
+set is fixed by (key?, point), an interval row's by (key?, lo, hi).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ivm_extension_spark.operators import colops
-from ivm_extension_spark.operators.colops import q
+from ivm_extension_spark.operators import countjoin as cj
 
 _BIN = "__rj_bin"
 
@@ -66,7 +70,8 @@ def range_join(
         raise ValueError(
             f"non-key column names must be disjoint, both sides have {sorted(overlap)}"
         )
-    from ivm_extension_spark.operators.ineqjoin import _as_column, _extra_refs
+    from ivm_extension_spark.operators.ineqjoin import _as_column
+    from ivm_extension_spark.operators.thetajoin import referenced_cols
 
     out_cols = [c for c in points.columns] + [
         c for c in intervals.columns if c not in (*key_cols,)
@@ -74,20 +79,12 @@ def range_join(
     points, point_col, _ = _as_column(points, point_col, "__rng_pv")
     intervals, lo_col, _ = _as_column(intervals, lo_col, "__rng_lo")
     intervals, hi_col, _ = _as_column(intervals, hi_col, "__rng_hi")
-    p = points.withColumn(
-        _BIN, F.floor(F.col(point_col) / F.lit(bin_width)).cast("long")
+    joined = _band_pairs(
+        points, intervals, point_col, lo_col, hi_col, bin_width, key_cols,
+        max_bins_per_interval, extra_cond=extra_cond,
     )
-    i = _explode_interval_bins(
-        intervals, lo_col, hi_col, bin_width, max_bins_per_interval
-    )
-    joined = p.join(i, on=[_BIN, *key_cols], how="inner").filter(
-        (F.col(point_col) >= F.col(lo_col)) & (F.col(point_col) <= F.col(hi_col))
-    )
-    if extra_cond:
-        joined = joined.filter(F.expr(extra_cond))
-    matched = joined.select(*out_cols)
     if how == "inner":
-        return matched
+        return joined.select(*out_cols)
     # left/full: the point side is preserved DIRECTLY — one LEFT join
     # with the exact range predicate inside the join condition.  The
     # equi part (bin, keys) is still the hash key (BroadcastHashJoin /
@@ -98,6 +95,10 @@ def range_join(
     # binned join TWICE per action (once for the matched rows, once for
     # the distinct matched-key probe) — measured ~2x on the maintained
     # range lifecycles at sf0.1.
+    p = _point_bins(points, point_col, bin_width)
+    i = _explode_interval_bins(
+        intervals, lo_col, hi_col, bin_width, max_bins_per_interval
+    )
     pa, ia = p.alias("__rj_p"), i.alias("__rj_i")
     cond = F.col(f"__rj_p.{_BIN}") == F.col(f"__rj_i.{_BIN}")
     for c in key_cols:
@@ -127,11 +128,15 @@ def range_join(
     # point side.  An interval's match set is determined by
     # (key_cols, lo, hi, extra_cond's interval-side references) —
     # payload columns don't affect matching, and duplicates share their
-    # fate.
-    probe = list(dict.fromkeys(
-        [*key_cols, lo_col, hi_col, *_extra_refs(extra_cond, intervals.columns)]
-    ))
-    unmatched_i = _null_pad_anti(intervals, joined, probe, points, key_cols)
+    # fate.  The matched relation may be large here, so the planner
+    # picks the anti join's build side.
+    probe = list(dict.fromkeys([
+        *key_cols, lo_col, hi_col,
+        *(referenced_cols(extra_cond, intervals.columns, ()) if extra_cond else []),
+    ]))
+    unmatched_i = cj._null_pad(
+        intervals, joined, probe, points, key_cols, broadcast=False
+    )
     return out.unionByName(unmatched_i.select(*out_cols))
 
 
@@ -172,21 +177,10 @@ def auto_range_bin_width(
     return width if width > 0 else 1.0
 
 
-def _null_pad_anti(
-    side: DataFrame,
-    joined: DataFrame,
-    probe_cols: list[str],
-    other: DataFrame,
-    key_cols: tuple[str, ...],
-) -> DataFrame:
-    """Rows of ``side`` whose ``probe_cols`` never appear among the
-    matched rows, padded with NULLs for ``other``'s non-key columns
-    (null-safe probe)."""
-    mk = colops.renamed(joined, probe_cols, "__mk_").distinct()
-    unmatched = side.join(
-        mk, on=colops.ns_eq(probe_cols, "__mk_"), how="left_anti"
+def _point_bins(points: DataFrame, point_col: str, bin_width: float) -> DataFrame:
+    return points.withColumn(
+        _BIN, F.floor(F.col(point_col) / F.lit(bin_width)).cast("long")
     )
-    return colops.null_pad(unmatched, other, key_cols)
 
 
 def _explode_interval_bins(
@@ -224,6 +218,63 @@ def _explode_interval_bins(
     )
 
 
+def _band_pairs(
+    points: DataFrame,
+    intervals: DataFrame,
+    point_col: str,
+    lo_col: str,
+    hi_col: str,
+    bin_width: float,
+    key_cols: tuple[str, ...],
+    max_bins_per_interval: int,
+    broadcast: str | None = None,
+    extra_cond: str | None = None,
+) -> DataFrame:
+    """The banded pair generator: points binned, intervals exploded to
+    their bins, equi-joined on (bin, ``key_cols``…) and re-checked
+    against ``lo <= pt <= hi`` (and ``extra_cond``).  ``broadcast`` may
+    name 'left' (points) or 'right' (intervals).  Output: all point
+    columns + non-key interval columns."""
+    p = _point_bins(points, point_col, bin_width)
+    i = _explode_interval_bins(
+        intervals, lo_col, hi_col, bin_width, max_bins_per_interval
+    )
+    if broadcast == "left":
+        p = F.broadcast(p)
+    elif broadcast == "right":
+        i = F.broadcast(i)
+    joined = p.join(i, on=[_BIN, *key_cols], how="inner").filter(
+        (F.col(point_col) >= F.col(lo_col)) & (F.col(point_col) <= F.col(hi_col))
+    )
+    if extra_cond:
+        joined = joined.filter(F.expr(extra_cond))
+    return joined.select(
+        *points.columns, *[c for c in intervals.columns if c not in key_cols]
+    )
+
+
+def _bind(
+    point_col: str,
+    lo_col: str,
+    hi_col: str,
+    bin_width: float,
+    key_cols: tuple[str, ...],
+    max_bins_per_interval: int,
+) -> cj.Matcher:
+    """The banded generator over bare columns: a NULL point or bound
+    never matches, so the count bookkeeping may use plain equality."""
+    return cj.Matcher(
+        lambda a, b, bc: _band_pairs(
+            a, b, point_col, lo_col, hi_col, bin_width, key_cols,
+            max_bins_per_interval, bc,
+        ),
+        key_cols,
+        [point_col],
+        [lo_col, hi_col],
+        null_safe=False,
+    )
+
+
 def range_left_join_delta(
     points: DataFrame,
     intervals: DataFrame,
@@ -235,232 +286,16 @@ def range_left_join_delta(
     bin_width: float,
     key_cols: tuple[str, ...] = (),
     max_bins_per_interval: int = 10_000,
-    broadcast_deltas: bool = True,
-    full: bool = False,
 ) -> DataFrame:
-    """Δ(P ⟕range I) — incremental maintenance of the banded LEFT join,
-    the theta-outer-join case the equi rewrite rejects
-    (operators/rewrite.py _outer_join_delta: conjunctive equi only).
-
-    Same algebra as the equi rule (matched three-branch + NULL-pad
-    anti-part via match-count zero crossings), with two changes:
-
-    - every theta join runs as a BINNED equi-join (see :func:`range_join`),
-      so Catalyst never falls back to a nested-loop plan;
-    - the match-count "key" of a preserved point row is (``key_cols``…,
-      ``point_col``): a point's match set against the interval table is
-      fully determined by those values, so counts group on them exactly
-      as the equi rule groups on join keys.
-
-    Deltas carry the bool multiplicity column (insert=true, delete=false)
-    and may be None on either side.  Scale shape: the big sides (P, I)
-    are only ever joined against BROADCAST delta-derived sets (binned
-    delta rows, affected-key sets, flip sets) — never shuffled; the only
-    exchanges are match-count aggregations over delta-matched slices.
-
-    Output: P columns + non-key I columns + the multiplicity bool.
-    """
-    from ivm_extension_spark.operators.rewrite import MULT_COL
-
-    if d_points is None and d_intervals is None:
-        raise ValueError("at least one side needs a delta")
-    bc = F.broadcast if broadcast_deltas else (lambda df: df)
-    sign = "__ivm_sign"
-    out_cols = [*points.columns, *[c for c in intervals.columns if c not in key_cols]]
-    kp = [*key_cols, point_col]  # the match-count key of a point row
-
-    def signed(d: DataFrame, w: str) -> DataFrame:
-        return d.withColumn(
-            w, F.when(F.col(MULT_COL), F.lit(1)).otherwise(F.lit(-1))
-        ).drop(MULT_COL)
-
-    dp = signed(d_points, "__wp") if d_points is not None else None
-    di = signed(d_intervals, "__wi") if d_intervals is not None else None
-
-    def pbin(df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            _BIN, F.floor(F.col(point_col) / F.lit(bin_width)).cast("long")
-        )
-
-    def ibin(df: DataFrame) -> DataFrame:
-        # same explode as range_join: empty/NULL intervals dropped, an
-        # over-wide interval raises instead of silently losing matches
-        return _explode_interval_bins(
-            df, lo_col, hi_col, bin_width, max_bins_per_interval
-        )
-
-    in_range = (F.col(point_col) >= F.col(lo_col)) & (
-        F.col(point_col) <= F.col(hi_col)
-    )
-
-    def matched(p: DataFrame, i: DataFrame, w_expr) -> DataFrame:
-        return (
-            p.join(i, on=[_BIN, *key_cols], how="inner")
-            .filter(in_range)
-            .select(*out_cols, w_expr.alias(sign))
-        )
-
-    null_i = [
-        F.lit(None).cast(intervals.schema[c].dataType).alias(c)
-        for c in intervals.columns
-        if c not in key_cols
-    ]
-
-    branches: list[DataFrame] = []
-    # ---- matched part: the three-branch inner rule over binned joins
-    if dp is not None:
-        branches.append(matched(bc(pbin(dp)), ibin(intervals), F.col("__wp")))
-    if di is not None:
-        branches.append(matched(pbin(points), bc(ibin(di)), F.col("__wi")))
-    if dp is not None and di is not None:
-        branches.append(
-            matched(bc(pbin(dp)), bc(ibin(di)), F.col("__wp") * F.col("__wi"))
-        )
-
-    # ---- anti part, term 1: ΔP rows with zero matches in I' = I ∪ ΔI
-    if dp is not None:
-        dpk = pbin(dp.select(*kp).distinct())
-        iprime = ibin(intervals).withColumn("__w", F.lit(1)).select(
-            *key_cols, lo_col, hi_col, _BIN, "__w"
-        )
-        if di is not None:
-            iprime = iprime.unionByName(
-                ibin(di).select(
-                    *key_cols, lo_col, hi_col, _BIN, F.col("__wi").alias("__w")
-                )
-            )
-        m_pos = (
-            iprime.join(bc(dpk), on=[_BIN, *key_cols], how="inner")
-            .filter(in_range)
-            .groupBy(*kp)
-            .agg(F.sum("__w").alias("__m"))
-            .filter(F.col("__m") > 0)
-            .select(*kp)
-        )
-        t1 = dp.join(bc(m_pos), on=kp, how="left_anti")
-        branches.append(
-            t1.select(*points.columns, *null_i, F.col("__wp").alias(sign))
-        )
-
-    # ---- anti part, term 2: existing P rows whose match count crosses 0
-    if di is not None:
-        # Δm per affected point-key: DISTINCT point keys binned against
-        # the BROADCAST delta intervals — only matching keys reach the
-        # aggregation.  Distinct is load-bearing: the match count is a
-        # per-KEY quantity, and several point rows sharing a key would
-        # otherwise multiply Δm and fake a zero crossing (e.g. 6 points
-        # at the same value × one deleted interval → Δm=-6, not -1)
-        dm = (
-            pbin(points.select(*kp).distinct())
-            .join(bc(ibin(di)), on=[_BIN, *key_cols], how="inner")
-            .filter(in_range)
-            .groupBy(*kp)
-            .agg(F.sum("__wi").alias("__dm"))
-            .filter(F.col("__dm") != 0)
-        )
-        # old counts for exactly those keys: I scanned once, probed
-        # against the broadcast affected-key set
-        m_old = (
-            ibin(intervals)
-            .join(bc(pbin(dm.select(*kp))), on=[_BIN, *key_cols], how="inner")
-            .filter(in_range)
-            .groupBy(*kp)
-            .agg(F.count(F.lit(1)).alias("__mold"))
-        )
-        flips = (
-            dm.join(m_old, on=kp, how="left")
-            .selectExpr(*[q(c) for c in kp], colops.flip_case(-1))
-            .filter("`__flip` IS NOT NULL")
-        )
-        t2 = points.join(bc(flips), on=kp, how="inner")
-        branches.append(
-            t2.select(*points.columns, *null_i, F.col("__flip").alias(sign))
-        )
-
-    if full:
-        # interval-preserved side (Δ(P ⟗range I)): symmetric machinery.
-        # An interval row's match set is determined by (key_cols, lo, hi)
-        # — empty/NULL-bounded intervals match nothing but ARE preserved.
-        ikey = [*key_cols, lo_col, hi_col]
-
-        def _null_points(df: DataFrame, w_col: str) -> DataFrame:
-            return df.select(
-                *[
-                    F.col(c)
-                    if c in key_cols
-                    else F.lit(None).cast(points.schema[c].dataType).alias(c)
-                    for c in points.columns
-                ],
-                *[F.col(c) for c in intervals.columns if c not in key_cols],
-                F.col(w_col).alias(sign),
-            )
-
-        def _ikey_anti(side_df: DataFrame, keys_df: DataFrame) -> DataFrame:
-            mk = colops.renamed(keys_df, ikey, "__ik_").distinct()
-            return side_df.join(
-                bc(mk), on=colops.ns_eq(ikey, "__ik_"), how="left_anti"
-            )
-
-        # term 1': ΔI rows whose key has ZERO matches in P' = P ∪ ΔP
-        # carry their own NULL-padded row in/out with their sign
-        if di is not None:
-            dik = ibin(di.select(*ikey).distinct())
-            pprime = pbin(points).select(
-                *key_cols, point_col, _BIN, F.lit(1).alias("__w")
-            )
-            if dp is not None:
-                pprime = pprime.unionByName(
-                    pbin(dp).select(
-                        *key_cols, point_col, _BIN, F.col("__wp").alias("__w")
-                    )
-                )
-            mi_pos = (
-                pprime.join(bc(dik), on=[_BIN, *key_cols], how="inner")
-                .filter(in_range)
-                .groupBy(*ikey)
-                .agg(F.sum("__w").alias("__m"))
-                .filter(F.col("__m") > 0)
-                .select(*ikey)
-            )
-            branches.append(_null_points(_ikey_anti(di, mi_pos), "__wi"))
-
-        # term 2': existing I rows whose match count crosses zero under
-        # ΔP gain (-1) or lose (+1) their NULL-padded row.  Δm per
-        # DISTINCT interval key (several interval rows sharing a key
-        # flip together — the same distinct-keys rule as the point side)
-        if dp is not None:
-            dmi = (
-                ibin(intervals.select(*ikey).distinct())
-                .join(bc(pbin(dp)), on=[_BIN, *key_cols], how="inner")
-                .filter(in_range)
-                .groupBy(*ikey)
-                .agg(F.sum("__wp").alias("__dm"))
-                .filter(F.col("__dm") != 0)
-            )
-            mi_old = (
-                pbin(points)
-                .join(bc(ibin(dmi.select(*ikey))), on=[_BIN, *key_cols], how="inner")
-                .filter(in_range)
-                .groupBy(*ikey)
-                .agg(F.count(F.lit(1)).alias("__mold"))
-            )
-            flips_i = (
-                dmi.join(mi_old, on=ikey, how="left")
-                .selectExpr(*[q(c) for c in ikey], colops.flip_case(-1))
-                .filter("`__flip` IS NOT NULL")
-                .selectExpr(
-                    *[f"{q(c)} AS {q('__ik_' + c)}" for c in ikey], "`__flip`"
-                )
-            )
-            t2i = intervals.join(
-                bc(flips_i), on=colops.ns_eq(ikey, "__ik_"), how="inner"
-            ).drop(*[f"__ik_{c}" for c in ikey])
-            branches.append(_null_points(t2i, "__flip"))
-
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    return out.select(*out_cols, (F.col(sign) > 0).alias(MULT_COL))
+    """Δ(P ⟕range I) — the banded LEFT join maintained by the counting
+    rule (countjoin.outer_delta); every theta join runs as a binned
+    equi-join, so Catalyst never falls back to a nested loop.  Deltas
+    carry the bool multiplicity column (insert=true, delete=false) and
+    may be None on either side.  Output: P columns + non-key I columns
+    + the multiplicity bool."""
+    return cj.outer_delta(points, intervals, d_points, d_intervals, _bind(
+        point_col, lo_col, hi_col, bin_width, key_cols, max_bins_per_interval
+    ), full=False)
 
 
 def range_full_join_delta(
@@ -474,24 +309,11 @@ def range_full_join_delta(
     bin_width: float,
     key_cols: tuple[str, ...] = (),
     max_bins_per_interval: int = 10_000,
-    broadcast_deltas: bool = True,
 ) -> DataFrame:
-    """Δ(P ⟗range I) — FULL OUTER banded join maintenance: the LEFT
-    rule's terms plus the interval-preserved side (ΔI arrivals/departures
-    of pointless intervals, and zero-crossing flips of existing intervals
-    under ΔP).  Same scale shape: the big sides are only ever probed by
-    broadcast delta-derived sets."""
-    return range_left_join_delta(
-        points,
-        intervals,
-        d_points,
-        d_intervals,
-        point_col,
-        lo_col,
-        hi_col,
-        bin_width,
-        key_cols,
-        max_bins_per_interval,
-        broadcast_deltas,
-        full=True,
-    )
+    """Δ(P ⟗range I) — FULL OUTER banded join maintenance
+    (countjoin.outer_delta): the LEFT rule's terms plus the
+    interval-preserved side; empty/NULL-bounded intervals match nothing
+    but ARE preserved."""
+    return cj.outer_delta(points, intervals, d_points, d_intervals, _bind(
+        point_col, lo_col, hi_col, bin_width, key_cols, max_bins_per_interval
+    ), full=True)

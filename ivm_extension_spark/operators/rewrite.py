@@ -62,6 +62,7 @@ from ivm_extension_spark.operators import colops
 from ivm_extension_spark.operators.colops import q
 from ivm_extension_spark.operators.pin import build_all, pin_all, pin_async
 from ivm_extension_spark.operators.thetajoin import sub_outside_literals
+from ivm_extension_spark.plans.sqlfront import _split_conjuncts
 from ivm_extension_spark.plans.viewdef import Aggregate, ViewDef
 
 MULT_COL = "_duckdb_ivm_multiplicity"
@@ -386,7 +387,6 @@ def _split_depth0(s: str, rx) -> list[str] | None:
     return [p.strip() for p in parts if p.strip()]
 
 
-_AND_RX = re.compile(r"\bAND\b", re.IGNORECASE)
 # a single '=' that is not part of  <=  >=  !=  ==  <=>
 _EQ_RX = re.compile(r"(?<![<>!=])=(?![=>])")
 
@@ -493,7 +493,7 @@ def _equi_pairs(
         return None
 
     pairs: list[tuple[str, str]] = []
-    for conj in _split_depth0(cond, _AND_RX):
+    for conj in _split_conjuncts(cond):
         sides = _split_depth0(conj, _EQ_RX)
         if len(sides) != 2:
             return None
@@ -524,7 +524,7 @@ def _has_theta_conjunct(
     (theta) condition.  Build-side-local conjuncts (``g.label = 'p'``)
     stay on the classic chain rules, which push them into R before
     counting (the supported EXISTS shape)."""
-    for conj in _split_depth0(on, _AND_RX):
+    for conj in _split_conjuncts(on):
         if _equi_pairs(conj, lnames, rname, lcols, rcols):
             continue
         mentions_l = any(
@@ -600,7 +600,7 @@ def _drop_conjuncts(where: str | None, cols: set[str]) -> str | None:
         return None
     keep = [
         conj
-        for conj in _split_depth0(where, _AND_RX)
+        for conj in _split_conjuncts(where)
         if not any(re.search(rf"\b{re.escape(c)}\b", conj) for c in cols)
     ]
     return " AND ".join(f"({c})" for c in keep) if keep else None
@@ -1463,7 +1463,7 @@ def _chain_single_delta(
         # into Ti/ΔTi first (they only shrink what counts as a match)
         pairs: list[tuple[str, str]] = []
         rlocal: list[str] = []
-        for conj in _split_depth0(join_i.on, _AND_RX):
+        for conj in _split_conjuncts(join_i.on):
             p = _equi_pairs(conj, list(tables[:i]), rname, pcols, R.columns)
             if p:
                 pairs += p
@@ -1712,7 +1712,7 @@ def _semi_anti_delta(
     pairs: list[tuple[str, str]] = []
     rlocal: list[str] = []
     theta = False
-    for conj in _split_depth0(join.on, _AND_RX):
+    for conj in _split_conjuncts(join.on):
         p = _equi_pairs(conj, lname, rname, lcols, rcols)
         if p:
             pairs += p
@@ -2033,7 +2033,7 @@ def _classify_theta(
     (point, lo, hi, point_side) | None}`` with every inequality
     normalized to left-relation-expression-first."""
     ineqs: list[tuple[str, str, str]] = []
-    for conj in _split_depth0(on, _AND_RX):
+    for conj in _split_conjuncts(on):
         if _equi_pairs(conj, lnames, rname, lcols, rcols):
             return None
         cmp_ = _split_cmp(conj)

@@ -1,54 +1,36 @@
-"""General (two-sided expression) theta joins and their delta rules.
+"""General (two-sided expression) theta joins: the BROADCAST THETA
+pair generator for the counting-join rule (countjoin.py).
 
-The binned operators are the cheap maintained paths for structured
-conditions — rangejoin.py for point-in-interval, ineqjoin.py for
-one-sided ``l.x < r.y`` — and the equi rewrite (rewrite.py) already
-maintains arbitrary-condition INNER joins through its sign-product
-branches.  What they cannot express is an OUTER / SEMI / ANTI join
-whose condition is an arbitrary boolean over expressions of BOTH
-sides (``l.price * (1 - l.disc) < r.cutoff * r.scale AND l.qty >=
-r.min_qty``): the preserved-side bookkeeping needs per-row match
-counts, and no equi key or bin axis exists to carry them.  This
-module supplies that last shape — the reference poster's join delta
-rule with no restriction on the condition (SURVEY.md §2c growth
-direction).  The SQL front routes here automatically: rewrite.py's
-two-table outer/semi/anti rules fall back to these operators when the
-condition yields no conjunctive equi pairs, and chains whose LAST join
-is theta compose the prefix delta with this rule
-(rewrite._theta_chain_suffix_delta).
-
-Match-count algebra (shared with rangejoin/ineqjoin): a preserved
-left row's match set is fully determined by the left columns the
-condition references (``left_on``), so match counts are a per-
-(key_cols…, left_on…) quantity; NULL-pad rows appear/disappear
-exactly when that key's count crosses zero.  All count bookkeeping
-joins are NULL-SAFE — unlike the one-sided operators, a general
-condition (e.g. one wrapped in ``coalesce``) may match rows with
-NULLs in referenced columns, so NULL keys are grouped, not dropped.
+The binned generators are the cheap paths for structured conditions —
+rangejoin.py for point-in-interval, ineqjoin.py for one-sided ``l.x <
+r.y``.  What they cannot express is a condition that is an arbitrary
+boolean over expressions of BOTH sides (``l.price * (1 - l.disc) <
+r.cutoff * r.scale AND l.qty >= r.min_qty``).  This module's generator,
+:func:`theta_join`, joins on the condition itself; a row's match set is
+fixed by the columns the condition references (:func:`referenced_cols`,
+extended by any caller-supplied ``left_on``/``right_on``).  The SQL
+front routes here automatically: rewrite.py's two-table outer/semi/anti
+rules fall back to these operators when the condition yields no
+conjunctive equi pairs, and chains whose LAST join is theta compose the
+prefix delta with this rule (rewrite._theta_chain_suffix_delta).
 
 Scale shape: there is no equi axis, so every theta probe is a
-BroadcastNestedLoopJoin — but in the DELTA rules the broadcast side
-is always delta-derived (ΔL rows, distinct affected keys, flip sets),
-so each branch is one narrow scan of a base relation against a small
-broadcast: O(|base| · |Δ|) comparisons, no shuffle of either base, no
-base×base loop.  That is the acceptable maintenance shape for
-arbitrary theta; initial materialization of a large×large theta view
-should use the binned operators when the condition allows.  The PLAIN
-computes here (`theta_join` etc.) are for CREATE-time/small
-dimensions and oracle checks — they let Catalyst pick the strategy.
+BroadcastNestedLoopJoin — but in the delta rules the broadcast side is
+always delta-derived, so each branch is one narrow scan of a base
+relation against a small broadcast: O(|base| · |Δ|) comparisons, no
+shuffle of either base, no base×base loop.  The PLAIN computes are for
+CREATE-time/small dimensions and oracle checks — they let Catalyst pick
+the strategy.
 """
 
 from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame
 
-from ivm_extension_spark.operators import colops
+from ivm_extension_spark.operators import colops, countjoin as cj
 from ivm_extension_spark.operators.colops import q
-from ivm_extension_spark.operators.pin import build_all, pin_all
-
-_SIGN = "__ivm_sign"
 
 # single-quoted SQL string literals ('' = escaped quote): column-name
 # rewriting and reference detection must never look inside them — a
@@ -81,23 +63,6 @@ def referenced_cols(cond: str, cols: list[str], key_cols: tuple[str, ...]) -> li
     ]
 
 
-def _probe_on(
-    custom: list[str] | None,
-    cond: str,
-    cols: list[str],
-    key_cols: tuple[str, ...],
-) -> list[str]:
-    """Match-count key columns: the caller's ``left_on``/``right_on``
-    EXTENDED with the condition's referenced columns.  A finer custom
-    key still functionally determines the match set, but the anti-term
-    probes re-evaluate ``cond`` over projections keyed by this list, so
-    the referenced columns must ride along or the probe cannot resolve."""
-    ref = referenced_cols(cond, cols, key_cols)
-    if custom is None:
-        return ref
-    return list(dict.fromkeys([*custom, *ref]))
-
-
 def _check_disjoint(
     left: DataFrame, right: DataFrame, key_cols: tuple[str, ...]
 ) -> None:
@@ -106,98 +71,6 @@ def _check_disjoint(
         raise ValueError(
             f"non-key column names must be disjoint, both sides have {sorted(overlap)}"
         )
-
-
-def _signed(d: DataFrame, w: str) -> DataFrame:
-    from ivm_extension_spark.operators.rewrite import _signed_delta
-
-    return _signed_delta(d, w)
-
-
-def _ns_join(side: DataFrame, keys: DataFrame, cols: list[str], how: str) -> DataFrame:
-    """NULL-safe join of ``side`` against the small ``keys`` relation
-    on ``cols`` (keys is broadcast; its non-key payload columns ride
-    along on inner joins).  NULL-safe because a general theta condition
-    can match rows with NULL referenced columns, and those rows must
-    still group with their count/flip bookkeeping.
-
-    One SQL text (rename + hinted join + the inner-join drop of the
-    probe's key copies) — same plan as the Dataset-API form it fused."""
-    ksub = ", ".join(
-        [f"{q(c)} AS {q('__mk_' + c)}" for c in cols]
-        + [q(c) for c in keys.columns if c not in cols]
-    )
-    on = " AND ".join(f"__s.{q(c)} <=> __k.{q('__mk_' + c)}" for c in cols)
-    if how == "inner":
-        proj = ", ".join(
-            ["__s.*"] + [f"__k.{q(c)}" for c in keys.columns if c not in cols]
-        )
-    elif how in ("left_anti", "leftsemi"):
-        proj = "__s.*"
-    else:
-        proj = "__s.*, __k.*"
-    jkind = {
-        "inner": "JOIN",
-        "left": "LEFT JOIN",
-        "left_anti": "LEFT ANTI JOIN",
-        "leftsemi": "LEFT SEMI JOIN",
-    }[how]
-    return colops.sql_over(
-        f"SELECT /*+ BROADCAST(__k) */ {proj} FROM {{s}} AS __s "
-        f"{jkind} (SELECT {ksub} FROM {{k}}) AS __k ON {on}",
-        s=side,
-        k=keys,
-    )
-
-
-def _null_pad(
-    side: DataFrame,
-    matched_keys: DataFrame,
-    probe_cols: list[str],
-    other: DataFrame,
-    key_cols: tuple[str, ...],
-) -> DataFrame:
-    """Rows of ``side`` whose ``probe_cols`` never appear in
-    ``matched_keys``, padded with NULLs for ``other``'s non-key columns
-    (the preserved-side construction shared with rangejoin/ineqjoin).
-    One SQL text: distinct probe keys + anti join + typed null pads."""
-    ksub = ", ".join(f"{q(c)} AS {q('__mk_' + c)}" for c in probe_cols)
-    on = " AND ".join(
-        f"__s.{q(c)} <=> __k.{q('__mk_' + c)}" for c in probe_cols
-    )
-    pads = colops.null_lit_exprs(
-        other, [c for c in other.columns if c not in key_cols]
-    )
-    return colops.sql_over(
-        f"SELECT /*+ BROADCAST(__k) */ __s.*, {', '.join(pads)} "
-        f"FROM {{s}} AS __s LEFT ANTI JOIN "
-        f"(SELECT DISTINCT {ksub} FROM {{k}}) AS __k ON {on}",
-        s=side,
-        k=matched_keys,
-    )
-
-
-def _crossings(dm: DataFrame, m_old: DataFrame, kp: list[str]) -> DataFrame:
-    """Keys whose match count crosses zero: ``__flip`` = +1 entering
-    the matched set, −1 leaving (NULL-safe join — see module doc).
-    One SQL text: rename + join + flip case + crossing filter."""
-    ksub = ", ".join(
-        [f"{q(c)} AS {q('__mk_' + c)}" for c in kp] + ["`__mold`"]
-    )
-    on = " AND ".join(f"__s.{q(c)} <=> __k.{q('__mk_' + c)}" for c in kp)
-    proj = ", ".join(f"__s.{q(c)}" for c in kp)
-    case = (
-        "CASE WHEN coalesce(`__mold`, 0) = 0 AND coalesce(`__mold`, 0) + `__dm` > 0"
-        " THEN 1 WHEN coalesce(`__mold`, 0) > 0 AND"
-        " coalesce(`__mold`, 0) + `__dm` <= 0 THEN -1 END AS `__flip`"
-    )
-    return colops.sql_over(
-        f"SELECT * FROM (SELECT /*+ BROADCAST(__k) */ {proj}, {case} "
-        f"FROM {{s}} AS __s LEFT JOIN (SELECT {ksub} FROM {{k}}) AS __k ON {on}) "
-        "WHERE `__flip` IS NOT NULL",
-        s=dm,
-        k=m_old,
-    )
 
 
 def theta_join(
@@ -254,8 +127,30 @@ def theta_join(
     )
 
 
-def _out_cols(left: DataFrame, right: DataFrame, key_cols: tuple[str, ...]) -> list[str]:
-    return [*left.columns, *[c for c in right.columns if c not in key_cols]]
+def _bind(
+    cond: str,
+    left: DataFrame,
+    right: DataFrame,
+    key_cols: tuple[str, ...],
+    left_on: list[str] | None = None,
+    right_on: list[str] | None = None,
+) -> cj.Matcher:
+    """The broadcast-theta generator plus both sides' match columns:
+    the caller's ``left_on``/``right_on`` EXTENDED with the condition's
+    referenced columns.  A finer custom key still fixes the match set,
+    but the count probes re-evaluate ``cond`` over projections keyed by
+    these lists, so the referenced columns must ride along."""
+
+    def on(custom: list[str] | None, cols: list[str]) -> list[str]:
+        ref = referenced_cols(cond, cols, key_cols)
+        return list(dict.fromkeys([*(custom or []), *ref]))
+
+    return cj.Matcher(
+        lambda a, b, bc: theta_join(a, b, cond, key_cols, bc),
+        key_cols,
+        on(left_on, left.columns),
+        on(right_on, right.columns),
+    )
 
 
 def theta_left_join(
@@ -265,16 +160,10 @@ def theta_left_join(
     key_cols: tuple[str, ...] = (),
     left_on: list[str] | None = None,
 ) -> DataFrame:
-    """LEFT OUTER theta join: matched pairs plus left rows with no
-    qualifying right row, NULL-padded.  The matched relation is
-    checkpointed once and feeds both the output union and the anti
-    probe's matched-key set."""
-    left_on = _probe_on(left_on, cond, left.columns, key_cols)
-    kp = [*key_cols, *left_on]
-    oc = _out_cols(left, right, key_cols)
-    matched = theta_join(left, right, cond, key_cols).localCheckpoint(eager=True)
-    anti = _null_pad(left, matched.selectExpr(*[q(c) for c in kp]), kp, right, key_cols)
-    return matched.unionByName(anti.selectExpr(*[q(c) for c in oc]))
+    """LEFT OUTER theta join (countjoin.outer_join)."""
+    return cj.outer_join(
+        left, right, _bind(cond, left, right, key_cols, left_on), full=False
+    )
 
 
 def theta_full_join(
@@ -285,52 +174,11 @@ def theta_full_join(
     left_on: list[str] | None = None,
     right_on: list[str] | None = None,
 ) -> DataFrame:
-    """FULL OUTER theta join: matched pairs plus BOTH sides' matchless
-    rows NULL-padded (both anti probes reuse the checkpointed matched
-    relation's key projections)."""
-    left_on = _probe_on(left_on, cond, left.columns, key_cols)
-    right_on = _probe_on(right_on, cond, right.columns, key_cols)
-    kp_l = [*key_cols, *left_on]
-    kp_r = [*key_cols, *right_on]
-    oc = _out_cols(left, right, key_cols)
-    matched = theta_join(left, right, cond, key_cols).localCheckpoint(eager=True)
-    ocq = [q(c) for c in oc]
-    anti_l = _null_pad(left, matched.selectExpr(*[q(c) for c in kp_l]), kp_l, right, key_cols)
-    anti_r = _null_pad(right, matched.selectExpr(*[q(c) for c in kp_r]), kp_r, left, key_cols)
-    return (
-        matched
-        .unionByName(anti_l.selectExpr(*ocq))
-        .unionByName(anti_r.selectExpr(*ocq))
+    """FULL OUTER theta join (countjoin.outer_join)."""
+    return cj.outer_join(
+        left, right, _bind(cond, left, right, key_cols, left_on, right_on),
+        full=True,
     )
-
-
-def _semi_anti(
-    left: DataFrame,
-    right: DataFrame,
-    cond: str,
-    key_cols: tuple[str, ...],
-    left_on: list[str] | None,
-    anti: bool,
-) -> DataFrame:
-    """Shared SEMI/ANTI probe: match status depends only on the
-    referenced left columns, so the theta probe runs over the DISTINCT
-    left keys and the matched-key set is broadcast back — the full left
-    relation is never theta-compared row by row."""
-    left_on = _probe_on(left_on, cond, left.columns, key_cols)
-    kp = [*key_cols, *left_on]
-    kpq = [q(c) for c in kp]
-    ro = referenced_cols(cond, right.columns, key_cols)
-    mk = (
-        theta_join(
-            left.selectExpr(*kpq).distinct(),
-            right.selectExpr(*[q(c) for c in (*key_cols, *ro)]),
-            cond,
-            key_cols,
-        )
-        .selectExpr(*kpq)
-        .distinct()
-    )
-    return _ns_join(left, mk, kp, "left_anti" if anti else "leftsemi")
 
 
 def theta_semi_join(
@@ -340,8 +188,10 @@ def theta_semi_join(
     key_cols: tuple[str, ...] = (),
     left_on: list[str] | None = None,
 ) -> DataFrame:
-    """LEFT SEMI theta join (EXISTS) — see :func:`_semi_anti`."""
-    return _semi_anti(left, right, cond, key_cols, left_on, anti=False)
+    """LEFT SEMI theta join — EXISTS (countjoin.semi_anti_join)."""
+    return cj.semi_anti_join(
+        left, right, _bind(cond, left, right, key_cols, left_on), anti=False
+    )
 
 
 def theta_anti_join(
@@ -351,9 +201,10 @@ def theta_anti_join(
     key_cols: tuple[str, ...] = (),
     left_on: list[str] | None = None,
 ) -> DataFrame:
-    """LEFT ANTI theta join (NOT EXISTS): complement of
-    :func:`theta_semi_join` over the same broadcast matched-key probe."""
-    return _semi_anti(left, right, cond, key_cols, left_on, anti=True)
+    """LEFT ANTI theta join — NOT EXISTS (countjoin.semi_anti_join)."""
+    return cj.semi_anti_join(
+        left, right, _bind(cond, left, right, key_cols, left_on), anti=True
+    )
 
 
 def theta_join_delta(
@@ -364,115 +215,12 @@ def theta_join_delta(
     cond: str,
     key_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Δ(L ⋈θ R) — the poster's general inner delta rule (ΔL⋈R ∪
-    L⋈ΔR ∪ ΔL⋈ΔR with sign products), the delta side broadcast in
-    every branch.  Deltas carry the bool multiplicity; output = joined
-    columns + the multiplicity bool."""
-    from ivm_extension_spark.operators.rewrite import MULT_COL
-
-    if d_left is None and d_right is None:
-        raise ValueError("at least one side needs a delta")
-    dl = _signed(d_left, "__wl") if d_left is not None else None
-    dr = _signed(d_right, "__wr") if d_right is not None else None
-    oc = _out_cols(left, right, key_cols)
-
-    # the three matched branches are independent constructions — build
-    # them concurrently (pin.build_all); union order is preserved
-    ocq = [q(c) for c in oc]
-    thunks: list = []
-    if dl is not None:
-        thunks.append(
-            lambda: theta_join(dl, right, cond, key_cols, "left")
-            .selectExpr(*ocq, f"`__wl` AS {_SIGN}")
-        )
-    if dr is not None:
-        thunks.append(
-            lambda: theta_join(left, dr, cond, key_cols, "right")
-            .selectExpr(*ocq, f"`__wr` AS {_SIGN}")
-        )
-    if dl is not None and dr is not None:
-        thunks.append(
-            lambda: theta_join(dl, dr, cond, key_cols, "left").selectExpr(
-                *ocq, f"`__wl` * `__wr` AS {_SIGN}"
-            )
-        )
-    branches: list[DataFrame] = build_all(*thunks)
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    return out.selectExpr(*ocq, f"{_SIGN} > 0 AS {q(MULT_COL)}")
-
-
-def _semi_anti_delta(
-    left: DataFrame,
-    right: DataFrame,
-    d_left: DataFrame | None,
-    d_right: DataFrame | None,
-    cond: str,
-    key_cols: tuple[str, ...],
-    left_on: list[str] | None,
-    anti: bool,
-) -> DataFrame:
-    from ivm_extension_spark.operators.rewrite import MULT_COL
-
-    if d_left is None and d_right is None:
-        raise ValueError("at least one side needs a delta")
-    left_on = _probe_on(left_on, cond, left.columns, key_cols)
-    kp = [*key_cols, *left_on]
-    kpq = [q(c) for c in kp]
-    lcq = [q(c) for c in left.columns]
-    ro = referenced_cols(cond, right.columns, key_cols)
-    rproj = right.selectExpr(*[q(c) for c in (*key_cols, *ro)])
-    dl = _signed(d_left, "__wl") if d_left is not None else None
-    dr = _signed(d_right, "__wr") if d_right is not None else None
-
-    # ---- term 1: ΔL rows gated on the post-delta match count m'
-    def _term1() -> DataFrame:
-        rprime = rproj.selectExpr("*", "1 AS `__wr`")
-        if dr is not None:
-            rprime = rprime.unionByName(
-                dr.selectExpr(*[q(c) for c in (*key_cols, *ro)], "`__wr`")
-            )
-        m_pos = (
-            theta_join(dl.selectExpr(*kpq).distinct(), rprime, cond, key_cols, "left")
-            .groupBy(*kp)
-            .agg(F.sum("__wr").alias("__m"))
-            .filter(F.col("__m") > 0)
-            .selectExpr(*kpq)
-        )
-        t1 = _ns_join(dl, m_pos, kp, "left_anti" if anti else "leftsemi")
-        return t1.selectExpr(*lcq, f"`__wl` AS {_SIGN}")
-
-    # ---- term 2: existing L keys whose match count crosses zero
-    def _term2() -> DataFrame:
-        dm = (
-            theta_join(left.selectExpr(*kpq).distinct(), dr, cond, key_cols, "right")
-            .groupBy(*kp)
-            .agg(F.sum("__wr").alias("__dm"))
-            .filter(F.col("__dm") != 0)
-        )
-        m_old = (
-            theta_join(dm.selectExpr(*kpq), rproj, cond, key_cols, "left")
-            .groupBy(*kp)
-            .agg(F.count(F.lit(1)).alias("__mold"))
-        )
-        flips = _crossings(dm, m_old, kp)
-        t2 = _ns_join(left, flips, kp, "inner")
-        fsign = "-`__flip`" if anti else "`__flip`"
-        return t2.selectExpr(*lcq, f"{fsign} AS {_SIGN}")
-
-    # independent constructions — built concurrently (pin.build_all)
-    thunks: list = []
-    if dl is not None:
-        thunks.append(_term1)
-    if dr is not None:
-        thunks.append(_term2)
-    branches: list[DataFrame] = build_all(*thunks)
-
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    return out.selectExpr(*lcq, f"{_SIGN} > 0 AS {q(MULT_COL)}")
+    """Δ(L ⋈θ R) — the poster's general inner delta rule
+    (countjoin.inner_delta).  Deltas carry the bool multiplicity;
+    output = joined columns + the multiplicity bool."""
+    return cj.inner_delta(
+        left, right, d_left, d_right, _bind(cond, left, right, key_cols)
+    )
 
 
 def theta_semi_join_delta(
@@ -484,11 +232,10 @@ def theta_semi_join_delta(
     key_cols: tuple[str, ...] = (),
     left_on: list[str] | None = None,
 ) -> DataFrame:
-    """Δ(L ⋉θ R): ΔL rows gated on the post-delta match count, plus
-    existing keys whose count crosses zero under ΔR (ineqjoin's semi
-    algebra with the broadcast theta probe as the matcher)."""
-    return _semi_anti_delta(
-        left, right, d_left, d_right, cond, key_cols, left_on, anti=False
+    """Δ(L ⋉θ R) (countjoin.semi_anti_delta)."""
+    return cj.semi_anti_delta(
+        left, right, d_left, d_right,
+        _bind(cond, left, right, key_cols, left_on), anti=False,
     )
 
 
@@ -501,10 +248,10 @@ def theta_anti_join_delta(
     key_cols: tuple[str, ...] = (),
     left_on: list[str] | None = None,
 ) -> DataFrame:
-    """Δ(L ▷θ R): complement of :func:`theta_semi_join_delta` — ΔL
-    rows contribute on m' ≤ 0, crossings flip with the opposite sign."""
-    return _semi_anti_delta(
-        left, right, d_left, d_right, cond, key_cols, left_on, anti=True
+    """Δ(L ▷θ R) (countjoin.semi_anti_delta)."""
+    return cj.semi_anti_delta(
+        left, right, d_left, d_right,
+        _bind(cond, left, right, key_cols, left_on), anti=True,
     )
 
 
@@ -517,99 +264,11 @@ def theta_left_join_delta(
     key_cols: tuple[str, ...] = (),
     left_on: list[str] | None = None,
 ) -> DataFrame:
-    """Δ(L ⟕θ R): the outer counting algebra (matched branches +
-    NULL-pad anti terms via match-count zero crossings) with the
-    broadcast theta probe as the matcher.  Branch fusion as in
-    ineqjoin: ONE tagged probe A = ΔL × (R ∪ ΔR) yields both matched
-    ΔL branches AND the per-ΔL-key post-delta counts for anti term 1
-    (summing over duplicate delta rows scales the count by a positive
-    factor, leaving the m > 0 test unchanged)."""
-    from ivm_extension_spark.operators.rewrite import MULT_COL
-
-    if d_left is None and d_right is None:
-        raise ValueError("at least one side needs a delta")
-    left_on = _probe_on(left_on, cond, left.columns, key_cols)
-    kp = [*key_cols, *left_on]
-    kpq = [q(c) for c in kp]
-    lcq = [q(c) for c in left.columns]
-    ro = referenced_cols(cond, right.columns, key_cols)
-    oc = _out_cols(left, right, key_cols)
-    ocq = [q(c) for c in oc]
-    null_r = colops.null_lit_exprs(
-        right, [c for c in right.columns if c not in key_cols]
+    """Δ(L ⟕θ R) (countjoin.outer_delta)."""
+    return cj.outer_delta(
+        left, right, d_left, d_right,
+        _bind(cond, left, right, key_cols, left_on), full=False,
     )
-    tag_r = "__th_dr"
-    dl = _signed(d_left, "__wl") if d_left is not None else None
-    dr = _signed(d_right, "__wr") if d_right is not None else None
-
-    # ---- fused A = ΔL × (R ∪ ΔR): matched branches + anti term 1
-    def _a_group() -> list[DataFrame]:
-        rprime = right.selectExpr("*", "1 AS `__wr`", f"false AS {q(tag_r)}")
-        if dr is not None:
-            rprime = rprime.unionByName(dr.selectExpr("*", f"true AS {q(tag_r)}"))
-        A = theta_join(dl, rprime, cond, key_cols, "left").localCheckpoint(eager=True)
-        matched = A.selectExpr(
-            *ocq,
-            f"`__wl` * (CASE WHEN {q(tag_r)} THEN `__wr` ELSE 1 END) AS {_SIGN}",
-        )
-        m_pos = (
-            A.groupBy(*kp)
-            .agg(F.sum("__wr").alias("__m"))
-            .filter(F.col("__m") > 0)
-            .selectExpr(*kpq)
-        )
-        t1 = _null_pad(dl, m_pos, kp, right, key_cols)
-        return [
-            matched,
-            t1.selectExpr(*lcq, *null_r, f"`__wl` AS {_SIGN}"),
-        ]
-
-    # ---- matched branch L ⋈ ΔR (old-L rows; ΔL⋈ΔR came from A)
-    def _matched_dr() -> list[DataFrame]:
-        return [
-            theta_join(left, dr, cond, key_cols, "right")
-            .selectExpr(*ocq, f"`__wr` AS {_SIGN}")
-        ]
-
-    # ---- anti term 2: existing L keys whose count crosses zero
-    def _anti2() -> list[DataFrame]:
-        dm = (
-            theta_join(left.selectExpr(*kpq).distinct(), dr, cond, key_cols, "right")
-            .groupBy(*kp)
-            .agg(F.sum("__wr").alias("__dm"))
-            .filter(F.col("__dm") != 0)
-        )
-        m_old = (
-            theta_join(
-                dm.selectExpr(*kpq),
-                right.selectExpr(*[q(c) for c in (*key_cols, *ro)]),
-                cond,
-                key_cols,
-                "left",
-            )
-            .groupBy(*kp)
-            .agg(F.count(F.lit(1)).alias("__mold"))
-        )
-        flips = _crossings(dm, m_old, kp)
-        t2 = _ns_join(left, flips, kp, "inner")
-        return [
-            t2.selectExpr(*lcq, *null_r, f"-`__flip` AS {_SIGN}")
-        ]
-
-    # independent groups, built concurrently (pin.build_all) — the A
-    # group's eager checkpoint job overlaps the sibling constructions
-    thunks: list = []
-    if dl is not None:
-        thunks.append(_a_group)
-    if dr is not None:
-        thunks.append(_matched_dr)
-        thunks.append(_anti2)
-    branches: list[DataFrame] = [b for g in build_all(*thunks) for b in g]
-
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    return out.selectExpr(*ocq, f"{_SIGN} > 0 AS {q(MULT_COL)}")
 
 
 def theta_full_join_delta(
@@ -622,154 +281,8 @@ def theta_full_join_delta(
     left_on: list[str] | None = None,
     right_on: list[str] | None = None,
 ) -> DataFrame:
-    """Δ(L ⟗θ R): the LEFT rule plus the two symmetric right-preserved
-    terms — ΔR rows with zero matches in L' = L ∪ ΔL, and existing
-    right keys whose left-match count crosses zero under ΔL.  Fused as
-    in ineqjoin: A = ΔL × (R ∪ ΔR) and C = (L ∪ ΔL) × ΔR each feed a
-    matched branch and an anti term's counts, checkpointed once."""
-    from ivm_extension_spark.operators.rewrite import MULT_COL
-
-    if d_left is None and d_right is None:
-        raise ValueError("at least one side needs a delta")
-    left_on = _probe_on(left_on, cond, left.columns, key_cols)
-    right_on = _probe_on(right_on, cond, right.columns, key_cols)
-    kp_l = [*key_cols, *left_on]
-    kp_r = [*key_cols, *right_on]
-    kp_lq = [q(c) for c in kp_l]
-    kp_rq = [q(c) for c in kp_r]
-    oc = _out_cols(left, right, key_cols)
-    ocq = [q(c) for c in oc]
-    tag_l, tag_r = "__th_dl", "__th_dr"
-    dl = _signed(d_left, "__wl") if d_left is not None else None
-    dr = _signed(d_right, "__wr") if d_right is not None else None
-    null_r = colops.null_lit_exprs(
-        right, [c for c in right.columns if c not in key_cols]
+    """Δ(L ⟗θ R) (countjoin.outer_delta)."""
+    return cj.outer_delta(
+        left, right, d_left, d_right,
+        _bind(cond, left, right, key_cols, left_on, right_on), full=True,
     )
-
-    # A and C are independent plans, each eagerly pinned (fan-out
-    # consumers below) — pin them CONCURRENTLY so the two narrow
-    # checkpoint jobs and their planning prologues overlap (pin.py)
-    A_lazy = C_lazy = None
-    if dl is not None:
-        rprime = right.selectExpr("*", "1 AS `__wr`", f"false AS {q(tag_r)}")
-        if dr is not None:
-            rprime = rprime.unionByName(dr.selectExpr("*", f"true AS {q(tag_r)}"))
-        A_lazy = theta_join(dl, rprime, cond, key_cols, "left")
-    if dr is not None:
-        lprime = left.selectExpr("*", "1 AS `__wl`", f"false AS {q(tag_l)}")
-        if dl is not None:
-            lprime = lprime.unionByName(dl.selectExpr("*", f"true AS {q(tag_l)}"))
-        C_lazy = theta_join(lprime, dr, cond, key_cols, "right")
-    A, C = pin_all(A_lazy, C_lazy)
-
-    # ---- fused A = ΔL × (R ∪ ΔR): matched ΔL branches + left anti 1
-    def _a_group() -> list[DataFrame]:
-        matched = A.selectExpr(
-            *ocq,
-            f"`__wl` * (CASE WHEN {q(tag_r)} THEN `__wr` ELSE 1 END) AS {_SIGN}",
-        )
-        m_pos = (
-            A.groupBy(*kp_l)
-            .agg(F.sum("__wr").alias("__m"))
-            .filter(F.col("__m") > 0)
-            .selectExpr(*kp_lq)
-        )
-        t1 = _null_pad(dl, m_pos, kp_l, right, key_cols)
-        return [matched, t1.selectExpr(*ocq, f"`__wl` AS {_SIGN}")]
-
-    # ---- fused C = (L ∪ ΔL) × ΔR: L⋈ΔR matched branch + right anti 1
-    def _c_group() -> list[DataFrame]:
-        b2 = C.filter(f"NOT {q(tag_l)}") if dl is not None else C
-        m_pos_r = (
-            C.groupBy(*kp_r)
-            .agg(F.sum("__wl").alias("__m"))
-            .filter(F.col("__m") > 0)
-            .selectExpr(*kp_rq)
-        )
-        t1r = _null_pad(dr, m_pos_r, kp_r, left, key_cols)
-        return [
-            b2.selectExpr(*ocq, f"`__wr` AS {_SIGN}"),
-            t1r.selectExpr(*ocq, f"`__wr` AS {_SIGN}"),
-        ]
-
-    # ---- left anti term 2 (identical to the LEFT rule's)
-    def _left_anti2() -> list[DataFrame]:
-        dm = (
-            theta_join(left.selectExpr(*kp_lq).distinct(), dr, cond, key_cols, "right")
-            .groupBy(*kp_l)
-            .agg(F.sum("__wr").alias("__dm"))
-            .filter(F.col("__dm") != 0)
-        )
-        m_old = (
-            theta_join(
-                dm.selectExpr(*kp_lq),
-                right.selectExpr(*[q(c) for c in (*key_cols, *right_on)]),
-                cond,
-                key_cols,
-                "left",
-            )
-            .groupBy(*kp_l)
-            .agg(F.count(F.lit(1)).alias("__mold"))
-        )
-        flips = _crossings(dm, m_old, kp_l)
-        t2 = _ns_join(left, flips, kp_l, "inner")
-        return [
-            t2.selectExpr(
-                *[q(c) for c in left.columns], *null_r, f"-`__flip` AS {_SIGN}"
-            )
-        ]
-
-    # ---- right anti term 2: existing R keys whose left-match count
-    # crosses zero under ΔL (against OLD right — deleted right rows'
-    # spurious terms cancel exactly as in ineqjoin)
-    def _right_anti2() -> list[DataFrame]:
-        dm_r = (
-            theta_join(dl, right.selectExpr(*kp_rq).distinct(), cond, key_cols, "left")
-            .groupBy(*kp_r)
-            .agg(F.sum("__wl").alias("__dm"))
-            .filter(F.col("__dm") != 0)
-        )
-        m_old_r = (
-            theta_join(
-                left.selectExpr(*[q(c) for c in (*key_cols, *left_on)]),
-                dm_r.selectExpr(*kp_rq),
-                cond,
-                key_cols,
-                "right",
-            )
-            .groupBy(*kp_r)
-            .agg(F.count(F.lit(1)).alias("__mold"))
-        )
-        flips_r = _crossings(dm_r, m_old_r, kp_r)
-        t2r = _ns_join(right, flips_r, kp_r, "inner")
-        null_l = [
-            q(c)
-            if c in key_cols
-            else f"CAST(NULL AS {left.schema[c].dataType.simpleString()}) AS {q(c)}"
-            for c in left.columns
-        ]
-        return [
-            t2r.selectExpr(
-                *null_l,
-                *[q(c) for c in right.columns if c not in key_cols],
-                f"-`__flip` AS {_SIGN}",
-            )
-        ]
-
-    # independent groups over the pinned A/C — built concurrently
-    # (pin.build_all); flattened order matches the serial construction
-    thunks: list = []
-    if A is not None:
-        thunks.append(_a_group)
-    if C is not None:
-        thunks.append(_c_group)
-    if dr is not None:
-        thunks.append(_left_anti2)
-    if dl is not None:
-        thunks.append(_right_anti2)
-    branches = [b for g in build_all(*thunks) for b in g]
-
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    return out.selectExpr(*ocq, f"{_SIGN} > 0 AS {q(MULT_COL)}")

@@ -170,7 +170,7 @@ def window_view_delta(
         apply_delta_to_table,
         bag_diff_cdc,
     )
-    from ivm_extension_spark.operators.thetajoin import _ns_join
+    from ivm_extension_spark.operators.countjoin import _ns_join
 
     keys = list(partition_cols)
     # EAGER pins: t_a feeds the old- and new-side window recomputes —

@@ -8,24 +8,89 @@ built (the LAST upsert of the run — steady state for multi-batch
 drives).  Same normalization caveats as dump_plan.py: exprIds and RDD
 ids differ run to run; compare shape-normalized.  Diagnostic only.
 
+``--compare A B`` reduces two dumps (files, or two directories of
+``<key>_dv_<suffix>.txt`` dumps paired by key) to their operator trees
+and exits non-zero on any difference.  The reduction keeps each node's
+name, join kind, build side and depth; it drops node ids, ``#n``
+exprIds, RDD ids, ``Statistics(...)``, codegen markers and expression
+text.  An AQE dump is reduced to its Final Plan — the tree that
+executed; the Initial Plan is the pre-statistics guess AQE replaced.
+
 Usage: python scripts/dump_delta_plan.py <outdir> <suffix> <key> [key ...]
+       python scripts/dump_delta_plan.py --compare A B
 """
 
 from __future__ import annotations
 
+import difflib
 import os
+import re
 import sys
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import SparkSession
+_NODE_RX = re.compile(r"^([\s:|+-]*?)(?:\* )?([A-Za-z].*?)\s*\(\d+\)(?:,.*)?$")
 
-import __spark_entry__ as entrymod
-from ivm_extension_spark import engine as engmod
+
+def operator_tree(text: str) -> list[str]:
+    """One indented ``node`` line per operator of a formatted physical
+    plan's tree."""
+    lines = text.split("\n\n", 1)[0].splitlines()
+    if any("== Final Plan ==" in ln for ln in lines):
+        start = next(i for i, ln in enumerate(lines) if "== Final Plan ==" in ln)
+        end = next(
+            (i for i, ln in enumerate(lines) if "== Initial Plan ==" in ln),
+            len(lines),
+        )
+        lines = lines[start + 1 : end]
+    tree = []
+    for ln in lines:
+        m = _NODE_RX.match(ln)
+        if m:
+            node = re.sub(r"#\d+|\[\d+\]", "", m.group(2)).strip()
+            tree.append((len(m.group(1)) // 3, node))
+    base = min((d for d, _ in tree), default=0)
+    return ["  " * (d - base) + n for d, n in tree]
+
+
+def _pairs(a: Path, b: Path) -> list[tuple[str, Path, Path]]:
+    if a.is_file() and b.is_file():
+        return [(a.name, a, b)]
+
+    def by_key(d: Path) -> dict[str, Path]:
+        return {f.name.rsplit("_dv_", 1)[0]: f for f in sorted(d.glob("*_dv_*.txt"))}
+
+    ka, kb = by_key(a), by_key(b)
+    missing = sorted(set(ka) ^ set(kb))
+    if missing:
+        raise SystemExit(f"keys present on one side only: {missing}")
+    return [(k, ka[k], kb[k]) for k in sorted(ka)]
+
+
+def compare(a: Path, b: Path) -> int:
+    """Print one verdict per key; non-zero exit on any difference."""
+    bad = 0
+    for key, fa, fb in _pairs(a, b):
+        ta, tb = operator_tree(fa.read_text()), operator_tree(fb.read_text())
+        if ta == tb:
+            print(f"identical  {key}: {len(ta)} nodes")
+            continue
+        bad += 1
+        print(f"DIFFERENT  {key}: {len(ta)} vs {len(tb)} nodes")
+        for ln in difflib.unified_diff(ta, tb, str(fa), str(fb), lineterm="", n=1):
+            print(f"  {ln}")
+    return 1 if bad else 0
 
 
 def main() -> int:
+    if sys.argv[1:2] == ["--compare"] and len(sys.argv) == 4:
+        return compare(Path(sys.argv[2]), Path(sys.argv[3]))
+    from pyspark.sql import SparkSession
+
+    import __spark_entry__ as entrymod
+    from ivm_extension_spark import engine as engmod
+
     outdir = Path(sys.argv[1])
     suffix = sys.argv[2]
     keys = sys.argv[3:]

@@ -66,8 +66,12 @@ ENGINE_CORE = (
     f"{PKG}/plans/viewdef.py",
 )
 MODULE_MAP: dict[str, tuple[str, ...]] = {
-    "theta": (f"{PKG}/operators/ineqjoin.py", f"{PKG}/operators/thetajoin.py"),
-    "range": (f"{PKG}/operators/rangejoin.py",),
+    "theta": (
+        f"{PKG}/operators/ineqjoin.py",
+        f"{PKG}/operators/thetajoin.py",
+        f"{PKG}/operators/countjoin.py",
+    ),
+    "range": (f"{PKG}/operators/rangejoin.py", f"{PKG}/operators/countjoin.py"),
     "asof": (f"{PKG}/operators/asof.py",),
     "window": (f"{PKG}/operators/windowcdc.py",),
     "skew": (f"{PKG}/operators/skew.py",),

@@ -112,3 +112,40 @@ def test_null_lit_exprs_ddl(spark):
     exprs = colops.null_lit_exprs(df, ["d"])
     out = spark.range(1).selectExpr("id", *exprs)
     assert dict(out.dtypes)["d"] == "date"
+
+
+def test_ns_join_across_foreach_batch_clone_session(spark, tmp_path):
+    # foreachBatch hands the callback a micro-batch on a CLONED session:
+    # the one-SQL-text constructions must resolve frames of both the
+    # engine's session and the clone, whichever comes first
+    from ivm_extension_spark.operators.countjoin import _ns_join
+
+    table = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (None, "n"), (3, "c")], "k int, v string"
+    )
+    spark.createDataFrame([(1,), (None,), (7,)], "k int").write.parquet(
+        str(tmp_path / "in")
+    )
+    got = {}
+
+    def on_batch(batch, _batch_id):
+        got["table_first"] = sorted(
+            r.v for r in _ns_join(table, batch, ["k"], "leftsemi").collect()
+        )
+        got["batch_first"] = sorted(
+            ((r.k, r.v) for r in _ns_join(batch, table, ["k"], "inner").collect()),
+            key=str,
+        )
+
+    query = (
+        spark.readStream.schema("k int")
+        .parquet(str(tmp_path / "in"))
+        .writeStream.foreachBatch(on_batch)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert query.awaitTermination(120)
+    assert query.exception() is None
+    assert got["table_first"] == ["a", "n"]
+    assert got["batch_first"] == sorted([(1, "a"), (None, "n")], key=str)

@@ -695,6 +695,22 @@ def test_left_join_theta_condition_maintained(spark):
     assert (3, "c", None) in merged and (9, "z", None) in merged
 
 
+def test_theta_condition_literal_keeps_placeholder_text(spark):
+    # '{l}' / '{r}' inside a user literal are data, not the frame
+    # placeholders of the SQL-text constructions: both new customers
+    # stay matchless (NULL-padded), exactly as full_refresh computes
+    merged = lj_check(
+        lj_engine(
+            spark,
+            dcust=[(0, "{r}", True), (-1, "{l}", True)],
+            dord=[(20, 3, True), (13, 99, False)],
+        ),
+        "SELECT ck, seg, ok FROM cust LEFT JOIN orders "
+        "ON ck < ck2 AND seg NOT IN ('{l}', '{r}')",
+    )
+    assert (0, "{r}", None) in merged and (-1, "{l}", None) in merged
+
+
 def test_full_join_theta_condition_maintained(spark):
     # FULL theta through the SQL front: both preserved directions flip
     merged = lj_check(
@@ -976,6 +992,28 @@ def test_semi_join_build_local_predicate(spark):
     )
     # order 30 fails the local predicate: cust 4 must NOT enter
     assert (3, "c") in merged and (4, "d") not in merged
+
+
+def test_semi_join_or_binds_looser_than_and(spark):
+    # a depth-0 OR makes the whole condition one conjunct: splitting on
+    # AND would read it as ck = ck2 AND (ok < 13 OR ok = 30) and drop
+    # every customer matched only through order 30
+    merged = lj_check(
+        lj_engine(spark, dord=[(30, 4, True), (12, 2, False)]),
+        "SELECT ck, seg FROM cust WHERE EXISTS "
+        "(SELECT 1 FROM orders WHERE ck = ck2 AND ok < 13 OR ok = 30)",
+    )
+    assert merged == [(1, "a"), (2, "b"), (3, "c"), (4, "d")]
+
+
+def test_semi_join_between_local_predicate(spark):
+    # BETWEEN's AND is not a conjunct boundary
+    merged = lj_check(
+        lj_engine(spark, dord=[(30, 4, True), (12, 2, False)]),
+        "SELECT ck, seg FROM cust WHERE EXISTS "
+        "(SELECT 1 FROM orders WHERE ck = ck2 AND ok BETWEEN 10 AND 13)",
+    )
+    assert merged == [(1, "a")]
 
 
 def test_semi_join_syntax_linear_left_delta(spark):
