@@ -83,6 +83,8 @@ class IVMEngine:
     join branches — the IVM scale assumption is |ΔT| << |T|, which turns
     every delta-join branch into a broadcast hash join (no shuffle of
     the base fact table).  Disable for pathologically large deltas.
+    The counting-join rule behind LEFT/FULL/SEMI/ANTI joins
+    (operators/countjoin.py) always broadcasts its delta-derived sides.
 
     ``merge_strategy`` controls how grouped-aggregate state absorbs ΔV:
 
@@ -942,21 +944,12 @@ class IVMEngine:
         is per-view-name keyed and the state store is one directory per
         view, so concurrent drives of DISTINCT names do not contend.
         """
-        import threading
-
         names = list(names)
         if len(set(names)) != len(names):
             raise IVMError("merge_views requires distinct view names")
-        if len(names) <= 1:
-            return [self.merge_view(n) for n in names]
-        sem = threading.Semaphore(parallelism or len(names))
-
-        def drive(n: str) -> DataFrame:
-            with sem:
-                return self.merge_view(n)
-
-        futs = [pin.submit(lambda n=n: drive(n)) for n in names]
-        return [f.result() for f in futs]
+        return pin.build_all(
+            *[lambda n=n: self.merge_view(n) for n in names], limit=parallelism
+        )
 
     def merge_view_cdc(self, name: str) -> DataFrame:
         """Merge like :meth:`merge_view`, but return the *view-state CDC*
@@ -1156,40 +1149,17 @@ class IVMEngine:
         for n in sketch_affected:
             self._delta_views[n] = sk_plans[n]
         ordered = affected + sketch_affected
-        if len(ordered) > 1:
-            # affected views are pairwise independent by construction
-            # (user cascades stay manual; composite inners advance inside
-            # their outer's epilogue) — merge them concurrently, same
-            # thread-per-view drive as merge_views
-            import threading
-
-            sem = threading.Semaphore(8)
-
-            def drive(v: str) -> DataFrame:
-                with sem:
-                    return self.merge_view(v)
-
-            futs = [pin.submit(lambda v=v: drive(v)) for v in ordered]
-            out = dict(zip(ordered, (f.result() for f in futs)))
-        else:
-            out = {v: self.merge_view(v) for v in ordered}
-        pending = list(self._deltas)
-        if len(pending) > 1:
-            # independent per-table base folds (distinct engine keys) —
-            # concurrent, same argument as the merge drive above
-            import threading
-
-            sem2 = threading.Semaphore(8)
-
-            def fold(t: str) -> None:
-                with sem2:
-                    self.apply_delta(t)
-
-            for f in [pin.submit(lambda t=t: fold(t)) for t in pending]:
-                f.result()
-        else:
-            for t in pending:
-                self.apply_delta(t)
+        # affected views are pairwise independent by construction (user
+        # cascades stay manual; composite inners advance inside their
+        # outer's epilogue) — merge them concurrently, same thread-per-
+        # view drive as merge_views; then the independent per-table base
+        # folds (distinct engine keys), concurrent by the same argument
+        out = dict(zip(ordered, pin.build_all(
+            *[lambda v=v: self.merge_view(v) for v in ordered], limit=8
+        )))
+        pin.build_all(
+            *[lambda t=t: self.apply_delta(t) for t in self._deltas], limit=8
+        )
         return out
 
     def _advance_aux(self, name: str) -> dict[str, DataFrame]:
@@ -1532,7 +1502,14 @@ class IVMEngine:
         )
         f_merge = pin.submit(lambda: self.merge_view(name))
         f_base = pin.submit(lambda: fold_plan.localCheckpoint(eager=True))
-        out = f_merge.result()  # merge failure: world unchanged, re-raise
+        try:
+            out = f_merge.result()
+        except BaseException:
+            # merge failure: world unchanged — let the fold finish and
+            # drop its checkpoint before re-raising
+            if f_base.exception() is None:
+                pin.release(f_base.result())
+            raise
         try:
             new_base = f_base.result()
         except Exception as e:
@@ -1778,19 +1755,11 @@ class IVMEngine:
             self.delta(next(iter(vtabs)))  # reference-style missing-delta error
         self.ivm_upsert(name)
         out = self.merge_view(name)
-        if len(tabs) > 1:
-            # the per-table base folds are independent eager checkpoints
-            # over DISTINCT engine keys — drive them concurrently, the
-            # same thread-per-unit submission as merge_views (engine
-            # bookkeeping is per-name keyed; Spark's scheduler is
-            # thread-safe)
-            from ivm_extension_spark.operators import pin
-
-            for f in [pin.submit(lambda t=t: self.apply_delta(t)) for t in tabs]:
-                f.result()
-        else:
-            for t in tabs:
-                self.apply_delta(t)
+        # the per-table base folds are independent eager checkpoints over
+        # DISTINCT engine keys — drive them concurrently, the same
+        # thread-per-unit submission as merge_views (engine bookkeeping
+        # is per-name keyed; Spark's scheduler is thread-safe)
+        pin.build_all(*[lambda t=t: self.apply_delta(t) for t in tabs])
         return out
 
 

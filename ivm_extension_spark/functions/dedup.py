@@ -615,8 +615,7 @@ def minhash_lsh_delta_pairs(
         state = state.persist()
     from ivm_extension_spark.operators import pin
 
-    for f in [pin.submit(lambda d=d: d.count()) for d in (state, dp)]:
-        f.result()
+    pin.build_all(state.count, dp.count)
     dm = state.join(bc(del_ids), on="id", how="leftsemi").persist()
     surv = state.join(bc(del_ids), on="id", how="left_anti")
 

@@ -135,11 +135,9 @@ def tfidf_index_views(
         ),
         (ndocs, f"SELECT count(DISTINCT {id_col}) AS n FROM {docs_table}"),
     ]
-    for f in [
-        pin.submit(lambda nv=nv: eng.create_immv(nv[0], sql=nv[1]))
-        for nv in creates
-    ]:
-        f.result()
+    pin.build_all(
+        *[lambda nv=nv: eng.create_immv(nv[0], sql=nv[1]) for nv in creates]
+    )
     return tf, dfreq, ndocs
 
 

@@ -7,7 +7,9 @@ relation ``a`` with a right-side relation ``b`` (all ``a`` columns +
 non-key ``b`` columns), exactly the pairs that satisfy the join
 condition, with ``broadcast`` ('left', 'right' or None) naming the side
 to broadcast — plus the ``left_on`` / ``right_on`` columns that fix a
-row's match set.  The families: thetajoin.py (broadcast theta,
+row's match set.  The families: :func:`equi` here (conjunctive equi
+pairs projected to ``__k…`` key columns — rewrite.py's LEFT/FULL/SEMI/
+ANTI bindings and chain positions), thetajoin.py (broadcast theta,
 arbitrary condition), ineqjoin.py (dyadic bins, one-sided ``l.x <
 r.y``) and rangejoin.py (banded bins, point-in-interval).  Everything
 below is shared.
@@ -34,6 +36,13 @@ the m' > 0 test is unchanged); for FULL, C = (L ∪ ΔL) × ΔR likewise
 yields L⋈ΔR and the right term-1 counts.  Each fused relation is pinned
 once (it feeds two consumers).  Independent branch groups build
 concurrently (pin.build_all); union order is fixed.
+
+Crossing candidates: when a match set is plain equality on the key
+columns alone (no ``left_on`` / ``right_on``, not ``null_safe`` — the
+equi generator), only keys the delta carries can cross, so Δm is the
+delta summed by key and the preserved base is never scanned for
+candidates; otherwise they are the preserved side's distinct match
+columns.
 
 Bookkeeping joins (count probes, NULL-pad anti joins, flip sets) are
 NULL-SAFE and broadcast the delta-derived side: a general condition
@@ -62,7 +71,9 @@ class Matcher(NamedTuple):
     the columns that fix each side's match set.  ``null_safe=False``
     declares that a NULL in any match column never matches (bare-column
     binned axes), so count bookkeeping may use plain equality — which
-    lets Spark prune NULL keys before the probe joins."""
+    lets Spark prune NULL keys before the probe joins.  With no
+    ``left_on`` / ``right_on`` as well, it declares that ``pairs`` is
+    plain equality on ``key_cols``."""
 
     pairs: Pairs
     key_cols: tuple[str, ...]
@@ -152,12 +163,14 @@ def _null_pad(
 
 
 def _crossings(
-    dm: DataFrame, m_old: DataFrame, kp: list[str], null_safe: bool
+    dm: DataFrame, old: DataFrame, kp: list[str], null_safe: bool
 ) -> DataFrame:
-    """Keys whose match count crosses zero: ``__flip`` = +1 entering
-    the matched set (m_old = 0, m_old + Δm > 0), −1 leaving (m_old > 0,
-    m_old + Δm ≤ 0).  One SQL text: rename + join + flip case +
-    crossing filter."""
+    """Keys whose match count crosses zero: ``dm`` holds each key's
+    non-zero Δm (``__dm``), ``old`` one row per OLD match of those keys
+    (counted here into m_old).  ``__flip`` = +1 entering the matched set
+    (m_old = 0, m_old + Δm > 0), −1 leaving (m_old > 0, m_old + Δm ≤ 0).
+    One SQL text: rename + join + flip case + crossing filter."""
+    m_old = old.groupBy(*kp).agg(F.count(F.lit(1)).alias("__mold"))
     ksub = ", ".join(
         [f"{q(c)} AS {q('__mk_' + c)}" for c in kp] + ["`__mold`"]
     )
@@ -218,38 +231,74 @@ def _positive_keys(rel: DataFrame, kp: list[str], w: str) -> DataFrame:
 
 def _flips(
     m: Matcher,
-    keys: DataFrame,
+    preserved: DataFrame | None,
     delta: DataFrame,
     base: DataFrame,
     w: str,
     preserved_left: bool,
 ) -> DataFrame:
-    """Preserved-side keys (the distinct ``keys`` relation) whose match
-    count against the other side crosses zero under that side's signed
-    ``delta`` (weight ``w``); ``base`` is the other side's OLD relation
-    projected to its match columns.  Δm comes from the keys probed by
-    the broadcast delta, m_old from the base probed by the broadcast
-    affected keys.  Distinct keys are load-bearing: several preserved
-    rows sharing a key would otherwise multiply Δm and fake a crossing."""
-    kp = keys.columns
+    """Preserved-side keys whose match count against the other side
+    crosses zero under that side's signed ``delta`` (weight ``w``);
+    ``base`` is the other side's OLD relation projected to its match
+    columns.  A match set that is plain equality on the key columns
+    alone (the :func:`equi` generator) can only change for keys the
+    delta carries: Δm is the delta summed by key and ``preserved`` is
+    never read.  Otherwise Δm comes from ``preserved``'s DISTINCT match
+    columns probed by the broadcast delta (several rows sharing a key
+    would multiply Δm and fake a crossing).  m_old comes from the base
+    probed by the broadcast affected keys."""
+    kp = m.kp_l if preserved_left else m.kp_r
 
     def probe(mine: DataFrame, theirs: DataFrame, bc_mine: bool) -> DataFrame:
         if preserved_left:
             return m.pairs(mine, theirs, "left" if bc_mine else "right")
         return m.pairs(theirs, mine, "right" if bc_mine else "left")
 
-    dm = (
-        probe(keys, delta, False)
-        .groupBy(*kp)
-        .agg(F.sum(w).alias("__dm"))
-        .filter(F.col("__dm") != 0)
+    if m.left_on or m.right_on or m.null_safe:
+        delta = probe(_proj(preserved, kp).distinct(), delta, False)
+    dm = delta.groupBy(*kp).agg(F.sum(w).alias("__dm")).filter(F.col("__dm") != 0)
+    return _crossings(dm, probe(_proj(dm, kp), base, True), kp, m.null_safe)
+
+
+def key_crossings(delta: DataFrame, base: DataFrame, w: str) -> DataFrame:
+    """The :func:`equi` matcher's zero crossings for a rule that joins
+    them back onto its own preserved relation (rewrite.py's chain
+    positions): ``delta`` carries the ``__k…`` key columns and the
+    signed weight ``w``, ``base`` the OLD other side's ``__k…`` keys."""
+    return _flips(equi(len(base.columns)), None, delta, base, w, True)
+
+
+# ---------------------------------------------------------------- equi
+
+
+def _equi_join(
+    a: DataFrame, b: DataFrame, key_cols: tuple[str, ...], broadcast: str | None
+) -> DataFrame:
+    hint = {
+        "left": "/*+ BROADCAST(__a) */ ",
+        "right": "/*+ BROADCAST(__b) */ ",
+        None: "",
+    }[broadcast]
+    proj = ", ".join(
+        ["__a.*"] + [f"__b.{q(c)}" for c in b.columns if c not in key_cols]
     )
-    m_old = (
-        probe(_proj(dm, kp), base, True)
-        .groupBy(*kp)
-        .agg(F.count(F.lit(1)).alias("__mold"))
+    on = " AND ".join(f"__a.{q(k)} = __b.{q(k)}" for k in key_cols)
+    return colops.sql_over(
+        f"SELECT {hint}{proj} FROM {{a}} AS __a JOIN {{b}} AS __b ON {on}",
+        a=a,
+        b=b,
     )
-    return _crossings(dm, m_old, kp, m.null_safe)
+
+
+def equi(n_keys: int) -> Matcher:
+    """The EQUI pair generator: both sides carry the join's equi-pair
+    expressions as ``__k0 … __k{n-1}``, and a pair is plain equality on
+    all of them (one hinted hash join) — a NULL key never matches, so
+    the bookkeeping is plain equality too."""
+    key_cols = tuple(f"__k{i}" for i in range(n_keys))
+    return Matcher(
+        lambda a, b, bc: _equi_join(a, b, key_cols, bc), key_cols, [], [], False
+    )
 
 
 # ---------------------------------------------------------------- plain
@@ -372,9 +421,7 @@ def outer_delta(
     # ---- left term 2: existing L keys whose count crosses zero under
     # ΔR — a key ENTERING the matched set retracts its pad row
     def _left_anti2() -> list[DataFrame]:
-        flips = _flips(
-            m, _proj(left, kp_l).distinct(), dr, _proj(right, kp_r), "__wr", True
-        )
+        flips = _flips(m, left, dr, _proj(right, kp_r), "__wr", True)
         t2 = _ns_join(left, flips, kp_l, "inner", m.null_safe)
         return [t2.selectExpr(
             *[q(c) for c in left.columns],
@@ -388,9 +435,7 @@ def outer_delta(
     # zero under ΔL (against OLD right — deleted right rows' spurious
     # terms cancel against the matched/term-1 branches)
     def _right_anti2() -> list[DataFrame]:
-        flips = _flips(
-            m, _proj(right, kp_r).distinct(), dl, _proj(left, kp_l), "__wl", False
-        )
+        flips = _flips(m, right, dl, _proj(left, kp_l), "__wl", False)
         t2r = _ns_join(right, flips, kp_r, "inner", m.null_safe)
         null_l = [
             q(c) if c in key_cols
@@ -448,7 +493,7 @@ def semi_anti_delta(
         return t1.selectExpr(*lcq, f"`__wl` AS {_SIGN}")
 
     def _term2() -> DataFrame:
-        flips = _flips(m, _proj(left, kp).distinct(), dr, rproj, "__wr", True)
+        flips = _flips(m, left, dr, rproj, "__wr", True)
         t2 = _ns_join(left, flips, kp, "inner", m.null_safe)
         fsign = "-`__flip`" if anti else "`__flip`"
         return t2.selectExpr(*lcq, f"{fsign} AS {_SIGN}")

@@ -108,6 +108,12 @@ def _binned(
     ``origin`` shifts the value axis so negative-valued columns land in
     nonnegative bins (the dyadic decomposition needs unsigned indices;
     the shift is order-preserving so the join predicate is unaffected)."""
+    if _BIN in df.columns:
+        raise ValueError(f"input already has the reserved bin column {_BIN!r}")
+    if not (math.isfinite(bin_width) and math.isfinite(origin)):
+        raise ValueError(
+            f"bin_width and origin must be finite, got {bin_width!r} and {origin!r}"
+        )
     # one parsed expression instead of ~15 Column-op round trips (the
     # round-10 construction diet).  Float literals carry the D suffix so
     # Spark parses DOUBLE (bare `0.5` parses as DECIMAL and would change

@@ -41,7 +41,7 @@ from __future__ import annotations
 
 import queue
 import threading
-from concurrent.futures import Future
+from concurrent.futures import Future, wait
 
 from pyspark.sql import DataFrame
 
@@ -111,19 +111,10 @@ def pin_all(*dfs: "DataFrame | None") -> "list[DataFrame | None]":
     return the pinned frames in input order (None passes through).
     Inputs must be mutually independent plans — none may consume
     another's result."""
-    live = [(i, d) for i, d in enumerate(dfs) if d is not None]
-    out: "list[DataFrame | None]" = list(dfs)
-    if len(live) <= 1:
-        for i, d in live:
-            out[i] = d.localCheckpoint(eager=True)
-        return out
-    futs = [
-        (i, _POOL.submit(lambda d=d: d.localCheckpoint(eager=True)))
-        for i, d in live
-    ]
-    for i, f in futs:
-        out[i] = f.result()
-    return out
+    pinned = iter(build_all(
+        *[lambda d=d: d.localCheckpoint(eager=True) for d in dfs if d is not None]
+    ))
+    return [None if d is None else next(pinned) for d in dfs]
 
 
 def pin_async(df: DataFrame) -> "Future[DataFrame]":
@@ -134,7 +125,15 @@ def pin_async(df: DataFrame) -> "Future[DataFrame]":
     return _POOL.submit(lambda: df.localCheckpoint(eager=True))
 
 
-def build_all(*thunks):
+def release(df: DataFrame) -> None:
+    """Free the blocks of an eager ``localCheckpoint`` now.
+    ``DataFrame.unpersist`` only touches the cache manager; the blocks
+    belong to the RDD under the checkpoint's ``LogicalRDD`` plan, which
+    is otherwise dropped only when the JVM collects it."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+def build_all(*thunks, limit: "int | None" = None):
     """Run independent plan-CONSTRUCTION thunks concurrently and return
     their results in input order.
 
@@ -153,8 +152,25 @@ def build_all(*thunks):
 
     Thunks must be mutually independent and must not mutate shared
     state; results keep input order, so downstream unions are
-    byte-identical to the serial construction."""
+    byte-identical to the serial construction.
+
+    ``limit`` caps how many thunks run at once: the calling thread
+    takes a slot BEFORE each submission and a worker gives it back only
+    after it is idle again, so one fan-out never holds more than
+    ``limit`` workers.  A failure re-raises only after EVERY submitted
+    sibling has finished (no work outlives the call) — the first
+    failure in input order wins."""
     if len(thunks) <= 1:
         return [t() for t in thunks]
-    futs = [_POOL.submit(t) for t in thunks]
+    slots = threading.Semaphore(limit) if limit else None
+    futs = []
+    for t in thunks:
+        if slots is not None:
+            slots.acquire()
+        f = _POOL.submit(t)
+        if slots is not None:
+            # done callbacks run after the worker recycled itself
+            f.add_done_callback(lambda _: slots.release())
+        futs.append(f)
+    wait(futs)
     return [f.result() for f in futs]

@@ -29,25 +29,16 @@ scale ΔT is small relative to T, so every branch becomes a broadcast
 hash join and the 100-TB base table is only ever scanned, never
 shuffled.
 
-LEFT OUTER joins (DBToaster-style counting):  L ⟕ R  =  (L ⋈ R)  ∪
-(L ▷ R) × {NULL_R}, where ▷ is anti-join.  The inner part uses the
-three-branch rule; the anti part's delta is driven by per-key match
-counts m(key) = |σ_key R|:
-
-    Δanti =   Σ_{ℓ ∈ ΔL} w_ℓ · [m'(ℓ.key) = 0]          (term 1)
-            + Σ_{ℓ ∈ L}  w_ℓ · ([m'(key)=0] − [m(key)=0])  (term 2)
-
-Term 2 is non-zero only for keys whose zero-status flips, and those are
-a subset of ΔR's keys — so both terms touch R only through small,
-broadcastable key sets: the 100-TB base sides are scanned (semi-joined
-against broadcast delta keys), never shuffled.  When only the leftmost
-table has a delta, any inner/left chain is linear in it and ΔV is a
-plain substitution (ΔL joined through unchanged).
-
-SEMI/ANTI joins (WHERE [NOT] EXISTS / IN-subquery views, lowered by the
-SQL front): membership is [m(key) > 0] (semi) or [m(key) = 0] (anti),
-so the delta is the same counting machinery with the L rows themselves
-as output — see ``_semi_anti_delta``.
+LEFT/FULL OUTER and SEMI/ANTI joins (WHERE [NOT] EXISTS / IN-subquery
+views, lowered by the SQL front) are bindings onto the counting-join
+rule in ``countjoin.py`` — per-key match counts, NULL-pad terms and
+zero crossings, written once for every join family.  The two-table
+rules project both sides to positional names plus the equi-pair keys
+(``countjoin.equi``); the chain positions reuse its crossings
+(``countjoin.key_crossings``).  Base sides are only ever probed by
+broadcast delta-derived key sets, never shuffled.  When only the
+leftmost table has a delta, any inner/left chain is linear in it and ΔV
+is a plain substitution (ΔL joined through unchanged).
 """
 
 from __future__ import annotations
@@ -58,7 +49,7 @@ from typing import Callable
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ivm_extension_spark.operators import colops
+from ivm_extension_spark.operators import colops, countjoin as cj
 from ivm_extension_spark.operators.colops import q
 from ivm_extension_spark.operators.pin import build_all, pin_all, pin_async
 from ivm_extension_spark.operators.thetajoin import sub_outside_literals
@@ -260,14 +251,10 @@ def _delta_source(
             how = view.joins[0].how
             if how in ("semi", "anti"):
                 return _semi_anti_delta(
-                    view, get_table, get_delta, broadcast_deltas, anti=how == "anti"
+                    view, get_table, get_delta, anti=how == "anti"
                 )
             return _outer_join_delta(
-                view,
-                get_table,
-                get_delta,
-                broadcast_deltas,
-                full=how == "full",
+                view, get_table, get_delta, full=how == "full"
             )
         if len(with_delta) == 1:
             (dt,) = with_delta
@@ -298,7 +285,6 @@ def _delta_source(
                 dataclasses.replace(view, joins=(view.joins[0],)),
                 get_table,
                 get_delta,
-                broadcast_deltas,
                 full=True,
             )
             core_refs: list[tuple[str | None, str]] = [
@@ -915,37 +901,16 @@ def _outer_join_delta(
     view: ViewDef,
     get_table: Callable[[str], DataFrame],
     get_delta: Callable[[str], DataFrame],
-    broadcast_deltas: bool,
     full: bool = False,
 ) -> DataFrame:
     """Δ(L ⟕ R) / Δ(L ⟗ R) for a two-table outer join with deltas on
-    either or both sides.  Inner part: three-branch rule.  Anti part(s):
-    the NULL-padded rows of a preserved side change exactly where the
-    other side's per-key match count crosses zero — see the module
-    docstring for the algebra.  FULL OUTER runs the anti machinery in
-    both directions.
-
-    Scale shape: each base side is only ever semi-joined against a
-    BROADCAST set of delta keys or joined against a BROADCAST set of
-    zero-status-flip keys (never shuffled); every shuffle in the plan is
-    a match-count aggregation over O(|Δ| + affected keys).
-    """
+    either or both sides: a binding of the conjunctive equi pairs onto
+    the counting-join rule (countjoin.outer_delta over countjoin.equi).
+    A condition without equi pairs takes the general theta algebra."""
     join = view.joins[0]
     lname, rname = view.tables
     L, R = get_table(lname), get_table(rname)
-    lcols, rcols = L.columns, R.columns
-    bc = F.broadcast if broadcast_deltas else (lambda df: df)
-    wl, wr = f"__w_{lname}", f"__w_{rname}"
-
-    def _maybe_delta(name: str, w: str) -> DataFrame | None:
-        try:
-            return _signed_delta(get_delta(name), w)
-        except IVMError:
-            return None
-
-    dl, dr = _maybe_delta(lname, wl), _maybe_delta(rname, wr)
-
-    pairs = _equi_pairs(join.on, lname, rname, lcols, rcols)
+    pairs = _equi_pairs(join.on, lname, rname, L.columns, R.columns)
     if pairs is None:
         # general theta condition: no equi axis exists, fall through to
         # the broadcast-delta theta algebra (operators/thetajoin.py).
@@ -954,139 +919,58 @@ def _outer_join_delta(
         return _theta_two_table_delta(
             view, get_table, get_delta, "full" if full else "left"
         )
-    null_l = [F.lit(None).cast(L.schema[c].dataType).alias(c) for c in lcols]
-    null_r = [F.lit(None).cast(R.schema[c].dataType).alias(c) for c in rcols]
+    (lp, dlp), (rp, drp) = _equi_operands(view, get_table, get_delta, pairs)
+    dv = cj.outer_delta(lp, rp, dlp, drp, cj.equi(len(pairs)), full)
+    out = dv.selectExpr(
+        *[f"`__l{i}` AS {q(c)}" for i, c in enumerate(L.columns)],
+        *[f"`__r{i}` AS {q(c)}" for i, c in enumerate(R.columns)],
+        f"CASE WHEN {q(MULT_COL)} THEN 1 ELSE -1 END AS {_SIGN}",
+    )
+    # positional union under an empty, optimized-away L × R branch: the
+    # output keeps the view's table qualifiers, so ``f.k`` and ``d.k``
+    # in the view's select still resolve
+    anchor = (
+        L.alias(lname).limit(0).crossJoin(R.alias(rname).limit(0))
+        .select(f"{lname}.*", f"{rname}.*", F.lit(1).alias(_SIGN))
+    )
+    return anchor.union(out)
 
-    base_l = L.withColumn(wl, F.lit(1)).alias(lname)
-    base_r = R.withColumn(wr, F.lit(1)).alias(rname)
 
-    def _inner(lside: DataFrame, rside: DataFrame) -> DataFrame:
-        acc = lside.join(rside, on=F.expr(join.on), how="inner")
-        return acc.withColumn(_SIGN, F.col(wl) * F.col(wr)).drop(wl, wr)
+def _equi_operands(
+    view: ViewDef,
+    get_table: Callable[[str], DataFrame],
+    get_delta: Callable[[str], DataFrame],
+    pairs: list[tuple[str, str]],
+    rlocal: tuple[str, ...] | list[str] = (),
+) -> list[tuple[DataFrame, DataFrame | None]]:
+    """(base, delta-or-None) of each side of a two-table equi join,
+    projected for countjoin.equi: disjoint positional names ``__l{i}`` /
+    ``__r{i}`` plus the equi-pair expressions as ``__k{n}``; deltas keep
+    their multiplicity bool.  R-local conjuncts filter R and ΔR first
+    (they only shrink what counts as a match)."""
+    pred = " AND ".join(f"({c})" for c in rlocal)
+    out = []
+    for name, tag, exprs in (
+        (view.tables[0], "l", [pe for pe, _ in pairs]),
+        (view.tables[1], "r", [be for _, be in pairs]),
+    ):
+        cols = get_table(name).columns
 
-    inner_thunks: list = []
-    if dl is not None:
-        inner_thunks.append(lambda: [_inner(bc(dl.alias(lname)), base_r)])
-    if dr is not None:
-        inner_thunks.append(lambda: [_inner(base_l, bc(dr.alias(rname)))])
-    if dl is not None and dr is not None:
-        inner_thunks.append(
-            lambda: [_inner(bc(dl.alias(lname)), bc(dr.alias(rname)))]
-        )
-
-    def _anti(
-        pname: str,
-        P: DataFrame,
-        dP: DataFrame | None,
-        wp: str,
-        bname: str,
-        B: DataFrame,
-        dB: DataFrame | None,
-        wb: str,
-        opairs: list[tuple[str, str]],
-        pad: Callable[[list], list],
-    ) -> list[DataFrame]:
-        """Anti-part branches for the preserved side P, counting matches
-        in the build side B.  ``opairs`` is (probe_expr, build_expr);
-        ``pad(pcols)`` lays the preserved columns + NULLs out in the
-        view's lcols+rcols order."""
-        knames = [f"__k{i}" for i in range(len(opairs))]
-        out: list[DataFrame] = []
-
-        def _bkeys(df: DataFrame, extra: list) -> DataFrame:
-            return df.select(
-                *[F.expr(be).alias(k) for (_, be), k in zip(opairs, knames)], *extra
+        def proj(df: DataFrame, extra: list[str]) -> DataFrame:
+            df = df.alias(name)
+            if pred and tag == "r":
+                df = df.filter(pred)
+            return df.selectExpr(
+                *[f"{q(name)}.{q(c)} AS `__{tag}{i}`" for i, c in enumerate(cols)],
+                *[f"{e} AS `__k{n}`" for n, e in enumerate(exprs)],
+                *extra,
             )
 
-        # term 1: dP rows with no match in B' = B ∪ dB  (m'(key) = 0)
-        if dP is not None:
-            dp_keys = dP.alias(pname).select(
-                *[F.expr(pe).alias(k) for (pe, _), k in zip(opairs, knames)]
-            ).distinct()
-            b_prime_keys = _bkeys(B.alias(bname), [F.lit(1).alias("__w")])
-            if dB is not None:
-                b_prime_keys = b_prime_keys.unionByName(
-                    _bkeys(dB.alias(bname), [F.col(wb).alias("__w")])
-                )
-            m_pos = (
-                b_prime_keys.join(bc(dp_keys), on=knames, how="leftsemi")
-                .groupBy(*knames)
-                .agg(F.sum("__w").alias("__m"))
-                .filter(F.col("__m") > 0)
-                .alias("__mp")
-            )
-            anti_cond = None
-            for (pe, _), k in zip(opairs, knames):
-                c = F.expr(pe) == F.col(f"__mp.{k}")
-                anti_cond = c if anti_cond is None else (anti_cond & c)
-            t1 = dP.alias(pname).join(bc(m_pos), on=anti_cond, how="left_anti")
-            out.append(
-                t1.select(
-                    *pad([F.col(f"{pname}.{c}") for c in P.columns]),
-                    F.col(wp).alias(_SIGN),
-                )
-            )
-
-        # term 2: existing P rows whose key's match count crosses zero.
-        # Affected keys ⊆ dB keys; old counts come from B semi-filtered
-        # by the broadcast dB key set.  gain (0 → >0) retracts NULL rows
-        # (−1), loss (>0 → 0) emits them (+1).
-        if dB is not None:
-            db_key_dm = (
-                _bkeys(dB.alias(bname), [F.col(wb).alias("__w")])
-                .groupBy(*knames)
-                .agg(F.sum("__w").alias("__dm"))
-            )
-            m_old = (
-                _bkeys(B.alias(bname), [])
-                .join(bc(db_key_dm.select(*knames)), on=knames, how="leftsemi")
-                .groupBy(*knames)
-                .agg(F.count(F.lit(1)).alias("__mold"))
-            )
-            flips = (
-                db_key_dm.join(m_old, on=knames, how="left")
-                .selectExpr(*[q(k) for k in knames], colops.flip_case(-1))
-                .filter("`__flip` IS NOT NULL")
-                .alias("__fl")
-            )
-            flip_cond = None
-            for (pe, _), k in zip(opairs, knames):
-                c = F.expr(pe) == F.col(f"__fl.{k}")
-                flip_cond = c if flip_cond is None else (flip_cond & c)
-            t2 = P.alias(pname).join(bc(flips), on=flip_cond, how="inner")
-            out.append(
-                t2.select(
-                    *pad([F.col(f"{pname}.{c}") for c in P.columns]),
-                    F.col("__fl.__flip").alias(_SIGN),
-                )
-            )
-        return out
-
-    # L is preserved in both LEFT and FULL; R too under FULL.  The
-    # matched branches and each preserved side's anti terms are mutually
-    # independent constructions — build them CONCURRENTLY (pin.build_all,
-    # the §2.6 overlap applied to the planning prologue itself); the
-    # flattened order below matches the serial construction exactly.
-    thunks = [
-        *inner_thunks,
-        lambda: _anti(
-            lname, L, dl, wl, rname, R, dr, wr, pairs,
-            lambda pcols: [*pcols, *null_r],
-        ),
-    ]
-    if full:  # R is preserved too
-        rpairs = [(be, pe) for (pe, be) in pairs]
-        thunks.append(
-            lambda: _anti(
-                rname, R, dr, wr, lname, L, dl, wl, rpairs,
-                lambda pcols: [*null_l, *pcols],
-            )
-        )
-    branches = [b for part in build_all(*thunks) for b in part]
-
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.union(b)  # positional: every branch is lcols + rcols + _SIGN
+        try:
+            delta = proj(get_delta(name), [q(MULT_COL)])
+        except IVMError:
+            delta = None
+        out.append((proj(get_table(name), []), delta))
     return out
 
 
@@ -1190,6 +1074,15 @@ def _old_left(view: ViewDef, get_table: Callable[[str], DataFrame], upto: int) -
     return acc
 
 
+def _null_row(df: DataFrame, cols: list[str], alias: str | None = None) -> DataFrame:
+    """A BROADCAST single-row relation of ``df``'s ``cols`` as typed
+    NULLs, aliased ``alias``: crossJoined onto a branch it NULL-pads
+    those columns, and qualified references through the alias still
+    resolve in later join conditions."""
+    nr = df.sparkSession.range(1).selectExpr(*colops.null_lit_exprs(df, cols))
+    return F.broadcast(nr.alias(alias) if alias else nr)
+
+
 def _fold_suffix(
     view: ViewDef,
     get_table: Callable[[str], DataFrame],
@@ -1215,12 +1108,11 @@ def _fold_suffix(
     - the ΔX-side terms fold as LEFT (a ΔX row matches R or carries NULL
       padding, exactly as recomputation would), and
     - R-preserved rows flip where their key's match count in the
-      composed left crosses zero: Δm per key from ΔX (all branches),
-      m_old by probing the OLD composed left (:func:`_old_left`) with
-      the broadcast Δ-key set — the left chain is scanned narrowly,
-      never shuffled; gains retract the NULL-padded R row (−1), losses
-      emit it (+1).  The flip branch NULL-pads every left column and
-      keeps folding through the remaining suffix like any other branch.
+      composed left crosses zero — ``countjoin.key_crossings`` over ΔX
+      (all branches) against the OLD composed left (:func:`_old_left`);
+      gains retract the NULL-padded R row, losses emit it.  The flip
+      branch NULL-pads every left column and keeps folding through the
+      remaining suffix like any other branch.
 
     Restriction: the FULL condition must be a conjunctive equi-join, and
     (because ΔX columns may already be flattened) its left key
@@ -1276,63 +1168,37 @@ def _fold_suffix(
         for b in branches:
             keys = b.select(
                 *[F.expr(pe).alias(kn) for (pe, _), kn in zip(pairs, knames)],
-                F.col(_SIGN).alias("__w"),
+                F.col(_SIGN),
             )
             dm = keys if dm is None else dm.unionByName(keys)
-        dm = dm.groupBy(*knames).agg(F.sum("__w").alias("__dm"))
         # the old composed left carries the ORIGINAL qualified columns —
         # flattened/renamed left key names must be translated back for
         # the probe (old_left_map: flat name -> qualified original)
         omap = old_left_map or {}
-        m_old = (
-            _old_left(view, get_table, k)
-            .select(
-                *[
-                    F.expr(omap.get(pe.strip(), pe)).alias(kn)
-                    for (pe, _), kn in zip(pairs, knames)
-                ]
-            )
-            .join(bc(dm.select(*knames)), on=knames, how="leftsemi")
-            .groupBy(*knames)
-            .agg(F.count(F.lit(1)).alias("__mold"))
+        old = _old_left(view, get_table, k).select(
+            *[
+                F.expr(omap.get(pe.strip(), pe)).alias(kn)
+                for (pe, _), kn in zip(pairs, knames)
+            ]
         )
-        flips = (
-            dm.join(m_old, on=knames, how="left")
-            .selectExpr(*[q(k) for k in knames], colops.flip_case(-1))
-            .filter("`__flip` IS NOT NULL")
-            .alias("__fl")
-        )
+        flips = cj.key_crossings(dm, old, _SIGN).alias("__fl")
         flip_cond = None
         for (_, be), kn in zip(pairs, knames):
             c = F.expr(be) == F.col(f"__fl.{kn}")
             flip_cond = c if flip_cond is None else flip_cond & c
+        # a key ENTERING the matched set retracts the NULL-padded R row
         t_flip = (
             R.alias(j.table)
             .join(bc(flips), on=flip_cond, how="inner")
-            .withColumn(_SIGN, F.col("__fl.__flip"))
+            .withColumn(_SIGN, -F.col("__fl.__flip"))
             .drop("__flip", *knames)
         )
-        ss = R.sparkSession
         bare = [c for t, c in left_refs if t is None]
         if bare:
-            ref_schema = branches[0].schema
-            nr = ss.range(1).select(
-                *[F.lit(None).cast(ref_schema[c].dataType).alias(c) for c in bare]
-            )
-            t_flip = t_flip.crossJoin(F.broadcast(nr))
+            t_flip = t_flip.crossJoin(_null_row(branches[0], bare))
         for tname in dict.fromkeys(t for t, _ in left_refs if t):
             tdf = get_table(tname)
-            nr = (
-                ss.range(1)
-                .select(
-                    *[
-                        F.lit(None).cast(tdf.schema[c].dataType).alias(c)
-                        for c in tdf.columns
-                    ]
-                )
-                .alias(tname)
-            )
-            t_flip = t_flip.crossJoin(F.broadcast(nr))
+            t_flip = t_flip.crossJoin(_null_row(tdf, tdf.columns, tname))
         # build the fold condition from the parsed pairs with explicit
         # plan binding: a flattened branch exposes bare left columns, and
         # when R shares the name (gk = g.gk) a textual F.expr(j.on) is
@@ -1406,23 +1272,17 @@ def _chain_single_delta(
     as the recomputed view would.  Δ(P ∘_i Ti) by join_i's kind:
 
     - inner: linear in Ti → the single branch P ⋈ ΔTi.
-    - left: P ⋈ ΔTi plus the anti part — P rows whose join-key match
-      count in Ti crosses zero gain (+1) or lose (−1) their NULL-padded
-      row.  Match counts depend only on Ti, so the flip-key computation
-      is identical to the two-table rule's (see _outer_join_delta).
-    - semi/anti: membership-only — Ti contributes no columns, so ΔV is
-      exactly the P rows whose match count crosses zero: semi gains emit
-      (+1) and losses retract (−1); anti is the complement (signs flip).
-      Same flip machinery, no NULL padding, no inner branch.
-    - full: the left-join terms (inner branch + P-preserved flips) plus
-      the Ti-preserved term — ΔTi rows whose key matches nothing in P
-      carry their own NULL-padded prefix row in/out with their sign (P
-      is unchanged, so Ti-side membership can't flip, only arrive/leave
-      with ΔTi itself).  P is probed by a broadcast key set, never
-      shuffled.  A FULL join in the PREFIX is fine (the prefix is an
-      unchanged relation); a FULL join in the SUFFIX hands the flattened
-      branches to _fold_suffix, which adds the R-preserved flip terms
-      at each FULL position.
+    - left / semi / anti: P is unchanged, so only the countjoin.py
+      term 2 remains beside P ⋈ ΔTi (left only) — P rows whose key's
+      match count in Ti crosses zero (``countjoin.key_crossings``) gain
+      or lose their NULL-padded (left), semi or anti row.
+    - full: the left terms plus the Ti-preserved term — ΔTi rows whose
+      key matches nothing in P carry their own NULL-padded prefix row
+      in/out with their sign (P is unchanged, so Ti-side membership
+      can't flip, only arrive/leave with ΔTi itself).  A FULL join in
+      the PREFIX is fine (the prefix is an unchanged relation); a FULL
+      join in the SUFFIX hands the flattened branches to _fold_suffix,
+      which adds the R-preserved flip terms at each FULL position.
 
     Scale shape: P and Ti are never shuffled — ΔTi and the flip-key set
     are BROADCAST; the only aggregations are over O(|Δ| + affected
@@ -1498,58 +1358,25 @@ def _chain_single_delta(
             R_m = R.alias(rname).filter(F.expr(pred))
             dR_m = dR.alias(rname).filter(F.expr(pred))
         knames = [f"__k{n}" for n in range(len(pairs))]
-        db_key_dm = (
-            dR_m.alias(rname)
-            .select(
-                *[F.expr(be).alias(k) for (_, be), k in zip(pairs, knames)],
-                F.col(_SIGN).alias("__w"),
-            )
-            .groupBy(*knames)
-            .agg(F.sum("__w").alias("__dm"))
-        )
-        m_old = (
-            R_m.alias(rname)
-            .selectExpr(*[f"{be} AS {q(k)}" for (_, be), k in zip(pairs, knames)])
-            .join(bc(db_key_dm.select(*knames)), on=knames, how="leftsemi")
-            .groupBy(*knames)
-            .agg(F.count(F.lit(1)).alias("__mold"))
-        )
-        flips = (
-            db_key_dm.join(m_old, on=knames, how="left")
-            .selectExpr(*[q(k) for k in knames], colops.flip_case(-1))
-            .filter("`__flip` IS NOT NULL")
-            .alias("__fl")
-        )
+        kexprs = [f"{be} AS {q(k)}" for (_, be), k in zip(pairs, knames)]
+        flips = cj.key_crossings(
+            dR_m.alias(rname).selectExpr(*kexprs, _SIGN),
+            R_m.alias(rname).selectExpr(*kexprs),
+            _SIGN,
+        ).alias("__fl")
         flip_cond = None
         for (pe, _), k in zip(pairs, knames):
             c = F.expr(pe) == F.col(f"__fl.{k}")
             flip_cond = c if flip_cond is None else (flip_cond & c)
         matched = P.join(bc(flips), on=flip_cond, how="inner")
+        # a key ENTERING Ti's matched set retracts the NULL-padded row
+        # (LEFT/FULL) or the anti row, and emits the semi row
+        sign = F.col("__fl.__flip") if join_i.how == "semi" else -F.col("__fl.__flip")
+        t2 = matched.withColumn(_SIGN, sign).drop("__flip", *knames)
         if join_i.how in ("left", "full"):
-            # NULL-padded Ti columns carried by a BROADCAST single-NULL-row
-            # relation aliased as Ti, so qualified suffix conditions resolve
-            null_row = (
-                R.sparkSession.range(1)
-                .select(
-                    *[
-                        F.lit(None).cast(R.schema[c].dataType).alias(c)
-                        for c in R.columns
-                    ]
-                )
-                .alias(rname)
-            )
-            t2 = (
-                matched.withColumn(_SIGN, F.col("__fl.__flip"))
-                .drop("__flip", *knames)
-                .crossJoin(F.broadcast(null_row))
-            )
-        else:
-            # flip convention above: gain → −1, loss → +1 (the NULL-row /
-            # complement sign).  That IS the anti-join sign; semi negates.
-            sign = F.col("__fl.__flip")
-            if join_i.how == "semi":
-                sign = -sign
-            t2 = matched.withColumn(_SIGN, sign).drop("__flip", *knames)
+            # NULL-padded Ti columns, aliased as Ti so qualified suffix
+            # conditions resolve
+            t2 = t2.crossJoin(_null_row(R, R.columns, rname))
         branches.append(t2)
 
     if join_i.how == "full":
@@ -1577,17 +1404,7 @@ def _chain_single_delta(
         # relation per prefix table, so qualified suffix conditions resolve
         for tname in dict.fromkeys(t for t, _ in prefs):
             tdf = get_table(tname)
-            nr = (
-                tdf.sparkSession.range(1)
-                .select(
-                    *[
-                        F.lit(None).cast(tdf.schema[c].dataType).alias(c)
-                        for c in tdf.columns
-                    ]
-                )
-                .alias(tname)
-            )
-            t3 = t3.crossJoin(F.broadcast(nr))
+            t3 = t3.crossJoin(_null_row(tdf, tdf.columns, tname))
         branches.append(t3)
 
     # fold the suffix.  Up to the first FULL (if any) every join is
@@ -1672,42 +1489,22 @@ def _semi_anti_delta(
     view: ViewDef,
     get_table: Callable[[str], DataFrame],
     get_delta: Callable[[str], DataFrame],
-    broadcast_deltas: bool,
     anti: bool = False,
 ) -> DataFrame:
     """Δ(L ⋉ R) / Δ(L ▷ R) for a two-table semi/anti join with deltas on
-    either or both sides.  A row's membership depends only on its key's
-    match count m(k) = |σ_k R|:
-
-        semi:  ΔV = Σ_{ℓ∈ΔL} w_ℓ·[m'(k)>0] + Σ_{ℓ∈L} w_ℓ·([m'(k)>0]−[m(k)>0])
-        anti:  same with [m=0] — the complement, so term 2 flips sign.
-
-    Term 2 is non-zero only where the zero-status flips, and flip keys
-    are a subset of ΔR's keys.  Scale shape (same as the outer-join anti
-    part): R' is semi-joined against BROADCAST ΔL keys, R against
-    BROADCAST ΔR keys, L inner-joined against the BROADCAST flip set —
-    the 100-TB sides are scanned, never shuffled; every shuffle is a
-    match-count aggregation over O(|Δ| + affected keys).
+    either or both sides: a binding of the equi pairs onto the
+    counting-join rule (countjoin.semi_anti_delta over countjoin.equi).
 
     The join condition must be a conjunction of equi pairs plus optional
     R-local predicates (the EXISTS-subquery shape: ``l_orderkey =
     o_orderkey AND l_commitdate < l_receiptdate``); R-local conjuncts
-    are pushed into R and ΔR before counting.
+    are pushed into R and ΔR before counting.  A two-sided non-equi
+    conjunct takes the general theta algebra.
     """
     join = view.joins[0]
     lname, rname = view.tables
-    L, R = get_table(lname), get_table(rname)
-    lcols, rcols = L.columns, R.columns
-    bc = F.broadcast if broadcast_deltas else (lambda df: df)
-    wl, wr = f"__w_{lname}", f"__w_{rname}"
-
-    def _maybe_delta(name: str, w: str) -> DataFrame | None:
-        try:
-            return _signed_delta(get_delta(name), w)
-        except IVMError:
-            return None
-
-    dl, dr = _maybe_delta(lname, wl), _maybe_delta(rname, wr)
+    lcols = get_table(lname).columns
+    rcols = get_table(rname).columns
 
     pairs: list[tuple[str, str]] = []
     rlocal: list[str] = []
@@ -1737,92 +1534,14 @@ def _semi_anti_delta(
         raise IVMError(
             f"semi/anti-join maintenance needs at least one equi pair in {join.on!r}"
         )
-    if rlocal:
-        pred = " AND ".join(f"({c})" for c in rlocal)
-        R = R.alias(rname).filter(F.expr(pred))
-        if dr is not None:
-            dr = dr.alias(rname).filter(F.expr(pred))
-
-    knames = [f"__k{i}" for i in range(len(pairs))]
-
-    def _bkeys(df: DataFrame, extra: list) -> DataFrame:
-        return df.select(
-            *[F.expr(be).alias(k) for (_, be), k in zip(pairs, knames)], *extra
-        )
-
-    branches: list[DataFrame] = []
-
-    # term 1: ΔL rows, membership judged against m' over R' = R ∪ ΔR
-    if dl is not None:
-        dp_keys = (
-            dl.alias(lname)
-            .selectExpr(*[f"{pe} AS {q(k)}" for (pe, _), k in zip(pairs, knames)])
-            .distinct()
-        )
-        b_prime_keys = _bkeys(R.alias(rname), [F.lit(1).alias("__w")])
-        if dr is not None:
-            b_prime_keys = b_prime_keys.unionByName(
-                _bkeys(dr.alias(rname), [F.col(wr).alias("__w")])
-            )
-        m_pos = (
-            b_prime_keys.join(bc(dp_keys), on=knames, how="leftsemi")
-            .groupBy(*knames)
-            .agg(F.sum("__w").alias("__m"))
-            .filter(F.col("__m") > 0)
-            .alias("__mp")
-        )
-        cond = None
-        for (pe, _), k in zip(pairs, knames):
-            c = F.expr(pe) == F.col(f"__mp.{k}")
-            cond = c if cond is None else (cond & c)
-        t1 = dl.alias(lname).join(
-            bc(m_pos), on=cond, how="left_anti" if anti else "left_semi"
-        )
-        branches.append(
-            t1.selectExpr(
-                *[f"{q(lname)}.{q(c)}" for c in lcols], f"{q(wl)} AS {_SIGN}"
-            )
-        )
-
-    # term 2: existing L rows whose key's match count crosses zero.
-    # semi: gain (0 → >0) emits them (+1), loss retracts (−1); anti is
-    # the complement, so the signs flip.
-    if dr is not None:
-        db_key_dm = (
-            _bkeys(dr.alias(rname), [F.col(wr).alias("__w")])
-            .groupBy(*knames)
-            .agg(F.sum("__w").alias("__dm"))
-        )
-        m_old = (
-            _bkeys(R.alias(rname), [])
-            .join(bc(db_key_dm.select(*knames)), on=knames, how="leftsemi")
-            .groupBy(*knames)
-            .agg(F.count(F.lit(1)).alias("__mold"))
-        )
-        flips = (
-            db_key_dm.join(m_old, on=knames, how="left")
-            .selectExpr(
-                *[q(k) for k in knames], colops.flip_case(-1 if anti else 1)
-            )
-            .filter("`__flip` IS NOT NULL")
-            .alias("__fl")
-        )
-        cond = None
-        for (pe, _), k in zip(pairs, knames):
-            c = F.expr(pe) == F.col(f"__fl.{k}")
-            cond = c if cond is None else (cond & c)
-        t2 = L.alias(lname).join(bc(flips), on=cond, how="inner")
-        branches.append(
-            t2.selectExpr(
-                *[f"{q(lname)}.{q(c)}" for c in lcols],
-                f"`__fl`.`__flip` AS {_SIGN}",
-            )
-        )
-
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.union(b)  # positional: every branch is lcols + _SIGN
-    return out
+    (lp, dlp), (rp, drp) = _equi_operands(
+        view, get_table, get_delta, pairs, rlocal
+    )
+    dv = cj.semi_anti_delta(lp, rp, dlp, drp, cj.equi(len(pairs)), anti)
+    return dv.selectExpr(
+        *[f"`__l{i}` AS {q(c)}" for i, c in enumerate(lcols)],
+        f"CASE WHEN {q(MULT_COL)} THEN 1 ELSE -1 END AS {_SIGN}",
+    ).alias(lname)
 
 
 def _group_cols(view: ViewDef):
@@ -1999,6 +1718,23 @@ def _split_cmp(conj: str) -> tuple[str, str, str] | None:
     return lhs, op, rhs
 
 
+_BETWEEN_RX = re.compile(r"\s+between\s+", re.IGNORECASE)
+_AND_WORD_RX = re.compile(r"\s+and\s+", re.IGNORECASE)
+
+
+def _between_cmps(conj: str) -> list[tuple[str, str, str]] | None:
+    """``p BETWEEN lo AND hi`` as its two comparisons ``p >= lo`` and
+    ``p <= hi`` (depth 0, quotes respected; NOT BETWEEN excluded), else
+    None."""
+    parts = _split_depth0(conj, _BETWEEN_RX)
+    if len(parts) != 2 or re.search(r"\bnot$", parts[0], re.IGNORECASE):
+        return None
+    bounds = _split_depth0(parts[1], _AND_WORD_RX)
+    if len(bounds) != 2:
+        return None
+    return [(parts[0], ">=", bounds[0]), (parts[0], "<=", bounds[1])]
+
+
 def _expr_side(
     e: str, lnames: list[str], lcols: list[str], rname: str, rcols: list[str]
 ) -> str | None:
@@ -2036,16 +1772,16 @@ def _classify_theta(
     for conj in _split_conjuncts(on):
         if _equi_pairs(conj, lnames, rname, lcols, rcols):
             return None
-        cmp_ = _split_cmp(conj)
-        if not cmp_:
-            continue
-        lhs, op, rhs = cmp_
-        sl = _expr_side(lhs, lnames, lcols, rname, rcols)
-        sr = _expr_side(rhs, lnames, lcols, rname, rcols)
-        if sl == "l" and sr == "r":
-            ineqs.append((lhs, op, rhs))
-        elif sl == "r" and sr == "l":
-            ineqs.append((rhs, _FLIP_OP[op], lhs))
+        for cmp_ in _between_cmps(conj) or [_split_cmp(conj)]:
+            if not cmp_:
+                continue
+            lhs, op, rhs = cmp_
+            sl = _expr_side(lhs, lnames, lcols, rname, rcols)
+            sr = _expr_side(rhs, lnames, lcols, rname, rcols)
+            if sl == "l" and sr == "r":
+                ineqs.append((lhs, op, rhs))
+            elif sl == "r" and sr == "l":
+                ineqs.append((rhs, _FLIP_OP[op], lhs))
     if not ineqs:
         return None
     rng = None

@@ -60,6 +60,7 @@ PKG = "ivm_extension_spark"
 ENGINE_CORE = (
     f"{PKG}/engine.py",
     f"{PKG}/operators/rewrite.py",
+    f"{PKG}/operators/countjoin.py",
     f"{PKG}/operators/merge.py",
     f"{PKG}/operators/auxstate.py",
     f"{PKG}/plans/sqlfront.py",
@@ -69,9 +70,8 @@ MODULE_MAP: dict[str, tuple[str, ...]] = {
     "theta": (
         f"{PKG}/operators/ineqjoin.py",
         f"{PKG}/operators/thetajoin.py",
-        f"{PKG}/operators/countjoin.py",
     ),
-    "range": (f"{PKG}/operators/rangejoin.py", f"{PKG}/operators/countjoin.py"),
+    "range": (f"{PKG}/operators/rangejoin.py",),
     "asof": (f"{PKG}/operators/asof.py",),
     "window": (f"{PKG}/operators/windowcdc.py",),
     "skew": (f"{PKG}/operators/skew.py",),

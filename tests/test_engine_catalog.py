@@ -1,5 +1,8 @@
 """Catalog surface: list/drop lifecycle and referential guards."""
 
+import threading
+import time
+
 import pytest
 
 from ivm_extension_spark import IVMEngine
@@ -346,3 +349,64 @@ def test_merge_views_concurrent_equals_sequential(spark):
 
     with pytest.raises(IVMError, match="distinct"):
         conc.merge_views(["sums", "sums"])
+
+
+def test_merge_views_failure_waits_for_slow_sibling(spark):
+    eng = IVMEngine(spark)
+    done = threading.Event()
+
+    def merge_view(name):
+        if name == "bad":
+            raise IVMError("injected merge failure")
+        time.sleep(0.5)
+        done.set()
+
+    eng.merge_view = merge_view
+    with pytest.raises(IVMError, match="injected"):
+        eng.merge_views(["bad", "slow"])
+    assert done.is_set()
+
+
+def test_merge_views_parallelism_bounds_spawned_workers(spark, monkeypatch):
+    from ivm_extension_spark.operators import pin
+
+    monkeypatch.setattr(pin, "_POOL", pin._SubmitPool())
+    eng = IVMEngine(spark)
+    eng.merge_view = lambda name: time.sleep(0.05) or name
+    names = [f"v{i}" for i in range(6)]
+    assert eng.merge_views(names, parallelism=2) == names
+    assert pin._POOL._spawned <= 2
+
+
+def test_merge_and_advance_failed_merge_waits_for_and_drops_the_fold(
+    spark, monkeypatch
+):
+    from ivm_extension_spark import engine as engmod
+
+    eng = IVMEngine(spark)
+    eng.register_table("t", spark.createDataFrame([(1, 10)], "k int, v int"))
+    eng.register_delta(
+        "t", spark.createDataFrame([(1, 5, True)], f"k int, v int, {MULT_COL} boolean")
+    )
+    folded = []
+
+    class SlowFold:
+        def localCheckpoint(self, eager):
+            time.sleep(0.5)
+            folded.append(spark.range(3).localCheckpoint(eager=True))
+            return folded[-1]
+
+    monkeypatch.setattr(
+        engmod.merge_ops, "apply_delta_to_table", lambda base, delta: SlowFold()
+    )
+
+    def merge_view(name):
+        raise IVMError("injected merge failure")
+
+    eng.merge_view = merge_view
+    with pytest.raises(IVMError, match="injected"):
+        eng.merge_and_advance("v", "t")
+    assert folded, "returned before the base fold finished"
+    rdd = folded[0]._jdf.queryExecution().analyzed().rdd()
+    assert not rdd.getStorageLevel().isValid()  # checkpoint blocks dropped
+    assert "t" in eng._deltas  # world unchanged: the fold was not applied

@@ -13,6 +13,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from ivm_extension_spark.operators.ineqjoin import (
+    _BIN,
+    _binned,
     ineq_full_join,
     ineq_full_join_delta,
     ineq_join,
@@ -105,6 +107,21 @@ def test_domain_guard_raises(spark):
     r = spark.createDataFrame([(1, 10.0)], "rid int, y double")
     with pytest.raises(Exception, match="dyadic domain"):
         ineq_join(l, r, "x", "y", "<", bin_width=1.0, max_bins=64).collect()
+
+
+def test_binned_rejects_existing_bin_column(spark):
+    # a second bin column would silently shadow the first
+    df = spark.createDataFrame([(1.0, 0)], f"x double, `{_BIN}` bigint")
+    with pytest.raises(ValueError, match="reserved bin column"):
+        _binned(df, "x", 1.0, 6, 0.0)
+
+
+@pytest.mark.parametrize("bin_width, origin", [(float("inf"), 0.0), (1.0, float("nan"))])
+def test_binned_rejects_non_finite_axis(spark, bin_width, origin):
+    # inf/nan would otherwise reach the SQL text as `infD` / `nanD`
+    df = spark.createDataFrame([(1.0,)], "x double")
+    with pytest.raises(ValueError, match="finite"):
+        _binned(df, "x", bin_width, 6, origin)
 
 
 @pytest.mark.parametrize("op", ["<", ">="])

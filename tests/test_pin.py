@@ -74,3 +74,46 @@ def test_build_all_runs_thunks_concurrently():
     t0 = time.perf_counter()
     assert build_all(t1, t2) == [1, 2]
     assert time.perf_counter() - t0 < 5
+
+
+def test_build_all_waits_for_every_sibling_before_raising():
+    # a failed fan-out must not leave work running: the slow sibling has
+    # finished by the time the error reaches the caller, and of two
+    # failures the first in INPUT order wins (not the first in time)
+    done = threading.Event()
+
+    def slow():
+        time.sleep(0.5)
+        done.set()
+
+    def late_fail():
+        time.sleep(0.2)
+        raise ValueError("first in input order")
+
+    def early_fail():
+        raise KeyError("first in time")
+
+    with pytest.raises(ValueError, match="first in input order"):
+        build_all(late_fail, early_fail, slow)
+    assert done.is_set()
+
+
+def test_build_all_limit_caps_running_thunks_and_workers(monkeypatch):
+    from ivm_extension_spark.operators import pin
+
+    monkeypatch.setattr(pin, "_POOL", pin._SubmitPool())
+    lock = threading.Lock()
+    running = peak = 0
+
+    def thunk():
+        nonlocal running, peak
+        with lock:
+            running += 1
+            peak = max(peak, running)
+        time.sleep(0.05)
+        with lock:
+            running -= 1
+
+    build_all(*[thunk] * 6, limit=2)
+    assert peak <= 2
+    assert pin._POOL._spawned <= 2

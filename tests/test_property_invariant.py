@@ -89,14 +89,10 @@ def test_ivm_invariant(spark, base, inserts, delete_mask, shape):
 
 # -- join views: deltas on both sides, shared join-column name -------------
 
-fact_row_st = st.tuples(
-    st.integers(min_value=-20, max_value=20),
-    st.integers(min_value=0, max_value=3),  # k: join key, small domain
-)
-dim_row_st = st.tuples(
-    st.integers(min_value=0, max_value=3),
-    st.sampled_from(["a", "b", "c"]),
-)
+# join keys: small domain, NULL included (a NULL key never matches)
+key_st = st.one_of(st.none(), st.integers(min_value=0, max_value=3))
+fact_row_st = st.tuples(st.integers(min_value=-20, max_value=20), key_st)
+dim_row_st = st.tuples(key_st, st.sampled_from(["a", "b", "c"]))
 
 JOIN_SHAPES = [
     "SELECT name, sum(a) AS s, count(a) AS n FROM f JOIN d ON f.k = d.k "
@@ -124,6 +120,13 @@ JOIN_SHAPES = [
     # through the value multiset (all-NULL groups re-derive to NULL)
     "SELECT a, min(name) AS lo, max(name) AS hi FROM f LEFT JOIN d "
     "ON f.k = d.k GROUP BY a",
+    # expression key: the equi pair is an expression, not a bare column
+    "SELECT a, name FROM f LEFT JOIN d ON f.k + 1 = d.k",
+    # EXISTS with an R-local conjunct pushed into d and Δd before counting
+    "SELECT a FROM f WHERE EXISTS (SELECT 1 FROM d WHERE f.k = d.k "
+    "AND d.name <> 'c')",
+    # FULL over a shared key name: both sides' k stay addressable
+    "SELECT f.k AS fk, d.k AS dk, a, name FROM f FULL JOIN d ON f.k = d.k",
 ]
 
 

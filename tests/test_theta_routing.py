@@ -263,3 +263,45 @@ def test_split_cmp_and_classify():
         )
         is None
     )
+
+
+def test_between_band_routes_banded_like_its_comparison_spelling(
+    spark, monkeypatch
+):
+    # BETWEEN is the SQL spelling of a band; big×big it must take the
+    # banded plan, not a nested loop over 12k × 12k rows
+    monkeypatch.setattr(rewrite, "_ROUTE_MIN_ROWS", 10_000)
+    from ivm_extension_spark.operators import rangejoin
+
+    calls = []
+    real = rangejoin.range_join
+    monkeypatch.setattr(
+        rangejoin, "range_join", lambda *a, **kw: calls.append(1) or real(*a, **kw)
+    )
+    n = 12_000
+    tabs = {
+        "pts": spark.range(n).selectExpr("id AS k", "CAST(id AS DOUBLE) AS price"),
+        "iv": spark.range(n).selectExpr(
+            "id AS iid", "CAST(id AS DOUBLE) - 0.25 AS lo", "CAST(id AS DOUBLE) AS hi"
+        ),
+    }
+
+    def view(cond):
+        return ViewDef(
+            name="v",
+            source="pts",
+            select=(("k", "k"), ("iid", "iid")),
+            joins=(JoinSpec("iv", cond, "inner"),),
+        )
+
+    out = compute_view(view("pts.price BETWEEN iv.lo AND iv.hi"), tabs.__getitem__)
+    assert calls, "BETWEEN band was not routed to range_join"
+    plan = physical(out)
+    assert "BroadcastNestedLoop" not in plan, plan
+    assert "CartesianProduct" not in plan, plan
+    exp = compute_view(
+        view("pts.price >= iv.lo AND pts.price <= iv.hi"), tabs.__getitem__
+    )
+    got = norm(out.collect())
+    assert len(got) == n
+    assert got == norm(exp.collect())
