@@ -552,7 +552,7 @@ def _merge_bag(
     if strategy != "patch":
         counts = (
             s.unionByName(d)
-            .groupBy(*cols)
+            .groupBy(*colsq)
             .agg(F.sum(_SIGN).alias("__ivm_n"))
             .filter(F.col("__ivm_n") > 0)
         )
@@ -562,7 +562,7 @@ def _merge_bag(
     from ivm_extension_spark.operators import colops
 
     dcnt = (
-        d.groupBy(*cols)
+        d.groupBy(*colsq)
         .agg(F.sum(_SIGN).alias("__ivm_n"))
         .localCheckpoint(eager=True)
     )
@@ -572,10 +572,10 @@ def _merge_bag(
     untouched = base.join(F.broadcast(probe), cond, "left_anti")
     touched = base.join(F.broadcast(probe), cond, "left_semi")
     recounted = (
-        touched.groupBy(*cols)
+        touched.groupBy(*colsq)
         .agg(F.count(F.lit(1)).alias("__ivm_n"))
         .unionByName(dcnt)
-        .groupBy(*cols)
+        .groupBy(*colsq)
         .agg(F.sum("__ivm_n").alias("__ivm_n"))
         .filter(F.col("__ivm_n") > 0)
     )

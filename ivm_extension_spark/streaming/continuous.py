@@ -125,6 +125,12 @@ class StreamingViewMaintainer:
             # between the two leaves the marker on the previous snapshot,
             # so recovery replays this batch into that older state —
             # never a double-apply, never a loss, never a torn marker.
+            # Each batch saves into its own new directory, so engine.save
+            # skips its torn-save sentinel: a crash mid-save leaves no
+            # catalog there, and IVMEngine.load refuses it.  The commit
+            # costs one write per state/aux relation plus one for the
+            # catalog.  (A replay that finds its crashed attempt's
+            # complete save writes the sentinel over it first.)
             import json
             import os
             import shutil

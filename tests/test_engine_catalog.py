@@ -410,3 +410,50 @@ def test_merge_and_advance_failed_merge_waits_for_and_drops_the_fold(
     rdd = folded[0]._jdf.queryExecution().analyzed().rdd()
     assert not rdd.getStorageLevel().isValid()  # checkpoint blocks dropped
     assert "t" in eng._deltas  # world unchanged: the fold was not applied
+
+
+def test_merge_view_failure_waits_for_touched_bucket_probe(spark, tmp_path, monkeypatch):
+    """A store-backed merge that fails after starting its touched-bucket
+    collect returns only once that collect has finished, and leaves the
+    store version and the state as they were."""
+    from ivm_extension_spark import engine as engmod
+    from ivm_extension_spark.sources.lakehouse import LakehouseStore
+
+    store = LakehouseStore(spark, str(tmp_path / "lake"), n_buckets=4)
+    eng = IVMEngine(spark, state_store=store)
+    eng.register_table("t", spark.createDataFrame([(1, 10), (2, 5)], "k int, v int"))
+    eng.create_immv("v", sql="SELECT k, sum(v) AS s FROM t GROUP BY k")
+    eng.register_delta(
+        "t", spark.createDataFrame([(1, 5, True)], f"k int, v int, {MULT_COL} boolean")
+    )
+    eng.ivm_upsert("v")
+    version, before = store.current_version("v"), sorted(eng.read_view("v").collect())
+
+    finished = []
+    real_submit = engmod.pin.submit
+
+    def slow_submit(fn):
+        def run():
+            time.sleep(0.5)
+            try:
+                return fn()
+            finally:
+                finished.append(fn)
+
+        return real_submit(run)
+
+    def boom(name):
+        raise IVMError("injected aux failure")
+
+    monkeypatch.setattr(engmod.pin, "submit", slow_submit)
+    monkeypatch.setattr(eng, "_advance_aux", boom)
+    with pytest.raises(IVMError, match="injected"):
+        eng.merge_view("v")
+    assert finished, "returned before the touched-bucket probe finished"
+    assert store.current_version("v") == version
+    assert sorted(eng.read_view("v").collect()) == before
+
+    monkeypatch.undo()
+    merged = sorted(eng.merge_view("v").collect())
+    eng.apply_delta("t")
+    assert merged == sorted(eng.full_refresh("v").collect())

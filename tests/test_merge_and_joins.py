@@ -603,6 +603,17 @@ def test_left_join_aggregate_counts_null_matches(spark):
     assert ("b", 0, 1) in merged and ("e", 0, 1) in merged and ("c", 1, 1) in merged
 
 
+@pytest.mark.parametrize("strategy", ["shuffle", "patch"])
+def test_unaliased_qualified_select_item_merges(spark, strategy):
+    """An unaliased ``cust.ck`` keeps the output name ``cust.ck``; the bag
+    merge must group by it as one quoted name, not as qualifier ``cust`` plus
+    column ``ck``."""
+    eng = lj_engine(spark, dord=[(14, 3, True), (12, 2, False)])
+    eng.merge_strategy = strategy
+    lj_check(eng, "SELECT cust.ck, seg, ok FROM cust LEFT JOIN orders ON cust.ck = ck2")
+    assert eng.stats("v")["last_merge_strategy"] == strategy
+
+
 def test_left_join_right_delta_only(spark):
     lj_check(
         lj_engine(spark, dord=[(20, 3, True), (12, 2, False), (14, 1, True)]),

@@ -354,3 +354,42 @@ def test_lakehouse_manifest_row_counts(spark, tmp_path):
 
     store.compact("by_cust")
     assert store.row_count("by_cust") == store.read("by_cust").count()
+
+
+def test_save_writes_catalog_without_python_rows_and_sentinel_only_over_a_save(
+    spark, tmp_path, monkeypatch
+):
+    """save builds both catalog rows JVM-side (no ``createDataFrame``),
+    and writes the in-progress sentinel only when the path already holds
+    a catalog: a save into a fresh path runs exactly one job fewer."""
+    eng = IVMEngine(spark)
+    eng.register_table("t", spark.createDataFrame([(1, 2), (1, 3)], "k int, v int"))
+    eng.create_immv("v", sql="SELECT k, sum(v) AS s, min(v) AS lo FROM t GROUP BY k")
+    sc = spark.sparkContext
+
+    def save_jobs(path, group):
+        sc.setJobGroup(group, "save")
+        try:
+            eng.save(str(path))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def no_python_rows(*a, **kw):
+        raise AssertionError("save must not build rows through createDataFrame")
+
+    monkeypatch.setattr(spark, "createDataFrame", no_python_rows)
+    fresh = save_jobs(tmp_path / "fresh", "save-fresh")
+    over = save_jobs(tmp_path / "fresh", "save-over")  # now an existing save
+    assert over == fresh + 1
+    monkeypatch.undo()
+
+    import pyarrow.parquet as pq
+
+    (part,) = (tmp_path / "fresh" / "catalog").glob("*.parquet")  # one file
+    schema = pq.read_schema(part)
+    assert schema.names == ["catalog_json"]
+    assert schema.field("catalog_json").nullable  # the layout load reads
+    b = IVMEngine.load(spark, str(tmp_path / "fresh"), tables={"t": eng.table("t")})
+    assert rows(b.read_view("v")) == rows(eng.read_view("v")) == [(1, 5, 2)]

@@ -507,3 +507,120 @@ def test_interval_join_stream_stream(spark, tmpdir):
     )
     assert got == exp
     assert len(got) == 8
+
+
+# -- crash windows of the per-batch commit (state_dir) ----------------------
+#
+# The maintainer commits a batch by saving the engine into a fresh
+# engine-<batch_id> directory and then renaming the marker onto that id.
+# A crash anywhere in between must leave the marker on the previous
+# snapshot, and replaying the batch into it must give the recompute.
+
+CRASH_BASE = [(1, "x", "p"), (2, "y", "q"), (3, "x", "r")]
+CRASH_BATCHES = [
+    [(4, "x", "s", True), (2, "y", "q", False)],
+    [(5, "y", "t", True), (1, "x", "p", False)],  # deletes x's minimum
+]
+CRASH_FINAL = [("x", 7, 2, 3), ("y", 5, 1, 5)]
+
+
+def _crash_batch_one_then_replay(spark, tmpdir, monkeypatch, inject, check_crash):
+    import json
+
+    from pyspark.errors import StreamingQueryException
+
+    sd, ck, src = f"{tmpdir}/state", f"{tmpdir}/ckpt", f"{tmpdir}/deltas"
+
+    def land(batch):
+        spark.createDataFrame(batch, DELTA_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+
+    def run(engine):
+        m = StreamingViewMaintainer(engine, "v", "t", state_dir=sd)
+        stream = spark.readStream.schema(DELTA_SCHEMA).parquet(src)
+        m.start(stream, checkpoint_dir=ck).awaitTermination(120)
+        return m
+
+    def marker():
+        with open(f"{sd}/last_batch_id.json") as f:
+            return json.load(f)["last_batch_id"]
+
+    eng = IVMEngine(spark)
+    eng.register_table("t", spark.createDataFrame(CRASH_BASE, schema=SCHEMA))
+    eng.create_immv(
+        "v", sql="SELECT b, sum(a) AS s, count(*) AS n, min(a) AS lo FROM t GROUP BY b"
+    )
+    land(CRASH_BATCHES[0])
+    run(eng)
+    assert marker() == 0
+    base0 = eng.table("t")  # the world engine-0 reflects
+
+    land(CRASH_BATCHES[1])
+    inject()
+    with pytest.raises(StreamingQueryException, match="injected"):
+        run(eng)
+    monkeypatch.undo()
+    assert marker() == 0  # the commit point never moved
+    check_crash(f"{sd}/engine-1", base0)
+
+    restored = IVMEngine.load(spark, f"{sd}/engine-0", tables={"t": base0})
+    m = run(restored)  # the checkpoint re-delivers batch 1
+    assert m.last_batch_id == 1 and marker() == 1
+    got = rows(restored.read_view("v"))
+    assert got == rows(restored.full_refresh("v")) == CRASH_FINAL
+
+
+def test_crash_in_final_catalog_write_replays_from_previous_snapshot(
+    spark, tmpdir, monkeypatch
+):
+    real = IVMEngine._write_catalog
+
+    def failing_final_catalog(self, path, text):
+        if '"in_progress"' not in text:
+            raise RuntimeError("injected catalog write failure")
+        real(self, path, text)
+
+    def check_crash(snap, base0):
+        import os
+
+        from pyspark.errors import AnalysisException
+
+        # state written, catalog missing: load refuses the snapshot
+        assert os.path.isdir(f"{snap}/state/v")
+        assert not os.path.exists(f"{snap}/catalog")
+        with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+            IVMEngine.load(spark, snap, tables={"t": base0})
+
+    _crash_batch_one_then_replay(
+        spark,
+        tmpdir,
+        monkeypatch,
+        lambda: monkeypatch.setattr(IVMEngine, "_write_catalog", failing_final_catalog),
+        check_crash,
+    )
+
+
+def test_crash_between_save_and_marker_replays_without_double_apply(
+    spark, tmpdir, monkeypatch
+):
+    import os
+
+    real_replace = os.replace
+
+    def failing_marker_rename(src, dst, *a, **kw):
+        if str(dst).endswith("last_batch_id.json"):
+            raise RuntimeError("injected crash before the marker rename")
+        return real_replace(src, dst, *a, **kw)
+
+    def check_crash(snap, base0):
+        # the batch-1 snapshot is complete but uncommitted
+        assert os.path.exists(f"{snap}/catalog")
+
+    _crash_batch_one_then_replay(
+        spark,
+        tmpdir,
+        monkeypatch,
+        lambda: monkeypatch.setattr(os, "replace", failing_marker_rename),
+        check_crash,
+    )
