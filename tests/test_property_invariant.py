@@ -177,7 +177,7 @@ def test_ivm_invariant_join_views(
     assert merged == truth, (fact, dim, f_delta, d_delta, shape)
 
 
-# -- chains (3 tables): delta on a single non-leftmost table ---------------
+# -- chains (3 tables): deltas on any non-empty subset of the tables -------
 
 g_row_st = st.tuples(
     st.integers(min_value=10, max_value=12),
@@ -189,8 +189,25 @@ dim3_row_st = st.tuples(
     st.integers(min_value=10, max_value=12),
 )
 
+# the same rows under key columns renamed apart (fk, dk, dgk, gk): theta
+# maintenance needs unique column names across the joined tables
+RENAMED_SCHEMAS = (
+    "a int, fk int",
+    "dk int, name string, dgk int",
+    "gk int, label string",
+)
+RENAMED_SHAPES = (
+    # FULL leading the chain, a LEFT join after it
+    "SELECT a, name, label FROM f FULL JOIN d ON fk = dk "
+    "LEFT JOIN g ON dgk = gk",
+    # theta (non-equi) LEFT position followed by an equi LEFT join
+    "SELECT a, name, label FROM f LEFT JOIN d ON fk < dk "
+    "LEFT JOIN g ON dgk = gk",
+)
+CHAIN_SCHEMAS = ("a int, k int", "k int, name string, gk int", "gk int, label string")
+
 CHAIN_SHAPES = [
-    # delta lands on d (middle) or g (last) — _chain_single_delta both ways
+    # deltas on f (leftmost), d (middle), g (last) or several at once
     "SELECT a, name, label FROM f LEFT JOIN d ON f.k = d.k "
     "LEFT JOIN g ON d.gk = g.gk",
     "SELECT a, name, label FROM f JOIN d ON f.k = d.k "
@@ -210,17 +227,17 @@ CHAIN_SHAPES = [
     "SELECT name, count(*) AS n FROM f JOIN d ON f.k = d.k "
     "WHERE EXISTS (SELECT 1 FROM g WHERE g.gk = d.gk AND g.label = 'p') "
     "GROUP BY name",
-    # FULL at the chain tail: delta on g takes the full-position rule
-    # (left-like terms + Ti-preserved NULL-padded prefix term); delta on
-    # d puts FULL in the SUFFIX — _fold_suffix adds the g-preserved flip
-    # terms over the flattened Δ(f⋈Δd) branches
+    # FULL at the chain tail: a delta on g counts both preserved sides;
+    # a delta on f or d meets FULL in the suffix, whose g-preserved rows
+    # flip where their key's match count in f⋈d crosses zero
     "SELECT a, name, label FROM f JOIN d ON f.k = d.k "
     "FULL JOIN g ON d.gk = g.gk",
+    *RENAMED_SHAPES,
 ]
 
 
 @settings(
-    max_examples=10,
+    max_examples=12,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
 )
@@ -228,42 +245,42 @@ CHAIN_SHAPES = [
     fact=st.lists(fact_row_st, min_size=0, max_size=6),
     dim=st.lists(dim3_row_st, min_size=0, max_size=4),
     dim2=st.lists(g_row_st, min_size=0, max_size=3),
+    ins_f=st.lists(fact_row_st, min_size=0, max_size=2),
     ins=st.lists(dim3_row_st, min_size=0, max_size=3),
     ins2=st.lists(g_row_st, min_size=0, max_size=2),
     del_mask=st.lists(st.booleans(), min_size=4, max_size=4),
-    which=st.sampled_from(["d", "g"]),
+    which=st.sampled_from(["f", "d", "g", "fd", "fg", "dg", "fdg"]),
     shape=st.sampled_from(CHAIN_SHAPES),
 )
 def test_ivm_invariant_chain_dim_delta(
-    spark, fact, dim, dim2, ins, ins2, del_mask, which, shape
+    spark, fact, dim, dim2, ins_f, ins, ins2, del_mask, which, shape
 ):
+    schemas = RENAMED_SCHEMAS if shape in RENAMED_SHAPES else CHAIN_SCHEMAS
     eng = IVMEngine(spark)
-    eng.register_table("f", spark.createDataFrame(fact, schema="a int, k int"))
-    eng.register_table(
-        "d", spark.createDataFrame(dim, schema="k int, name string, gk int")
-    )
-    eng.register_table(
-        "g", spark.createDataFrame(dim2, schema="gk int, label string")
-    )
-    if which == "d":
-        delta = [(*r, True) for r in ins] + [
-            (*r, False) for r, m in zip(dim, del_mask) if m
-        ]
-        schema = "k int, name string, gk int, _duckdb_ivm_multiplicity boolean"
-    else:
-        delta = [(*r, True) for r in ins2] + [
-            (*r, False) for r, m in zip(dim2, del_mask) if m
-        ]
-        schema = "gk int, label string, _duckdb_ivm_multiplicity boolean"
-    eng.register_delta(which, spark.createDataFrame(delta, schema))
+    deltas = {}
+    for t, base, new, schema in zip(
+        "fdg", (fact, dim, dim2), (ins_f, ins, ins2), schemas
+    ):
+        eng.register_table(t, spark.createDataFrame(base, schema=schema))
+        if t in which:
+            deltas[t] = [(*r, True) for r in new] + [
+                (*r, False) for r, m in zip(base, del_mask) if m
+            ]
+            eng.register_delta(
+                t,
+                spark.createDataFrame(
+                    deltas[t], f"{schema}, _duckdb_ivm_multiplicity boolean"
+                ),
+            )
 
     eng.create_immv("v", sql=shape)
     eng.ivm_upsert("v")
     merged = rows(eng.merge_view("v"))
 
-    eng.apply_delta(which)
+    for t in which:
+        eng.apply_delta(t)
     truth = rows(eng.full_refresh("v"))
-    assert merged == truth, (fact, dim, dim2, delta, which, shape)
+    assert merged == truth, (fact, dim, dim2, deltas, which, shape)
 
 
 # -- patch merge ≡ shuffle merge under random deltas -----------------------
