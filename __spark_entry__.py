@@ -339,8 +339,9 @@ def _q_ivm_merge_rollup_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_ivm_merge_chain_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 3-table LEFT-join chain with the delta on the MIDDLE (dimension)
-    # table — rewrite._chain_single_delta: the unchanged prefix is the
-    # "L" of the two-table rule, the unchanged suffix folds in linearly
+    # table — one counting step of rewrite._fold_joins at the customer
+    # position (old prefix from compute_view), the deltaless suffix folds
+    # in linearly
     eng = _engine(spark, sf_dir, deltas=("customer",))
     eng.create_immv(
         "v",
@@ -355,7 +356,7 @@ def _q_ivm_merge_chain_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_ivm_merge_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     # FULL OUTER projection view, deltas on both sides: deleting a
     # customer orphans its orders into NULL-left rows, and vice versa —
-    # both anti directions of rewrite._outer_join_delta exercised
+    # both anti directions of the FULL counting step exercised
     eng = _engine(spark, sf_dir, deltas=("orders", "customer"))
     eng.create_immv(
         "v",
@@ -370,7 +371,8 @@ def _q_ivm_semi_join_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ΔV of a projection EXISTS view (lowered to a semi join — nested
     # subqueries are rejected by the reference, README.md:36): membership
     # is [m(o_orderkey) > 0] over lineitem, so ΔV is the two counting
-    # terms of rewrite._semi_anti_delta, deltas on BOTH sides
+    # terms of the SEMI counting step (countjoin.semi_anti_delta), deltas
+    # on BOTH sides
     eng = _engine(spark, sf_dir, deltas=("orders", "lineitem"))
     eng.create_immv(
         "v",
@@ -590,7 +592,7 @@ def _q_ivm_merge_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_ivm_merge_chain_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # delta on the SEMI-position table of a 3-table chain (EXISTS over
     # lineitem): membership-flip rule — P rows enter/leave as their key's
-    # match count in lineitem' crosses zero (rewrite._chain_single_delta)
+    # match count in lineitem' crosses zero (rewrite._fold_joins)
     eng = _engine(spark, sf_dir, deltas=("lineitem",))
     eng.create_immv(
         "v",
@@ -637,8 +639,8 @@ def _q_ivm_merge_full_pos_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_ivm_merge_full_suffix_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # FULL OUTER in the SUFFIX of the delta position (the last chain
     # shape the engine used to reject): delta on customer, the FULL join
-    # against orders AFTER it gets its orders-preserved flip branches
-    # from rewrite._fold_suffix — match counts of the composed old
+    # against orders AFTER it is a FULL counting step with ΔX only — the
+    # orders-preserved rows flip on match counts of the composed old
     # prefix probed by broadcast Δ-keys, never shuffled
     eng = _engine(spark, sf_dir, deltas=("customer",))
     eng.create_immv(
@@ -690,10 +692,10 @@ def _q_ivm_merge_topn_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_ivm_merge_multi_delta_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # deltas on TWO tables of a left-outer chain in ONE batch — the
-    # sequential-worlds composition (rewrite._sequential_worlds_delta):
+    # deltas on TWO tables of a left-outer chain in ONE batch — each
+    # counting step of rewrite._fold_joins takes ΔX and ΔT together, so
     # one ivm_upsert covers what previously took a state-level
-    # decomposition; each step's world advances the prior delta lazily
+    # decomposition
     eng = _engine(spark, sf_dir, deltas=("customer", "orders"))
     eng.create_immv(
         "v",
@@ -1312,8 +1314,8 @@ def _theta_expr_lifecycle(spark: SparkSession, sf_dir: str, how: str) -> DataFra
 
 def _q_ivm_merge_theta_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theta at the LAST position of a 3-table chain, end-to-end through
-    the SQL front (rewrite._theta_chain_suffix_delta): the equi prefix
-    orders ⋈ customer composes with the two-relation theta rule against
+    the SQL front (rewrite._fold_joins): the equi prefix orders ⋈
+    customer composes with the broadcast-theta counting step against
     the rules dimension; deltas on BOTH the prefix fact table and the
     theta side.  The rules delta deletes 'mid'/'big' (most orders lose
     every match — mass NULL-pad crossings) and inserts 'low'."""
@@ -1343,8 +1345,8 @@ def _q_ivm_merge_theta_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_ivm_merge_theta_mid_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Theta at a MID-chain position (rewrite._theta_mid_chain_delta):
-    orders ⟕θ rules is the maintainable core (deltas on BOTH its sides),
+    """Theta at a MID-chain position (rewrite._fold_joins): orders ⟕θ
+    rules is a theta counting step (deltas on BOTH its sides),
     and the deltaless equi join to customer folds in linearly after it.
     Same rules delta as the other theta lifecycles: 'mid'/'big' deleted
     (mass NULL-pad crossings), 'low' inserted."""
@@ -1375,11 +1377,11 @@ def _q_ivm_merge_theta_mid_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_ivm_merge_theta_general_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theta LEFT at a mid-chain position followed by a FULL suffix join
-    AND suffix-table deltas (rewrite._theta_chain_general_delta — the
-    round-4 closure of the last theta chain rejection): the theta core
-    orders ⟕θ rules is virtualized as a single checkpointed relation
-    with its own exact delta (deltas on orders and the rules dim), and
-    the FULL join to customer — itself carrying a delta — is maintained
+    AND suffix-table deltas (rewrite._fold_joins — the round-4 closure
+    of the last theta chain rejection): the theta step orders ⟕θ rules
+    yields the exact delta of the checkpointed core (deltas on orders and
+    the rules dim), and the FULL join to customer — itself carrying a
+    delta — is maintained
     by the ordinary two-table outer rule over the virtual core.  The
     doubled join key makes both preserved directions real data (odd
     o_custkey orders never match; customers whose doubled key has no
@@ -1389,12 +1391,10 @@ def _q_ivm_merge_theta_general_chain(spark: SparkSession, sf_dir: str) -> DataFr
     A WHERE cannot prune the core below a FULL suffix (the σ-push gate),
     so the slice lives INSIDE the chain as a SEMI join against a
     one-row dim, where pruning is sound.  Mechanism note: the SEMI's
-    expression key (``o_orderkey % 32 = snum``) is itself classified as
-    a theta conjunct, so the rewrite virtualizes TWICE — the first core
-    is ``orders ⋉ thx_slices`` (4.7k rows, checkpointed) and the
-    LEFT-theta ⟕ rules core sits one recursion deeper; either way ΔB
-    stays proportional to the slice instead of O(|orders|), and the
-    chain exercises nested virtual cores ending in a FULL suffix."""
+    expression key (``o_orderkey % 32 = snum``) is an equi pair of
+    expressions, so ΔX after the SEMI step is the orders delta sliced
+    by a plain semi join, and the old prefix of every later step is
+    proportional to the slice instead of O(|orders|)."""
     eng = _engine(spark, sf_dir, deltas=("orders", "customer"))
     eng.register_table(
         "thx_slices", spark.createDataFrame([(0,)], "snum int")
@@ -4810,7 +4810,7 @@ def oracle_sql() -> dict[str, str]:
         # branch-exact Δ(O ⋉ L): membership is [m(o_orderkey) > 0] over
         # lineitem, so ΔV = ΔO rows judged against the NEW count m' plus
         # existing O rows whose key's zero-status flips (semi: gain +1,
-        # loss −1).  Mirrors rewrite._semi_anti_delta exactly.
+        # loss −1).  Mirrors countjoin.semi_anti_delta exactly.
         "ivm_semi_join_delta": f"""
             WITH dord AS (
                 SELECT o_orderkey, o_orderpriority,

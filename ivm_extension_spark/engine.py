@@ -79,12 +79,11 @@ def _qualify_partition_keys(qualify: str) -> list[str] | None:
 class IVMEngine:
     """Catalog + rewrite driver.  One engine per logical schema.
 
-    ``broadcast_deltas=True`` (default) broadcasts delta relations in
-    join branches — the IVM scale assumption is |ΔT| << |T|, which turns
-    every delta-join branch into a broadcast hash join (no shuffle of
-    the base fact table).  Disable for pathologically large deltas.
-    The counting-join rule behind LEFT/FULL/SEMI/ANTI joins
-    (operators/countjoin.py) always broadcasts its delta-derived sides.
+    Delta relations are broadcast in every join branch — the IVM scale
+    assumption is |ΔT| << |T|, which turns every delta-join branch into
+    a broadcast hash join (no shuffle of the base fact table).  The
+    counting-join rule behind LEFT/FULL/SEMI/ANTI joins
+    (operators/countjoin.py) broadcasts its delta-derived sides too.
 
     ``merge_strategy`` controls how grouped-aggregate state absorbs ΔV:
 
@@ -104,7 +103,6 @@ class IVMEngine:
     def __init__(
         self,
         spark: SparkSession,
-        broadcast_deltas: bool = True,
         merge_strategy: str = "auto",
         patch_min_state_rows: int = 1_000_000,
         keep_history: int = 0,
@@ -120,7 +118,6 @@ class IVMEngine:
         # each merge commits ONLY the touched buckets (MERGE INTO
         # emulation) instead of holding checkpoint blocks in the session
         self._state_store = state_store
-        self.broadcast_deltas = broadcast_deltas
         self.merge_strategy = merge_strategy
         self.patch_min_state_rows = patch_min_state_rows
         self._state_rows: dict[str, int] = {}  # measured post-merge (auto mode)
@@ -725,7 +722,7 @@ class IVMEngine:
             self._ensure_composite_delta(name)
         if name in self._union_branches:
             parts = [
-                delta_plan(b, self.table, self.delta, self.broadcast_deltas)
+                delta_plan(b, self.table, self.delta)
                 for b in self._union_branches[name]
                 if any(t in self._deltas for t in b.tables)
             ]
@@ -736,9 +733,7 @@ class IVMEngine:
             for p in parts[1:]:
                 out = out.unionByName(p)
             return out
-        return delta_plan(
-            self._iviews[name], self.table, self.delta, self.broadcast_deltas
-        )
+        return delta_plan(self._iviews[name], self.table, self.delta)
 
     def _materialized_delta(self, name: str, force: bool = False) -> DataFrame:
         """ΔV, materialized when that pays (reference parity: the pragma
@@ -805,8 +800,7 @@ class IVMEngine:
             # merge (a block-scan count, not a recompute).
             strategy = (
                 "patch"
-                if self.broadcast_deltas
-                and self._state_rows.get(name, 0) >= self.patch_min_state_rows
+                if self._state_rows.get(name, 0) >= self.patch_min_state_rows
                 else "shuffle"
             )
         st_fut = None
@@ -1024,12 +1018,10 @@ class IVMEngine:
     ) -> DataFrame:
         """Semi-join ``df`` against ``probe`` on ``keys`` with NULL-safe
         equality (rollup levels and NULL-valued group keys must match),
-        the probe broadcast when delta broadcasting is on."""
+        the probe broadcast."""
         from ivm_extension_spark.operators import colops
 
-        p = colops.renamed(probe, keys, "__cdc_pk_").distinct()
-        if self.broadcast_deltas:
-            p = F.broadcast(p)
+        p = F.broadcast(colops.renamed(probe, keys, "__cdc_pk_").distinct())
         return df.join(p, colops.ns_eq(keys, "__cdc_pk_"), "leftsemi")
 
     def _cdc_rank_filtered(self, name: str, vdef, dv: DataFrame) -> DataFrame:
@@ -1103,9 +1095,9 @@ class IVMEngine:
         All views merge against the PRE-delta base world (their delta
         rules require it), then the deltas are applied once.  Delta plans
         for every affected view are built up front, so a view whose shape
-        is rejected (multi-table deltas on an outer/semi/anti chain —
-        ``maintain()`` it individually, which decomposes) raises BEFORE
-        any state has advanced: the catalog is never left half-merged.
+        is rejected (e.g. a theta outer/semi/anti chain over tables that
+        share a column name) raises BEFORE any state has advanced: the
+        catalog is never left half-merged.
 
         Returns {view name -> new public view}.  USER cascades (views
         over a maintained view's snapshot) stay manual via
@@ -1195,7 +1187,7 @@ class IVMEngine:
         # one job where a checkpoint followed by a count would launch two
         # (the same fusing merge_view applies to the state checkpoint).
         da = auxstate.delta_aux(
-            vdef, self.table, self.delta, meta, self.broadcast_deltas
+            vdef, self.table, self.delta, meta
         ).localCheckpoint(eager=False)
         n_da = da.count()  # materializes the checkpoint
         # adaptive advance: the touched-key split (broadcast semi/anti,
@@ -1207,11 +1199,7 @@ class IVMEngine:
         # union + re-count.  Both counts are jobs over checkpointed
         # blocks — milliseconds, once per batch.
         state_n = self._aux_rows.get(name)
-        use_split = (
-            self.broadcast_deltas
-            and state_n is not None
-            and n_da * 16 <= state_n
-        )
+        use_split = state_n is not None and n_da * 16 <= state_n
         # lazy checkpoint + count: the staged-commit count is needed
         # anyway, so it doubles as the materializing action (one job)
         new_aux = auxstate.merge_aux(
@@ -1239,7 +1227,7 @@ class IVMEngine:
             )
         ]
         slice_aux = new_aux
-        if group_keys and self.broadcast_deltas:
+        if group_keys:
             # adaptive (same shape as the advance/merge policies): the
             # slice pays a broadcast semi join over the aux relation to
             # shrink the derive input — a clear win when the batch touches
@@ -1655,7 +1643,6 @@ class IVMEngine:
         spark: SparkSession,
         path: str,
         tables: dict[str, DataFrame | str],
-        broadcast_deltas: bool = True,
         merge_strategy: str = "auto",
     ) -> "IVMEngine":
         """Rebuild an engine from :meth:`save` output.  ``tables`` maps
@@ -1665,7 +1652,7 @@ class IVMEngine:
         metadata is re-derived from the schemas, not deserialized."""
         import json
 
-        eng = cls(spark, broadcast_deltas=broadcast_deltas, merge_strategy=merge_strategy)
+        eng = cls(spark, merge_strategy=merge_strategy)
         for t, src in tables.items():
             eng.register_table(t, src)
         row = spark.read.parquet(f"{path}/catalog").collect()[0]
@@ -1752,9 +1739,8 @@ class IVMEngine:
 
         This is ivm_upsert → merge_view → apply_delta per table for every
         shape the delta rules cover — including multi-table delta batches
-        on outer/semi/anti chains, which the rewrite itself decomposes
-        into sequential single-delta worlds (operators/rewrite.py,
-        ``_sequential_worlds_delta``).
+        on outer/semi/anti chains, which the rewrite folds in one ΔV
+        (operators/rewrite.py, ``_fold_joins``).
 
         Note this CONSUMES the deltas (bases advance, delta registrations
         clear), unlike ivm_upsert/merge_view which leave the base world

@@ -517,7 +517,6 @@ def chunk_minhash_delta_pairs(
     bands: int = 8,
     shingle_n: int = 3,
     seed: int = 42,
-    broadcast_deltas: bool = True,
     shingle_hash: str = "xxhash64",
     id_stride: int = 100_000,
 ) -> tuple[DataFrame, DataFrame]:
@@ -546,7 +545,7 @@ def chunk_minhash_delta_pairs(
     )
     return minhash_lsh_delta_pairs(
         state, chunked_delta, "cid", "chunk_text", num_hashes, bands,
-        shingle_n, seed, broadcast_deltas, shingle_hash,
+        shingle_n, seed, shingle_hash,
     )
 
 
@@ -559,7 +558,6 @@ def minhash_lsh_delta_pairs(
     bands: int = 32,
     shingle_n: int = 3,
     seed: int = 42,
-    broadcast_deltas: bool = True,
     shingle_hash: str = "xxhash64",
 ) -> tuple[DataFrame, DataFrame]:
     """INCREMENTAL LSH dedup — the candidate-pair CDC under a corpus
@@ -584,7 +582,6 @@ def minhash_lsh_delta_pairs(
     over matched rows, which is O(collisions with Δ)."""
     from ivm_extension_spark.operators.rewrite import MULT_COL
 
-    bc = F.broadcast if broadcast_deltas else (lambda df_: df_)
     ins_docs = delta_docs.filter(F.col(MULT_COL)).drop(MULT_COL)
     del_ids = (
         delta_docs.filter(~F.col(MULT_COL))
@@ -616,15 +613,15 @@ def minhash_lsh_delta_pairs(
     from ivm_extension_spark.operators import pin
 
     pin.build_all(state.count, dp.count)
-    dm = state.join(bc(del_ids), on="id", how="leftsemi").persist()
-    surv = state.join(bc(del_ids), on="id", how="left_anti")
+    dm = state.join(F.broadcast(del_ids), on="id", how="leftsemi").persist()
+    surv = state.join(F.broadcast(del_ids), on="id", how="left_anti")
 
     # retractions: (deleted × surviving) + (deleted × deleted, once)
-    retract = _band_pairs(bc(dm), surv, ordered=False).unionByName(
+    retract = _band_pairs(F.broadcast(dm), surv, ordered=False).unionByName(
         _band_pairs(dm, dm, ordered=True)
     )
     # additions: (inserted × survivors) + (inserted × inserted, once)
-    add = _band_pairs(bc(dp), surv, ordered=False).unionByName(
+    add = _band_pairs(F.broadcast(dp), surv, ordered=False).unionByName(
         _band_pairs(dp, dp, ordered=True)
     )
     cdc = retract.withColumn(MULT_COL, F.lit(False)).unionByName(

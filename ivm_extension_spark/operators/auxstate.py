@@ -197,12 +197,11 @@ def delta_aux(
     get_table: Callable[[str], DataFrame],
     get_delta: Callable[[str], DataFrame],
     meta: dict[str, tuple[str, T.DataType]],
-    broadcast_deltas: bool = True,
 ) -> DataFrame:
     """Signed change to the tagged aux multiset from the current delta
     tables — one pass over the delta source for ALL aux aggregates."""
     aggs = aux_aggregates(view)
-    src = _delta_source(view, get_table, get_delta, broadcast_deltas)
+    src = _delta_source(view, get_table, get_delta)
     if view.where:
         src = src.filter(F.expr(view.where))
     return _fold(_tagged_rows(src, _group_cols(view), aggs, meta, F.col(_SIGN)))

@@ -8,8 +8,8 @@ non-key ``b`` columns), exactly the pairs that satisfy the join
 condition, with ``broadcast`` ('left', 'right' or None) naming the side
 to broadcast — plus the ``left_on`` / ``right_on`` columns that fix a
 row's match set.  The families: :func:`equi` here (conjunctive equi
-pairs projected to ``__k…`` key columns — rewrite.py's LEFT/FULL/SEMI/
-ANTI bindings and chain positions), thetajoin.py (broadcast theta,
+pairs projected to ``__k…`` key columns — the equi steps of rewrite.py's
+join fold), thetajoin.py (broadcast theta,
 arbitrary condition), ineqjoin.py (dyadic bins, one-sided ``l.x <
 r.y``) and rangejoin.py (banded bins, point-in-interval).  Everything
 below is shared.
@@ -258,14 +258,6 @@ def _flips(
         delta = probe(_proj(preserved, kp).distinct(), delta, False)
     dm = delta.groupBy(*kp).agg(F.sum(w).alias("__dm")).filter(F.col("__dm") != 0)
     return _crossings(dm, probe(_proj(dm, kp), base, True), kp, m.null_safe)
-
-
-def key_crossings(delta: DataFrame, base: DataFrame, w: str) -> DataFrame:
-    """The :func:`equi` matcher's zero crossings for a rule that joins
-    them back onto its own preserved relation (rewrite.py's chain
-    positions): ``delta`` carries the ``__k…`` key columns and the
-    signed weight ``w``, ``base`` the OLD other side's ``__k…`` keys."""
-    return _flips(equi(len(base.columns)), None, delta, base, w, True)
 
 
 # ---------------------------------------------------------------- equi

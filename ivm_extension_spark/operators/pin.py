@@ -32,7 +32,9 @@ identical client threads point at a leak").  The pool below reuses
 idle workers LIFO (warm connection first) and spawns a new worker only
 when none is idle — submissions never queue behind a bounded worker
 count, so nested ``pin_all``/``build_all`` calls (a branch thunk that
-itself pins) cannot deadlock.  No local properties are set anywhere in
+itself pins) cannot deadlock.  A worker left idle for ``_IDLE_EXIT_S``
+exits, so the pool does not keep the size of its widest fan-out
+forever.  No local properties are set anywhere in
 this package, so worker reuse cannot leak job descriptions between
 callers.
 """
@@ -44,6 +46,11 @@ import threading
 from concurrent.futures import Future, wait
 
 from pyspark.sql import DataFrame
+
+
+# far longer than the gap between two micro-batches: a steady stream of
+# batches keeps reusing its warm workers
+_IDLE_EXIT_S = 300.0
 
 
 class _Worker:
@@ -58,7 +65,12 @@ class _Worker:
 
     def _loop(self, pool: "_SubmitPool") -> None:
         while True:
-            fn, fut = self.inbox.get()
+            try:
+                fn, fut = self.inbox.get(timeout=_IDLE_EXIT_S)
+            except queue.Empty:
+                if pool._retire(self):
+                    return
+                continue  # a submit popped this worker; its task is on the way
             try:
                 result, exc = fn(), None
             except BaseException as e:  # delivered to the waiter below
@@ -73,7 +85,8 @@ class _Worker:
 
 
 class _SubmitPool:
-    """Grow-on-demand, never-queueing pool of reusable daemon workers."""
+    """Grow-on-demand, never-queueing pool of reusable daemon workers;
+    ``_spawned`` counts every worker ever started."""
 
     def __init__(self) -> None:
         self._idle: "list[_Worker]" = []
@@ -96,6 +109,14 @@ class _SubmitPool:
     def _recycle(self, w: "_Worker") -> None:
         with self._lock:
             self._idle.append(w)
+
+    def _retire(self, w: "_Worker") -> bool:
+        """Drop an idle worker; False when a submit already popped it."""
+        with self._lock:
+            if w in self._idle:
+                self._idle.remove(w)
+                return True
+            return False
 
 
 _POOL = _SubmitPool()

@@ -9,10 +9,10 @@ r.cutoff * r.scale AND l.qty >= r.min_qty``).  This module's generator,
 :func:`theta_join`, joins on the condition itself; a row's match set is
 fixed by the columns the condition references (:func:`referenced_cols`,
 extended by any caller-supplied ``left_on``/``right_on``).  The SQL
-front routes here automatically: rewrite.py's two-table outer/semi/anti
-rules fall back to these operators when the condition yields no
-conjunctive equi pairs, and chains whose LAST join is theta compose the
-prefix delta with this rule (rewrite._theta_chain_suffix_delta).
+front routes here automatically: a join step of rewrite.py's
+left-deep fold (``rewrite._fold_joins``) whose condition is not a
+conjunction of equi pairs and right-local predicates binds
+:func:`matcher` onto the counting-join rule, at any chain position.
 
 Scale shape: there is no equi axis, so every theta probe is a
 BroadcastNestedLoopJoin — but in the delta rules the broadcast side is
@@ -127,7 +127,7 @@ def theta_join(
     )
 
 
-def _bind(
+def matcher(
     cond: str,
     left: DataFrame,
     right: DataFrame,
@@ -162,7 +162,7 @@ def theta_left_join(
 ) -> DataFrame:
     """LEFT OUTER theta join (countjoin.outer_join)."""
     return cj.outer_join(
-        left, right, _bind(cond, left, right, key_cols, left_on), full=False
+        left, right, matcher(cond, left, right, key_cols, left_on), full=False
     )
 
 
@@ -176,7 +176,7 @@ def theta_full_join(
 ) -> DataFrame:
     """FULL OUTER theta join (countjoin.outer_join)."""
     return cj.outer_join(
-        left, right, _bind(cond, left, right, key_cols, left_on, right_on),
+        left, right, matcher(cond, left, right, key_cols, left_on, right_on),
         full=True,
     )
 
@@ -190,7 +190,7 @@ def theta_semi_join(
 ) -> DataFrame:
     """LEFT SEMI theta join — EXISTS (countjoin.semi_anti_join)."""
     return cj.semi_anti_join(
-        left, right, _bind(cond, left, right, key_cols, left_on), anti=False
+        left, right, matcher(cond, left, right, key_cols, left_on), anti=False
     )
 
 
@@ -203,7 +203,7 @@ def theta_anti_join(
 ) -> DataFrame:
     """LEFT ANTI theta join — NOT EXISTS (countjoin.semi_anti_join)."""
     return cj.semi_anti_join(
-        left, right, _bind(cond, left, right, key_cols, left_on), anti=True
+        left, right, matcher(cond, left, right, key_cols, left_on), anti=True
     )
 
 
@@ -219,7 +219,7 @@ def theta_join_delta(
     (countjoin.inner_delta).  Deltas carry the bool multiplicity;
     output = joined columns + the multiplicity bool."""
     return cj.inner_delta(
-        left, right, d_left, d_right, _bind(cond, left, right, key_cols)
+        left, right, d_left, d_right, matcher(cond, left, right, key_cols)
     )
 
 
@@ -235,7 +235,7 @@ def theta_semi_join_delta(
     """Δ(L ⋉θ R) (countjoin.semi_anti_delta)."""
     return cj.semi_anti_delta(
         left, right, d_left, d_right,
-        _bind(cond, left, right, key_cols, left_on), anti=False,
+        matcher(cond, left, right, key_cols, left_on), anti=False,
     )
 
 
@@ -251,7 +251,7 @@ def theta_anti_join_delta(
     """Δ(L ▷θ R) (countjoin.semi_anti_delta)."""
     return cj.semi_anti_delta(
         left, right, d_left, d_right,
-        _bind(cond, left, right, key_cols, left_on), anti=True,
+        matcher(cond, left, right, key_cols, left_on), anti=True,
     )
 
 
@@ -267,7 +267,7 @@ def theta_left_join_delta(
     """Δ(L ⟕θ R) (countjoin.outer_delta)."""
     return cj.outer_delta(
         left, right, d_left, d_right,
-        _bind(cond, left, right, key_cols, left_on), full=False,
+        matcher(cond, left, right, key_cols, left_on), full=False,
     )
 
 
@@ -284,5 +284,5 @@ def theta_full_join_delta(
     """Δ(L ⟗θ R) (countjoin.outer_delta)."""
     return cj.outer_delta(
         left, right, d_left, d_right,
-        _bind(cond, left, right, key_cols, left_on, right_on), full=True,
+        matcher(cond, left, right, key_cols, left_on, right_on), full=True,
     )

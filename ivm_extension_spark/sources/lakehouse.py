@@ -234,7 +234,14 @@ class LakehouseStore:
             os.path.join(self._vdir(view), rel) for rel in m["buckets"].values()
         ]
         if not paths:
-            return self.spark.createDataFrame([], schema)
+            # every bucket deleted: an empty relation planned JVM-side
+            # (typed NULL columns over an empty range), not a local-RDD
+            # plan that goes through a Python worker
+            from ivm_extension_spark.operators.colops import q
+
+            return self.spark.range(0).selectExpr(
+                *[f"CAST(NULL AS {f.dataType.simpleString()}) AS {q(f.name)}" for f in schema]
+            )
         return self.spark.read.schema(schema).parquet(*paths)
 
     def bucket_files(self, view: str, version: int | None = None) -> dict[str, str]:

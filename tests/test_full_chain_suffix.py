@@ -4,11 +4,11 @@ documented rejection).
 The reference supports no joins at all (README.md:36); this engine's
 chain rule previously rejected FULL OUTER in the *suffix* of the delta
 position because the fold relies on left-linearity, and FULL preserves
-its right side too.  _fold_suffix closes that: at each suffix FULL the
-ΔX-side terms fold as LEFT, and the R-preserved rows flip where their
-key's match count in the composed OLD left crosses zero — Δm from the
-ΔX branches, m_old by probing the old left chain with the broadcast
-Δ-key set (the chain is scanned narrowly, never shuffled).
+its right side too.  Each suffix FULL is a counting step of its own
+(rewrite._fold_joins): the ΔX-side terms fold as LEFT, and the
+R-preserved rows flip where their key's match count in the composed OLD
+left crosses zero — Δm from ΔX, m_old by probing the old left chain with
+the broadcast Δ-key set (the chain is scanned narrowly, never shuffled).
 
 Every test merges the maintained view and compares against a full
 recomputation over the delta-applied base tables (the IVM invariant).
@@ -288,8 +288,8 @@ def test_qualified_conditions_survive_flattened_suffix(spark):
 def test_full_suffix_with_mid_chain_delta_and_shared_key_names(spark):
     """FULL in the SUFFIX with the delta on a MIDDLE table, where every
     join key shares its name across tables (f.k = d.k, d.gk = g.gk) —
-    the shape that forces unique-name flattening in the hand-off to
-    _fold_suffix (round-2 fix: previously rejected as ambiguous)."""
+    the shape that needs unique flat column names across the fold's
+    steps (round-2 fix: previously rejected as ambiguous)."""
     from pyspark.sql import functions as F
 
     for ddelta, gdelta in [

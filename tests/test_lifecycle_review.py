@@ -233,3 +233,33 @@ def test_stats_multilist_window_reports_base_table(spark):
         ),
     )
     assert eng.stats("w2")["pending_deltas"] == ["t"]
+
+
+def test_store_view_with_every_group_deleted_reads_without_local_rows(
+    spark, tmp_path, monkeypatch
+):
+    # a snapshot with no bucket files left is built JVM-side: no
+    # createDataFrame (a local-RDD plan through a Python worker)
+    store = LakehouseStore(spark, str(tmp_path / "store"), n_buckets=4)
+    eng = IVMEngine(spark, state_store=store)
+    eng.register_table("t", _base(spark, [(1, 10), (2, 20)]))
+    eng.create_immv("v", sql="SELECT k, sum(v) AS s FROM t GROUP BY k")
+    wipe = _delta(spark, [(1, 10, False), (2, 20, False)])
+    refill = _delta(spark, [(3, 7, True)])
+
+    def no_local_rows(*args, **kwargs):
+        raise AssertionError("createDataFrame called")
+
+    monkeypatch.setattr(type(spark), "createDataFrame", no_local_rows)
+    eng.register_delta("t", wipe)
+    eng.ivm_upsert("v")
+    assert rows(eng.merge_view("v")) == []
+    eng.apply_delta("t")
+    assert store.bucket_files("v") == {}
+    assert rows(eng.read_view("v")) == rows(eng.full_refresh("v")) == []
+
+    eng.register_delta("t", refill)
+    eng.ivm_upsert("v")
+    merged = rows(eng.merge_view("v"))
+    eng.apply_delta("t")
+    assert merged == rows(eng.full_refresh("v")) == [(3, 7)]

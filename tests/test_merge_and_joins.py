@@ -648,9 +648,9 @@ def test_left_join_chain_fact_delta(spark):
 
 
 def test_left_join_chain_dim_delta_maintained(spark):
-    # delta on the MIDDLE table of a 3-table left chain: handled by
-    # rewrite._chain_single_delta (prefix = two-table rule's L, suffix
-    # folds in linearly); insert + delete flip NULL padding both ways
+    # delta on the MIDDLE table of a 3-table left chain: one counting
+    # step of rewrite._fold_joins (old prefix as X, the suffix folds in
+    # linearly); insert + delete flip NULL padding both ways
     eng = lj_engine(spark, dord=[(20, 3, True), (10, 1, False), (11, 1, False)])
     eng.register_table(
         "seg_dim", spark.createDataFrame([("a", "A")], "sg string, nm string")
@@ -854,9 +854,8 @@ def test_theta_mid_chain_with_semi_suffix(spark):
 
 def test_theta_mid_chain_full_suffix_maintained(spark):
     # a FULL suffix join after a theta position is not linear in its
-    # left argument, so the linear fold cannot apply — the virtual-core
-    # rule (_theta_chain_general_delta) maintains it instead (round 4;
-    # this was the last documented theta rejection)
+    # left argument, so it is a counting step of its own after the
+    # theta step (round 4; this was the last documented theta rejection)
     merged = lj_check(
         _seg_engine(spark, dord=[(20, 3, True), (13, 99, False)]),
         "SELECT ck, seg, nm, ok FROM cust LEFT JOIN orders ON ck < ck2 "
@@ -1079,7 +1078,7 @@ def test_anti_join_theta_condition_maintained(spark):
 
 def test_semi_join_chain_dim_delta_maintained(spark):
     # delta on the semi-position table of a chain — previously rejected,
-    # now maintained via the membership-flip rule (_chain_single_delta)
+    # now maintained via the SEMI counting step's membership flips
     eng = lj_engine(spark, dord=[(20, 3, True), (10, 1, False), (11, 1, False)])
     eng.register_table(
         "seg_dim", spark.createDataFrame([("a", "A")], "sg string, nm string")
@@ -1352,7 +1351,7 @@ def test_rollup_count_distinct_rejected(spark):
 def test_semi_chain_position_delta_maintained(spark):
     # WHERE EXISTS lowers to a semi join appended after the inner join —
     # a 3-table chain with the delta on the SEMI position table.
-    # rewrite._chain_single_delta: membership flips only (no columns from
+    # rewrite._fold_joins: membership flips only (no columns from
     # the semi table): key gains matches → P row enters (+1), loses all
     # matches → row retracts (−1).
     eng = lj_engine(spark)
@@ -1476,8 +1475,8 @@ def test_full_outer_delta_position_in_chain_maintained(spark):
 
 def test_full_outer_in_suffix_now_maintained(spark):
     # a FULL join AFTER the delta position used to be rejected (the fold
-    # relied on left-linearity); _fold_suffix now adds the R-preserved
-    # flip branches, so this maintains and matches recomputation
+    # relied on left-linearity); the FULL counting step with ΔX adds the
+    # R-preserved flip branches, so this maintains and matches recomputation
     # (tests/test_full_chain_suffix.py covers the shape matrix)
     eng = lj_engine(spark)
     eng.register_table(

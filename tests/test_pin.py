@@ -117,3 +117,38 @@ def test_build_all_limit_caps_running_thunks_and_workers(monkeypatch):
     build_all(*[thunk] * 6, limit=2)
     assert peak <= 2
     assert pin._POOL._spawned <= 2
+
+
+def test_idle_workers_exit_and_the_pool_respawns(monkeypatch):
+    from ivm_extension_spark.operators import pin
+
+    monkeypatch.setattr(pin, "_IDLE_EXIT_S", 0.1)
+    pool = pin._SubmitPool()
+    assert pool.submit(lambda: 1).result(timeout=5) == 1
+    (w,) = pool._idle
+    w.thread.join(timeout=5)
+    assert not w.thread.is_alive()
+    assert pool._idle == []
+    # a later submission spawns a fresh worker; the count keeps every one
+    assert pool.submit(lambda: 2).result(timeout=5) == 2
+    assert pool._spawned == 2
+
+
+def test_idle_exit_does_not_race_a_submit(monkeypatch):
+    # submissions land right when idle workers time out: every task must
+    # still run — a worker that a submit popped must not exit
+    import sys
+
+    from ivm_extension_spark.operators import pin
+
+    monkeypatch.setattr(pin, "_IDLE_EXIT_S", 0.002)
+    pool = pin._SubmitPool()
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for _ in range(40):
+            futs = [pool.submit(lambda i=i: i) for i in range(8)]
+            assert [f.result(timeout=10) for f in futs] == list(range(8))
+            time.sleep(0.002)
+    finally:
+        sys.setswitchinterval(interval)

@@ -136,7 +136,7 @@ def test_semi_anti_delta_no_sort_merge(spark):
 
 
 def test_chain_dim_delta_no_sort_merge(spark):
-    # >2-table chain, delta on the middle dimension (_chain_single_delta):
+    # >2-table chain, delta on the middle dimension (one counting step):
     # prefix and suffix base tables are joined via broadcast only — the
     # delta and the flip-key set are the build sides; no shuffle-side join
     eng = entry._engine(spark, SF, deltas=("customer",))
@@ -158,7 +158,7 @@ def test_chain_dim_delta_no_sort_merge(spark):
 
 
 def test_suffix_full_flip_plan_broadcasts_never_sortmerges(spark):
-    """The suffix-FULL flip machinery (rewrite._fold_suffix) must touch
+    """The suffix-FULL counting step (rewrite._fold_joins) must touch
     the unchanged chain sides through broadcast joins only: ΔV for a
     chain whose delta position is followed by a FULL join plans with no
     SortMergeJoin and no nested loop; every shuffle is a (small)

@@ -232,6 +232,9 @@ CHAIN_SHAPES = [
     # flip where their key's match count in f⋈d crosses zero
     "SELECT a, name, label FROM f JOIN d ON f.k = d.k "
     "FULL JOIN g ON d.gk = g.gk",
+    # FULL leading the chain over tables that share their key names
+    "SELECT a, name, label FROM f FULL JOIN d ON f.k = d.k "
+    "LEFT JOIN g ON d.gk = g.gk",
     *RENAMED_SHAPES,
 ]
 

@@ -395,7 +395,7 @@ def test_streaming_left_join_view(spark, tmpdir):
 
 def test_streaming_chain_view_dim_delta(spark, tmpdir):
     """3-table LEFT-join chain maintained from the LAST dimension's delta
-    stream (rewrite._chain_single_delta under foreachBatch): batch 0
+    stream (rewrite._fold_joins under foreachBatch): batch 0
     retracts key 11's NULL padding when its match arrives, batch 1
     restores key 10's padding when its only match is deleted."""
     eng = IVMEngine(spark)

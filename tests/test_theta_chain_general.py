@@ -4,14 +4,10 @@ documented theta rejection).
 
 The reference supports no joins at all (README.md:36); this engine's
 theta chain rule previously required the suffix after a theta position
-to be FULL-free and deltaless (the linear fold of
-rewrite._theta_mid_chain_delta).  rewrite._theta_chain_general_delta
-closes that: the theta core (prefix ⊗θ C) is virtualized as a single
-flattened relation B whose exact delta comes from the theta chain
-rule, and the suffix is delegated to the ordinary chain delta rules by
-a recursive _delta_source call — FULL flip branches, single-delta
-folds and multi-delta sequential worlds all apply to B exactly as to
-any base table.
+to be FULL-free and deltaless.  The left-deep fold of rewrite._fold_joins
+closes that: the theta step yields the exact delta of the chain through
+the theta join, and every later join is one more counting step (or a
+plain join without a delta) over that prefix, FULL included.
 
 Every test merges the maintained view and compares against a full
 recomputation over the delta-applied base tables (the IVM invariant).
