@@ -179,9 +179,9 @@ def test_suffix_full_flip_plan_broadcasts_never_sortmerges(spark):
 
 
 def test_sequential_worlds_plan_no_nested_loop(spark):
-    """Multi-table deltas composed through sequential worlds: the
-    one-shot ΔV plan stays hash/broadcast-joined (the bag-apply advance
-    shuffles only the advanced table, never a cross product)."""
+    """Multi-table deltas in one left-deep fold (each counting step takes
+    ΔX and ΔT together): the one-shot ΔV plan stays hash/broadcast-joined,
+    never a cross product."""
     eng = entry._engine(spark, SF, deltas=("customer", "orders"))
     eng.create_immv(
         "v",
