@@ -102,19 +102,17 @@ def null_pad(df: DataFrame, other: DataFrame, key_cols) -> DataFrame:
     """Append ``other``'s non-key columns to ``df`` as typed NULLs (the
     preserved-side padding) in one select — the chatty form was a
     ``withColumn`` loop: one full analysis pass per padded column."""
-    pads = [
-        f"CAST(NULL AS {other.schema[c].dataType.simpleString()}) AS {q(c)}"
-        for c in other.columns
-        if c not in key_cols
-    ]
+    pads = null_lit_exprs(other, [c for c in other.columns if c not in key_cols])
     return df.selectExpr("*", *pads)
 
 
-def null_lit_exprs(side: DataFrame, cols) -> list[str]:
-    """``CAST(NULL AS type) AS c`` strings for ``cols`` of ``side`` —
-    for callers splicing typed null pads into their own selectExpr."""
+def null_lit_exprs(side, cols) -> list[str]:
+    """``CAST(NULL AS type) AS c`` strings for ``cols`` of ``side`` (a
+    DataFrame, or a StructType when there is no frame yet) — for callers
+    splicing typed null pads into their own selectExpr."""
+    schema = side.schema if isinstance(side, DataFrame) else side
     return [
-        f"CAST(NULL AS {side.schema[c].dataType.simpleString()}) AS {q(c)}"
+        f"CAST(NULL AS {schema[c].dataType.simpleString()}) AS {q(c)}"
         for c in cols
     ]
 

@@ -52,7 +52,6 @@ from pyspark.sql import DataFrame, functions as F
 from ivm_extension_spark.operators import colops, countjoin as cj
 from ivm_extension_spark.operators.colops import q
 from ivm_extension_spark.operators.pin import pin_all
-from ivm_extension_spark.operators.thetajoin import sub_outside_literals
 from ivm_extension_spark.plans.sqlfront import _split_conjuncts
 from ivm_extension_spark.plans.viewdef import Aggregate, ViewDef
 
@@ -293,9 +292,47 @@ def _equi_pairs(
     return pairs or None
 
 
-# a column reference, optionally table-qualified (``f.k``) — never a
-# function name, a number or the field part of ``s.field``
-_REF_RX = re.compile(r"(?<![\w.])(?:(\w+)\s*\.\s*)?([A-Za-z_]\w*)(?![\w(])")
+# a column reference, optionally table-qualified (``f.k``, ``F.`k```) —
+# never a function name, a number or the field part of ``s.field``
+_NAME = r"(?:[A-Za-z_]\w*|`[^`]+`)"
+_REF_RX = re.compile(rf"(?<![\w.`])(?:({_NAME})\s*\.\s*)?({_NAME})(?![\w`]|\s*\()")
+# a bare word that names no column: a type (``CAST(x AS date)``), an
+# interval unit (``INTERVAL 1 day``, ``INTERVAL '1' DAY``), a typed
+# literal's prefix (``DATE '2024-01-01'``) or an expression keyword
+_NOT_REF_BEFORE = re.compile(r"(?:\bAS|(?<![\w.])\d[\w.]*|['\"])\s*$", re.I)
+_NOT_REF_AFTER = re.compile(r"\s*['\"]")
+_KEYWORDS = frozenset(
+    "and or not is null true false in like rlike ilike between case when "
+    "then else end distinct interval exists".split()
+)
+
+
+def _mask_literals(s: str) -> str:
+    """``s`` with the body of every '…' / "…" string literal blanked to
+    spaces (same length, backslash escapes honoured); backquoted
+    identifiers are kept, and a quote inside one opens no literal."""
+    out = list(s)
+    quote: str | None = None
+    i = 0
+    while i < len(s):
+        ch = s[i]
+        if quote:
+            if ch == quote:
+                quote = None
+            else:
+                out[i] = " "
+                if ch == "\\" and i + 1 < len(s):
+                    i += 1
+                    out[i] = " "
+        elif ch == "`":
+            j = s.find("`", i + 1)
+            i = len(s) if j < 0 else j
+        elif ch in ("'", '"'):
+            quote = ch
+        i += 1
+    return "".join(out)
+
+
 # a flat column name of the join fold (table position, column position)
 _FLAT_RX = re.compile(r"\b__c\d+_\d+\b")
 
@@ -342,7 +379,8 @@ def _fold_joins(
     where the step is ``countjoin.inner_delta``, ``outer_delta`` or
     ``semi_anti_delta`` over the equi pair generator (``countjoin.equi``,
     T-local conjuncts pushed into T_k and ΔT_k) or, for any other
-    condition, thetajoin's broadcast-theta matcher.  Without ΔT_k an
+    condition, thetajoin's broadcast-theta matcher (a side the condition
+    does not name gets one constant key).  Without ΔT_k an
     inner/left/semi/anti join is linear in its left side, so the step
     is the plain join ΔX_{k-1} ∘ T_k.  The OLD prefix X_{k-1} is
     ``compute_view`` of the truncated view (structured theta joins take
@@ -350,10 +388,11 @@ def _fold_joins(
     probes.
 
     Naming: every (table, column) gets a unique flat name ``__c{t}_{c}``
-    and each join condition is rewritten to flat names once, so steps
-    never depend on table qualifiers; the result gets them back through
-    an empty, optimized-away cross join of the visible tables that
-    heads a positional union.
+    and each join condition is rewritten to flat names once (references
+    resolved case-insensitively; string literals, types and interval
+    units left alone), so steps never depend on table qualifiers; the
+    result gets them back through an empty, optimized-away cross join
+    of the visible tables that heads a positional union.
 
     WHERE conjuncts over the prefix's columns alone filter X_{k-1} and
     ΔX_{k-1} when no FULL join follows (FULL pads the prefix columns of
@@ -373,21 +412,32 @@ def _fold_joins(
         return [i for i in seen if i <= pos]
 
     def to_flat(sql: str, scope: list[int]) -> str:
-        qual = {(tables[i], c): f for i in scope for c, f in zip(cols[i], flat[i])}
-        owners: dict[str, list[str]] = {}
+        # names resolve case-insensitively, as Spark resolves them
+        qual, owners = {}, {}
         for i in scope:
             for c, f in zip(cols[i], flat[i]):
-                owners.setdefault(c, []).append(f)
-
-        def sub(m: re.Match) -> str:
-            t, c = m.group(1), m.group(2)
+                qual[(tables[i].lower(), c.lower())] = f
+                owners.setdefault(c.lower(), []).append(f)
+        masked = _mask_literals(sql)
+        out, last = [], 0
+        for m in _REF_RX.finditer(masked):
+            t, c = (g and g.strip("`").lower() for g in m.groups())
             if t is not None and (t, c) in qual:
-                return qual[(t, c)]
-            name = t if t is not None else c  # bare, or ``col.field``
-            o = owners.get(name, [])
-            return o[0] + m.group(0)[len(name) :] if len(o) == 1 else m.group(0)
-
-        return sub_outside_literals(_REF_RX.pattern, sub, sql)
+                rep = qual[(t, c)]
+            elif t is None and (
+                c in _KEYWORDS
+                or _NOT_REF_BEFORE.search(masked, 0, m.start())
+                or _NOT_REF_AFTER.match(masked, m.end())
+            ):
+                continue
+            else:  # bare, or ``col.field``
+                o = owners.get(t if t is not None else c, [])
+                if len(o) != 1:
+                    continue
+                rep = o[0] + sql[m.end(1) if t is not None else m.end() : m.end()]
+            out.append(sql[last : m.start()] + rep)
+            last = m.end()
+        return "".join(out) + sql[last:]
 
     def renamed(df: DataFrame, i: int, *extra: str) -> DataFrame:
         return df.selectExpr(
@@ -434,8 +484,9 @@ def _fold_joins(
                 dX = dX.join(T, on=F.expr(cond), how=j.how).selectExpr(*keep)
             continue
 
-        if not both and j.how != "inner":
-            # no column of X in the condition: no match count to keep
+        if not both and j.how in ("semi", "anti"):
+            # a condition over T alone is a constant existence gate,
+            # which SEMI/ANTI maintenance does not take
             raise IVMError(
                 f"{j.how}-join maintenance needs a join condition over both "
                 f"sides, got {j.on!r}"
@@ -485,6 +536,14 @@ def _fold_joins(
             )
         else:
             m = tj.matcher(cond, X, T, ())
+            if not (m.kp_l and m.kp_r):
+                # a side the condition does not name: its rows share one
+                # match set, keyed by a constant
+                X, dX, T, dT = (
+                    None if d is None else d.selectExpr("*", "0 AS `__k0`")
+                    for d in (X, dX, T, dT)
+                )
+                m = tj.matcher(cond, X, T, ("__k0",))
         if j.how == "inner":
             dv = cj.inner_delta(X, T, dX, dT, m)
         elif j.how in ("left", "full"):

@@ -32,15 +32,16 @@ from pyspark.sql import DataFrame
 from ivm_extension_spark.operators import colops, countjoin as cj
 from ivm_extension_spark.operators.colops import q
 
-# single-quoted SQL string literals ('' = escaped quote): column-name
-# rewriting and reference detection must never look inside them — a
-# condition like ``tag = 'disc'`` must not have the literal mangled just
-# because a column named disc exists
-_LITERAL_RX = re.compile(r"'(?:[^']|'')*'")
+# SQL string literals, single- or double-quoted (a doubled quote or a
+# backslash escapes): column-name rewriting and reference detection must
+# never look inside them — a condition like ``tag = 'disc'`` or
+# ``tag = "disc"`` must not have the literal mangled just because a
+# column named disc exists
+_LITERAL_RX = re.compile(r"'(?:[^'\\]|\\.|'')*'|\"(?:[^\"\\]|\\.|\"\")*\"")
 
 
 def sub_outside_literals(pattern: str, repl: str, s: str) -> str:
-    """``re.sub`` applied only OUTSIDE single-quoted SQL string literals."""
+    """``re.sub`` applied only OUTSIDE SQL string literals."""
     out: list[str] = []
     last = 0
     for m in _LITERAL_RX.finditer(s):

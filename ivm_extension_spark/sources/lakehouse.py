@@ -237,11 +237,9 @@ class LakehouseStore:
             # every bucket deleted: an empty relation planned JVM-side
             # (typed NULL columns over an empty range), not a local-RDD
             # plan that goes through a Python worker
-            from ivm_extension_spark.operators.colops import q
+            from ivm_extension_spark.operators.colops import null_lit_exprs
 
-            return self.spark.range(0).selectExpr(
-                *[f"CAST(NULL AS {f.dataType.simpleString()}) AS {q(f.name)}" for f in schema]
-            )
+            return self.spark.range(0).selectExpr(*null_lit_exprs(schema, schema.names))
         return self.spark.read.schema(schema).parquet(*paths)
 
     def bucket_files(self, view: str, version: int | None = None) -> dict[str, str]:

@@ -884,6 +884,100 @@ def test_theta_last_duplicate_prefix_names_rejected(spark):
         eng.ivm_upsert("v")
 
 
+# f.a holds the value 'a' and g.date is a column named like a type: a
+# double-quoted literal, a typed literal or a CAST target that spells a
+# column name must stay what it is, and a qualified reference matches
+# its table and column case-insensitively
+FDG_SCHEMAS = {
+    "f": "k int, a string, v int",
+    "d": "dk int, tag string, w int",
+    "g": "gw int, gn string, date string",
+}
+FDG_ROWS = {
+    "f": [(1, "a", 10), (2, "b", 20), (3, "a", 30), (None, "c", 40)],
+    "d": [(1, "a", 100), (2, "x", 200), (4, "a", 400)],
+    "g": [(100, "p", "2024-03-01"), (200, "q", "2023-12-31"), (500, "r", "2024-05-05")],
+}
+FDG_DELTAS = {
+    "f": [(4, "a", 50, True), (1, "a", 10, False)],
+    "d": [(3, "a", 300, True), (2, "x", 200, False), (1, "b", 101, True)],
+    "g": [(300, "s", "2024-02-02", True), (100, "p", "2024-03-01", False)],
+}
+
+
+def fdg_check(spark, sql, deltas):
+    eng = IVMEngine(spark)
+    for t, schema in FDG_SCHEMAS.items():
+        eng.register_table(t, spark.createDataFrame(FDG_ROWS[t], schema))
+    for t in deltas:
+        eng.register_delta(
+            t,
+            spark.createDataFrame(
+                FDG_DELTAS[t], f"{FDG_SCHEMAS[t]}, {MULT_COL_NAME} boolean"
+            ),
+        )
+    eng.create_immv("v", sql=sql)
+    eng.ivm_upsert("v")
+    merged = rows(eng.merge_view("v"))
+    for t in deltas:
+        eng.apply_delta(t)
+    truth = rows(eng.full_refresh("v"))
+    assert merged == truth, (merged, truth)
+    return merged
+
+
+@pytest.mark.parametrize(
+    "sql,deltas",
+    [
+        (
+            'SELECT k, a, tag, w FROM f LEFT JOIN d ON f.k = d.dk AND d.tag = "a"',
+            ("f", "d"),
+        ),
+        (
+            "SELECT k, a, tag, w, gn FROM f LEFT JOIN d "
+            'ON f.k = d.dk AND d.tag = "a" LEFT JOIN g ON w = gw',
+            ("d", "g"),
+        ),
+        (
+            "SELECT k, a, tag, w, gn FROM f LEFT JOIN d ON f.k = d.dk "
+            'LEFT JOIN g ON w = gw WHERE tag = "a"',
+            ("d", "g"),
+        ),
+        (
+            "SELECT k, a, tag, w, gn FROM f LEFT JOIN d ON F.K = d.dk "
+            "LEFT JOIN g ON D.W = G.gw",
+            ("f", "d", "g"),
+        ),
+        (
+            "SELECT k, a, tag, w, gn FROM f LEFT JOIN d ON f.k = d.dk "
+            "LEFT JOIN g ON w = gw AND CAST(g.date AS date) >= DATE '2024-01-01'",
+            ("d", "g"),
+        ),
+    ],
+)
+def test_chain_condition_literals_and_case(spark, sql, deltas):
+    fdg_check(spark, sql, deltas)
+
+
+@pytest.mark.parametrize(
+    "sql,deltas",
+    [
+        ("SELECT k, a, tag, w FROM f LEFT JOIN d ON tag = 'a'", ("f", "d")),
+        ("SELECT k, a, tag, w FROM f FULL JOIN d ON tag = 'a'", ("f", "d")),
+        ("SELECT k, a, tag, w FROM f FULL JOIN d ON a = 'a'", ("f", "d")),
+        (
+            "SELECT k, a, tag, w, gn FROM f LEFT JOIN d ON f.k = d.dk "
+            "FULL JOIN g ON gn = 'p'",
+            ("d", "g"),
+        ),
+    ],
+)
+def test_outer_join_condition_over_one_side(spark, sql, deltas):
+    # every row of the side the condition does not name shares one match
+    # set: the whole side gains or loses its pad rows together
+    fdg_check(spark, sql, deltas)
+
+
 def test_right_join_normalized_to_left(spark):
     # 'orders RIGHT JOIN cust' ≡ 'cust LEFT JOIN orders'
     merged = lj_check(

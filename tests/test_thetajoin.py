@@ -256,6 +256,20 @@ def test_column_name_inside_string_literal_not_rewritten(spark):
     ]
 
 
+def test_column_name_inside_double_quoted_literal_not_rewritten(spark):
+    # Spark SQL reads "disc" as a string literal too
+    l = spark.createDataFrame(
+        [(1, 10.0, 0.1, "disc"), (2, 10.0, 0.1, "flat")],
+        "lid int, x double, disc double, tag string",
+    )
+    r = spark.createDataFrame([(9, 50.0)], "rid int, cutoff double")
+    got = {
+        t["lid"]
+        for t in theta_join(l, r, 'x < cutoff AND tag = "disc"').collect()
+    }
+    assert got == {1}
+
+
 def test_custom_finer_on_cols_extended_with_referenced(spark, lr):
     # caller keys the match counts by the unique row id; the probes must
     # still be able to evaluate the condition (left_on is extended with
