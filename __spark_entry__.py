@@ -519,7 +519,7 @@ def _q_ivm_merge_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # VAR/STDDEV maintained exactly through hidden SUM(x)/SUM(x*x)/COUNT(x)
     # companions (all linear, so every delta/merge rule applies unchanged)
     # and recomposed on read with a fixed IEEE expression tree whose SQL
-    # twin the oracle runs (merge.variance_col / variance_oracle_sql)
+    # the oracle runs too (merge.variance_oracle_sql)
     eng = _engine(spark, sf_dir, deltas=("lineitem",))
     eng.create_immv(
         "v",
@@ -4917,7 +4917,7 @@ def oracle_sql() -> dict[str, str]:
             HAVING count(o_orderkey) >= 3
         """,
         # variance recomposed from exact integer companions with the SAME
-        # IEEE expression tree the Spark read uses (merge.variance_col) —
+        # IEEE expression tree the Spark read uses (merge.variance_oracle_sql) —
         # identical double ops over identical integers are bit-identical
         "ivm_merge_variance": f"""
             SELECT l_returnflag,

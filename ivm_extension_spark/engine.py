@@ -29,7 +29,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from ivm_extension_spark.operators import auxstate, merge as merge_ops
+from ivm_extension_spark.operators import auxstate, colops, merge as merge_ops
 from ivm_extension_spark.operators import pin
 from ivm_extension_spark.operators.pin import pin_async
 from ivm_extension_spark.operators.rewrite import (
@@ -46,6 +46,11 @@ from ivm_extension_spark.plans.sqlfront import (
 )
 from ivm_extension_spark.plans.viewdef import ViewDef
 from ivm_extension_spark.sources.parquet import read_parquet
+
+# state rows at which a view merge stops exchanging its state: below it
+# the shuffle merge's one exchange costs less than the patch merge's extra
+# jobs (ΔV fold checkpoint, state pin, broadcast builds; measured at sf0.1)
+PATCH_MIN_STATE_ROWS = 1_000_000
 
 _PARTITION_RX = re.compile(
     r"partition\s+by\s+(.+?)(?:\s+order\s+by\b|\))", re.IGNORECASE | re.DOTALL
@@ -85,31 +90,22 @@ class IVMEngine:
     counting-join rule behind LEFT/FULL/SEMI/ANTI joins
     (operators/countjoin.py) broadcasts its delta-derived sides too.
 
-    ``merge_strategy`` controls how grouped-aggregate state absorbs ΔV:
-
-    - ``"auto"`` (default): adaptive — shuffle-merge while the tracked
-      state row count is below ``patch_min_state_rows`` (a small state's
-      exchange costs less than the patch path's extra jobs; measured at
-      sf0.1), patch-merge once the state outgrows it (the 100-TB
-      steady state, where exchanging the state is the thing that must
-      never happen).  Same policy shape as the aux-state advance.
-    - ``"patch"``: fold ΔV to one row per touched key, broadcast it onto
-      the state (LEFT join + anti part for new groups).  The state is
-      never exchanged — shuffled bytes per batch are O(|ΔV|), not
-      O(|V|), which is what keeps a 100-TB view maintainable.
-    - ``"shuffle"``: classic union + re-aggregate on the view keys.
+    Each merge picks how the state absorbs ΔV from the state's row
+    count, measured after every merge: below ``PATCH_MIN_STATE_ROWS`` it
+    re-aggregates the union of state and ΔV on the view keys (one
+    exchange of the state); from there on it patches — ΔV folds to one
+    row per touched key and is broadcast onto the state, which is never
+    exchanged, so shuffled bytes per batch are O(|ΔV|), not O(|V|)
+    (operators/merge.py).  The aux-state advance follows the same policy
+    shape.  ``stats(name)["last_merge_strategy"]`` reports the choice.
     """
 
     def __init__(
         self,
         spark: SparkSession,
-        merge_strategy: str = "auto",
-        patch_min_state_rows: int = 1_000_000,
         keep_history: int = 0,
         state_store=None,
     ) -> None:
-        if merge_strategy not in ("auto", "patch", "shuffle"):
-            raise ValueError(f"merge_strategy must be auto/patch/shuffle, got {merge_strategy!r}")
         if keep_history < 0:
             raise ValueError(f"keep_history must be >= 0, got {keep_history}")
         self.spark = spark
@@ -118,9 +114,7 @@ class IVMEngine:
         # each merge commits ONLY the touched buckets (MERGE INTO
         # emulation) instead of holding checkpoint blocks in the session
         self._state_store = state_store
-        self.merge_strategy = merge_strategy
-        self.patch_min_state_rows = patch_min_state_rows
-        self._state_rows: dict[str, int] = {}  # measured post-merge (auto mode)
+        self._state_rows: dict[str, int] = {}  # measured after each merge
         # advanced-but-uncommitted aux relations: _advance_aux stages here,
         # merge_view commits together with the new state (retry safety)
         self._pending_aux: dict[str, tuple[DataFrame, int]] = {}
@@ -137,9 +131,7 @@ class IVMEngine:
         self._aux_meta: dict[str, dict[str, tuple]] = {}
         self._aux_rows: dict[str, int] = {}  # row count of the checkpointed aux
         self._merge_counts: dict[str, int] = {}  # merges since materialization
-        # strategy the last merge of EACH view took (stats() reads by name;
-        # the engine-global _last_merge_strategy is kept for test hooks but
-        # reflects the most recent merge of ANY view)
+        # strategy the last merge of each view took (stats() reads it)
         self._merge_strategy_by_view: dict[str, str] = {}
         # version history (time travel): list of (version, state handle) per
         # view, newest last; populated only when keep_history > 0.  States
@@ -240,6 +232,7 @@ class IVMEngine:
             self._union_branches,
             self._history,
             self._merge_counts,
+            self._merge_strategy_by_view,
             self._state_rows,
             self._aux_rows,
             self._pending_aux,
@@ -655,16 +648,7 @@ class IVMEngine:
                     "not projected by the view (unprojected GROUP BY keys "
                     "are not supported for MIN/MAX/COUNT DISTINCT views)"
                 )
-            from ivm_extension_spark.operators import colops
-            from ivm_extension_spark.operators.colops import q as _q
-
-            renamed = d.selectExpr(
-                *[f"{_q(k)} AS {_q('__ivm_dk_' + k)}" for k in keys],
-                *[_q(a) for a in aliases],
-            )
-            state = state.join(
-                F.broadcast(renamed), colops.ns_eq(keys, "__ivm_dk_"), "left"
-            ).drop(*[f"__ivm_dk_{k}" for k in keys])
+            state = colops.keyed_join(state, d, keys, "left")
         return state.select(*[F.col(o) for o in iview.output_order])
 
     def _expand_star(self, vdef: ViewDef) -> ViewDef:
@@ -790,19 +774,17 @@ class IVMEngine:
         vdef = self.view(name)  # unknown names: 'is not registered'
         if name not in self._state:
             raise IVMError(f"view {name!r} was not materialized (create_immv)")
-        strategy = self.merge_strategy
-        if strategy == "auto":
-            # adaptive (mirrors the aux-state advance policy): the patch
-            # path spends a few fixed jobs (state pin, ΔV fold checkpoint,
-            # broadcast builds) to avoid exchanging the state — a clear
-            # win once |V| is large, pure overhead while |V| is small.
-            # State size is measured on the checkpointed state after each
-            # merge (a block-scan count, not a recompute).
-            strategy = (
-                "patch"
-                if self._state_rows.get(name, 0) >= self.patch_min_state_rows
-                else "shuffle"
-            )
+        # adaptive (mirrors the aux-state advance policy): the patch path
+        # spends a few fixed jobs (state pin, ΔV fold checkpoint, broadcast
+        # builds) to avoid exchanging the state — a clear win once |V| is
+        # large, pure overhead while |V| is small.  State size is measured
+        # on the checkpointed state after each merge (a block-scan count,
+        # not a recompute); unknown before the first merge.
+        strategy = (
+            "patch"
+            if self._state_rows.get(name, 0) >= PATCH_MIN_STATE_ROWS
+            else "shuffle"
+        )
         st_fut = None
         if strategy == "patch" and self._iviews[name].select:
             # the patch path scans the state narrowly TWICE (combine join +
@@ -844,7 +826,6 @@ class IVMEngine:
                 st, st_fut = st_fut.result(), None  # adopted: not ours to free
                 st._ivm_pinned = True
                 self._state[name] = st
-            self._last_merge_strategy = strategy  # observable for tests/telemetry
             new_state = merge_ops.merge(
                 self._state[name], dv, self._iviews[name], derived, strategy
             )
@@ -880,36 +861,29 @@ class IVMEngine:
             keys = self._store_keys(name)
             self._state_store.commit(name, new_state, keys, touched)
             new_state = self._state_store.read(name)
+            # the next batch's strategy needs the state row count: the
+            # manifest's add-file statistics (parquet footer counts
+            # recorded at commit, lakehouse.row_count) — zero Spark jobs;
+            # a pre-stats manifest falls back to counting the scan
+            n_rows = self._state_store.row_count(name)
+            if n_rows is None:
+                n_rows = new_state.count()
         else:
             # checkpoint: cuts lineage growth across repeated merges AND
             # pins the state so streaming micro-batch sources can be
-            # released.  Under the auto strategy the next batch needs the
-            # state row count anyway, so the checkpoint is taken LAZY and
-            # the count action materializes it — one Spark job where an
-            # eager checkpoint followed by a count would launch two.
-            fuse_count = self.merge_strategy == "auto"
-            new_state = new_state.localCheckpoint(eager=not fuse_count)
-            if fuse_count:
-                n_rows = new_state.count()  # materializes the checkpoint
+            # released.  The next batch needs the state row count, so the
+            # checkpoint is taken LAZY and the count action materializes
+            # it — one Spark job where an eager checkpoint followed by a
+            # count would launch two.
+            new_state = new_state.localCheckpoint(eager=False)
+            n_rows = new_state.count()  # materializes the checkpoint
         new_state._ivm_pinned = True
         if pending_hist is not None:
             hist = self._history.setdefault(name, [])
             hist.append(pending_hist)
             del hist[: max(0, len(hist) - self.keep_history)]
         self._state[name] = new_state
-        if self.merge_strategy == "auto":
-            # measured on the just-checkpointed state; feeds the adaptive
-            # strategy for the NEXT batch.  Store path: the manifest's
-            # add-file statistics (parquet footer counts recorded at
-            # commit, lakehouse.row_count) — zero Spark jobs; a pre-stats
-            # manifest falls back to counting the scan
-            if self._state_store is None or name not in self._state_store:
-                self._state_rows[name] = n_rows
-            else:
-                sc = self._state_store.row_count(name)
-                self._state_rows[name] = (
-                    sc if sc is not None else new_state.count()
-                )
+        self._state_rows[name] = n_rows
         pend = self._pending_aux.pop(name, None)
         if pend is not None:
             # commit the advanced aux multiset only now, atomically with
@@ -1019,10 +993,7 @@ class IVMEngine:
         """Semi-join ``df`` against ``probe`` on ``keys`` with NULL-safe
         equality (rollup levels and NULL-valued group keys must match),
         the probe broadcast."""
-        from ivm_extension_spark.operators import colops
-
-        p = F.broadcast(colops.renamed(probe, keys, "__cdc_pk_").distinct())
-        return df.join(p, colops.ns_eq(keys, "__cdc_pk_"), "leftsemi")
+        return colops.keyed_join(df, probe.distinct(), keys, "left_semi")
 
     def _cdc_rank_filtered(self, name: str, vdef, dv: DataFrame) -> DataFrame:
         """CDC for QUALIFY / ORDER BY+LIMIT views.  Rank visibility moves
@@ -1181,7 +1152,7 @@ class IVMEngine:
             return {}
         meta = self._aux_meta[name]
         # Δaux is O(|Δ| distinct values) — checkpoint it once so the three
-        # consumers inside merge_aux (anti-probe, semi-probe, union branch)
+        # consumers of the touched split (anti-probe, semi-probe, union)
         # reuse one result instead of re-running the delta-source scan.
         # Taken LAZY with the size probe as the materializing action:
         # one job where a checkpoint followed by a count would launch two
@@ -1200,10 +1171,15 @@ class IVMEngine:
         # blocks — milliseconds, once per batch.
         state_n = self._aux_rows.get(name)
         use_split = state_n is not None and n_da * 16 <= state_n
-        # lazy checkpoint + count: the staged-commit count is needed
-        # anyway, so it doubles as the materializing action (one job)
-        new_aux = auxstate.merge_aux(
-            self._aux[name], da, broadcast_delta=use_split
+        # aux' = aux ⊎ Δaux: the signed re-count over every column but the
+        # value count (lanes are NULL off-lane by construction and group
+        # keys may be NULL — the re-count is NULL-safe).  Lazy checkpoint
+        # + count: the staged-commit count is needed anyway, so it doubles
+        # as the materializing action (one job)
+        aux = self._aux[name]
+        key_cols = [c for c in aux.columns if c != auxstate.VCNT_COL]
+        new_aux = merge_ops.recount(
+            aux, da, key_cols, auxstate.VCNT_COL, split=use_split
         ).localCheckpoint(eager=False)
         # do NOT assign self._aux yet: merge_view commits the advanced aux
         # together with the new state at the END, so a failed merge leaves
@@ -1240,15 +1216,8 @@ class IVMEngine:
             self._last_derive_sliced = False  # observable for tests/telemetry
             if n_groups and touched.count() * 2 <= n_groups:
                 self._last_derive_sliced = True
-                cond = None
-                for k in group_keys:
-                    t = F.col(f"__ivm_a.{k}").eqNullSafe(F.col(f"__ivm_t.{k}"))
-                    cond = t if cond is None else cond & t
-                slice_aux = (
-                    new_aux.alias("__ivm_a")
-                    .join(
-                        F.broadcast(touched.alias("__ivm_t")), cond, "leftsemi"
-                    )
+                slice_aux = colops.keyed_join(
+                    new_aux, touched, group_keys, "left_semi"
                 )
         # shared frames: ONE pass over the (sliced) aux relation for the
         # simple fns, ONE window pass for the percentile family, ONE
@@ -1258,8 +1227,8 @@ class IVMEngine:
     def stats(self, name: str) -> dict:
         """Operational telemetry for one view — what an operator pages on:
         state/aux sizes as MEASURED at the last checkpoint (no job is
-        run; None until the auto strategy or an aux advance measured
-        them), the merge strategy the last batch actually took, and the
+        run; None until a merge or an aux advance measured them), the
+        merge strategy the last batch actually took, and the
         number of merges applied since materialization."""
         if name in self._sketch_specs:
             spec = self._sketch_specs[name]
@@ -1424,7 +1393,7 @@ class IVMEngine:
         commit must not carry stale pre-refresh buckets forward), the
         cached ΔV is dropped (it was computed against pre-refresh bases;
         replaying it into the refreshed state would double-apply), and
-        the adaptive-strategy row count is re-measured."""
+        the state row count that picks the merge strategy is re-measured."""
         if name in self._sketch_specs:
             spec = self._sketch_specs[name]
             state = spec.compute(self.table(spec.source))
@@ -1452,8 +1421,7 @@ class IVMEngine:
         self._state[name] = state
         self._delta_views.pop(name, None)
         self._pending_aux.pop(name, None)  # fresh aux was just re-initialized
-        if self.merge_strategy == "auto":
-            self._state_rows[name] = state.count()
+        self._state_rows[name] = state.count()
         return merge_ops.finalize(state, vdef)
 
     def discard_delta(self, name: str) -> None:
@@ -1643,7 +1611,6 @@ class IVMEngine:
         spark: SparkSession,
         path: str,
         tables: dict[str, DataFrame | str],
-        merge_strategy: str = "auto",
     ) -> "IVMEngine":
         """Rebuild an engine from :meth:`save` output.  ``tables`` maps
         base-table names to DataFrames/paths (the current lakehouse
@@ -1652,7 +1619,7 @@ class IVMEngine:
         metadata is re-derived from the schemas, not deserialized."""
         import json
 
-        eng = cls(spark, merge_strategy=merge_strategy)
+        eng = cls(spark)
         for t, src in tables.items():
             eng.register_table(t, src)
         row = spark.read.parquet(f"{path}/catalog").collect()[0]
@@ -1783,7 +1750,3 @@ class IVMEngine:
         # is per-name keyed; Spark's scheduler is thread-safe)
         pin.build_all(*[lambda t=t: self.apply_delta(t) for t in tabs])
         return out
-
-
-def merge(state: DataFrame, delta_v: DataFrame, view: ViewDef) -> DataFrame:
-    return merge_ops.merge(state, delta_v, view)

@@ -21,13 +21,21 @@ of dates/timestamps are ISO so lane ordering matches value ordering).
 One tagged relation instead of one per aggregate means the whole aux
 lifecycle is ONE shuffle per batch, not one per aggregate:
 
-- init / advance: a union of per-aggregate projections over the SAME
-  scan, then a single groupBy — map-side partial aggregation compresses
-  duplicate values before the one exchange.
+- init: a union of per-aggregate projections over the SAME scan, then a
+  single groupBy — map-side partial aggregation compresses duplicate
+  values before the one exchange.
+- advance: aux' = aux ⊎ Δaux is the signed re-count of
+  ``merge.recount`` over the (tag, keys, lanes) tuples with the value
+  count, dead values dropped.  The engine takes its touched-split form
+  while Δaux is small next to the relation: Δaux's keys are broadcast,
+  untouched rows pass through narrow, and only the touched slice is
+  re-counted — the full re-aggregation would exchange the whole aux
+  relation (O(base) for max() over a near-unique column) every batch.
 - re-derivation is a filter on the (checkpointed, small) aux relation
   per aggregate — no extra scan of the base data.
 - the merge patch joins re-derived values onto the merged state; the
-  re-derived side is O(|groups|) so it is broadcast.
+  re-derived side is O(|groups|) so it is broadcast, and the join is
+  NULL-safe on the group keys.
 
 At 100 TB the aux relation is O(distinct (group, value)) — bounded by the
 base relation, usually far smaller; it would live as a key-bucketed
@@ -41,6 +49,8 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql import types as T
 
+from ivm_extension_spark.operators import colops
+from ivm_extension_spark.operators.colops import q
 from ivm_extension_spark.operators.rewrite import (
     _SIGN,
     _delta_source,
@@ -205,40 +215,6 @@ def delta_aux(
     if view.where:
         src = src.filter(F.expr(view.where))
     return _fold(_tagged_rows(src, _group_cols(view), aggs, meta, F.col(_SIGN)))
-
-
-def merge_aux(
-    state_aux: DataFrame, delta_aux_df: DataFrame, broadcast_delta: bool = True
-) -> DataFrame:
-    """aux' = aux ⊎ Δaux: re-count touched keys, dead values dropped.
-
-    Scale shape: Δaux's key set is O(|Δ| distinct values) and is
-    broadcast; state rows whose tagged key is absent from Δaux pass
-    through NARROW (broadcast anti-join, no exchange), and only the
-    touched slice + Δaux go through the one re-count shuffle.  The
-    previous full union+re-aggregate shuffled the ENTIRE aux relation
-    (O(distinct (group, value)) — for max() over a near-unique column
-    that is O(base table)) on every batch; at 100 TB that full exchange
-    is the bottleneck, the touched slice is not.  Joins are null-safe:
-    lane columns are NULL off-lane by construction and group keys may be
-    legitimately NULL.  With ``broadcast_delta=False`` (delta comparable
-    to state) falls back to the full re-aggregation.
-    """
-    key_cols = [c for c in state_aux.columns if c != VCNT_COL]
-    refold = lambda df: (  # noqa: E731
-        df.groupBy(*[F.col(c) for c in key_cols])
-        .agg(F.sum(VCNT_COL).cast("long").alias(VCNT_COL))
-        .filter(F.col(VCNT_COL) > 0)
-    )
-    if not broadcast_delta:
-        return refold(state_aux.unionByName(delta_aux_df))
-    from ivm_extension_spark.operators import colops
-
-    probe = colops.renamed(delta_aux_df, key_cols, "__ivm_probe_")
-    cond = colops.ns_eq(key_cols, "__ivm_probe_")
-    untouched = state_aux.join(F.broadcast(probe), cond, "left_anti")
-    touched = state_aux.join(F.broadcast(probe), cond, "left_semi")
-    return untouched.unionByName(refold(touched.unionByName(delta_aux_df)))
 
 
 def derive_all_from_aux(
@@ -468,10 +444,7 @@ def patch_merged(
             continue
         seen.add(id(d))
         aliases = [a for a, f in derived.items() if f is d]
-        renames = {a: f"__ivm_patch_{a}" for a in aliases}
-        for a, p in renames.items():
-            d = d.withColumnRenamed(a, p)
-        keys = [c for c in d.columns if c not in renames.values()]
+        keys = [c for c in d.columns if c not in aliases]
         missing = [k for k in keys if k not in merged.columns]
         if missing:
             from ivm_extension_spark.operators.rewrite import IVMError
@@ -481,25 +454,26 @@ def patch_merged(
                 "projected by the view (unprojected GROUP BY keys are not "
                 "supported for MIN/MAX/COUNT DISTINCT merge under deletes)"
             )
-        hit = f"__ivm_hit_{i}"
-        d = d.withColumn(hit, F.lit(True))
+        hit, p = q(f"__ivm_hit_{i}"), "__ivm_patch_"
+        d = d.selectExpr(
+            *[q(k) for k in keys],
+            *[f"{q(a)} AS {q(p + a)}" for a in aliases],
+            f"true AS {hit}",
+        )
         if keys:
-            out = out.join(F.broadcast(d), on=keys, how="left")
+            # NULL-safe: a NULL group key is a group like any other
+            out = colops.keyed_join(out, d, keys, "left")
         else:
             out = out.crossJoin(F.broadcast(d))
-        # one fused select: every patched alias reads only ORIGINAL
-        # columns (hit flag + its own __ivm_p_* source), so the old
-        # per-alias withColumn loop is equivalent column-by-column
-        drop = set(renames.values()) | {hit}
-        patched = {
-            a: F.when(F.col(hit), F.col(p)).otherwise(F.col(a))
-            for a, p in renames.items()
-        }
-        out = out.select(
+        # one fused select back to the merged columns: every patched
+        # alias reads only the hit flag, its patch value and its own
+        # original column
+        out = out.selectExpr(
             *[
-                (patched[c].alias(c) if c in patched else F.col(c))
-                for c in out.columns
-                if c not in drop
+                f"CASE WHEN {hit} THEN {q(p + c)} ELSE {q(c)} END AS {q(c)}"
+                if c in aliases
+                else q(c)
+                for c in merged.columns
             ]
         )
-    return out.select(*merged.columns)
+    return out

@@ -98,6 +98,19 @@ def renamed(df: DataFrame, cols, prefix: str, keep_rest: bool = False) -> DataFr
     return df.selectExpr(*exprs)
 
 
+def keyed_join(df: DataFrame, other: DataFrame, keys, how: str) -> DataFrame:
+    """``df`` joined with broadcast ``other`` on NULL-SAFE equality of
+    ``keys`` — a NULL key matches a NULL key, as GROUP BY groups them.
+    ``how`` is ``left``, ``left_semi`` or ``left_anti``.  ``other``'s key
+    copies are renamed apart for the condition and never reach the
+    result; on a left join its other columns follow ``df``'s."""
+    prefix = "__ivm_jk_"
+    semi = how in ("left_semi", "left_anti")
+    probe = renamed(other, keys, prefix, keep_rest=not semi)
+    out = df.join(F.broadcast(probe), ns_eq(keys, prefix), how)
+    return out if semi else out.drop(*[prefix + k for k in keys])
+
+
 def null_pad(df: DataFrame, other: DataFrame, key_cols) -> DataFrame:
     """Append ``other``'s non-key columns to ``df`` as typed NULLs (the
     preserved-side padding) in one select — the chatty form was a

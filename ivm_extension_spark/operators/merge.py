@@ -13,14 +13,19 @@ implements it with signed-weight re-aggregation:
   SUM/COUNT companions.  MIN/MAX merge on insert-only deltas
   (least/greatest); deletes require re-scan state the poster itself
   defers — we raise with a pointer to ``full_refresh``.
-- projection views: bag semantics — count each distinct row's
-  occurrences with signed weights, keep positive counts, re-explode.
+- counted multisets: :func:`recount` is the one signed re-count
+  S ⊎ Δ over (columns, count) rows, with non-positive counts dropped.
+  Projection-view state (bag semantics), base tables folding their
+  deltas, the CDC diff of two relations and the auxiliary value
+  multisets (operators/auxstate.py) all go through it.
 
 Scale notes: the merge is one shuffle on the view keys (the view state
 is already key-partitioned if written bucketed); map-side partial
-aggregation applies because everything is expressed as SUM.  At real
-100-TB scale the projection-view bag merge would be pushed into a
-delete-aware table format (e.g. MERGE INTO on a lakehouse table); the
+aggregation applies because everything is expressed as SUM.  Once the
+state is large, the caller picks the patch form instead (grouped:
+:func:`_patch_combine`; counted: the touched-split form of
+:func:`recount`): ΔV's keys are broadcast and the state is only scanned
+narrowly, never exchanged — the shape of a lakehouse MERGE INTO, and the
 signed-weight algebra here is exactly what that MERGE would express.
 """
 
@@ -28,8 +33,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from pyspark.sql import Column
-
+from ivm_extension_spark.operators import colops
+from ivm_extension_spark.operators.colops import q
 from ivm_extension_spark.operators.rewrite import MULT_COL, IVMError
 from ivm_extension_spark.plans.viewdef import (
     ORDERED_AGGS,
@@ -42,29 +47,16 @@ HIDDEN_COUNT = "__ivm_count"
 _SIGN = "__ivm_sign"
 
 
-def variance_col(fn: str, s: Column, q: Column, n: Column) -> Column:
-    """Recompose a variance-family aggregate from its exact linear
-    companions s=SUM(x), q=SUM(x*x), n=COUNT(x).
-
-    The arithmetic is written as one fixed IEEE-754 expression tree
-    (cast-to-double → q − s·s/n → divide → clamp at 0 → sqrt) so an
-    oracle engine evaluating the *same* tree over the same exact integer
-    companions produces bit-identical doubles — see
-    :func:`variance_oracle_sql`, the SQL-text twin used by the driver's
-    DuckDB gate.  The clamp guards the tiny negative residue the
-    two-pass formula can leave for near-constant inputs."""
-    pop = fn.endswith("_pop")
-    s_d, q_d, n_d = s.cast("double"), q.cast("double"), n.cast("double")
-    denom = n_d if pop else (n_d - F.lit(1.0))
-    core = F.greatest((q_d - s_d * s_d / n_d) / denom, F.lit(0.0))
-    if fn.startswith("stddev"):
-        core = F.sqrt(core)
-    return F.when(n >= (1 if pop else 2), core).otherwise(F.lit(None).cast("double"))
-
-
 def variance_oracle_sql(fn: str, s: str, q: str, n: str) -> str:
-    """ANSI-SQL twin of :func:`variance_col` over companion column/expr
-    names — the exact same IEEE expression tree, for oracle parity."""
+    """A variance-family aggregate recomposed from its exact linear
+    companions ``s`` = SUM(x), ``q`` = SUM(x*x), ``n`` = COUNT(x), given
+    as SQL column names or expressions.
+
+    The arithmetic is one fixed IEEE-754 expression tree (cast to double
+    → q − s·s/n → divide → clamp at 0 → sqrt), used by every read here
+    and by the oracle engine: the same tree over the same exact integer
+    companions gives bit-identical doubles.  The clamp guards the tiny
+    negative residue the formula can leave for near-constant inputs."""
     pop = fn.endswith("_pop")
     denom = f"CAST({n} AS DOUBLE)" if pop else f"(CAST({n} AS DOUBLE) - 1.0)"
     core = (
@@ -124,8 +116,6 @@ def finalize(df: DataFrame, view: ViewDef) -> DataFrame:
     public view only, never to ΔV (which carries the multiplicity column):
     maintained state stays pre-HAVING so a group can enter/leave the
     visible result as later deltas move it across the threshold."""
-    from ivm_extension_spark.operators.colops import q
-
     is_delta = MULT_COL in df.columns
     if view.grouping_sets and not is_delta:
         return _read_transforms(_finalize_grouping_sets(df, view), view)
@@ -142,9 +132,6 @@ def finalize(df: DataFrame, view: ViewDef) -> DataFrame:
                 f" END AS {q(alias)}"
             )
         elif agg is not None and agg.fn in VARIANCE_AGGS:
-            # variance_oracle_sql is variance_col's exact-IEEE-tree SQL
-            # twin (same cast/greatest/sqrt structure) — parsing it here
-            # keeps the read bit-identical to the Column form
             cols.append(
                 variance_oracle_sql(
                     agg.fn,
@@ -237,13 +224,11 @@ def grouping_level(state: DataFrame, view: ViewDef, gs: tuple[str, ...]) -> Data
         elif a.fn in VARIANCE_AGGS:
             # the hidden companions are plain sums — additive across
             # the finest groups, so each rollup level recomposes exactly
+            s, sq, n = (
+                f"sum({q(f'__ivm_{p}_{a.alias}')})" for p in ("vs", "vq", "vn")
+            )
             aggs.append(
-                variance_col(
-                    a.fn,
-                    F.sum(F.col(f"__ivm_vs_{a.alias}")),
-                    F.sum(F.col(f"__ivm_vq_{a.alias}")),
-                    F.sum(F.col(f"__ivm_vn_{a.alias}")),
-                ).alias(a.alias)
+                F.expr(f"{variance_oracle_sql(a.fn, s, sq, n)} AS {q(a.alias)}")
             )
         else:  # pragma: no cover — rejected in ViewDef.__post_init__
             raise NotImplementedError(a.fn)
@@ -291,26 +276,49 @@ def merge(
     present, MIN/MAX/COUNT(DISTINCT) merge exactly even under deletes;
     without it those aggregates reject delete-bearing deltas.
 
-    ``strategy`` picks how grouped aggregate state is combined:
+    ``strategy`` picks how the state absorbs ΔV:
 
     - ``"shuffle"``: union V and ΔV, re-aggregate on the view keys —
       ONE exchange of O(|V| + |ΔV|).
     - ``"patch"``: fold ΔV to one row per touched key (O(|ΔV|) work),
-      broadcast it, and LEFT-join it onto the state, combining columns
-      in place; brand-new groups arrive by anti-joining the fold
-      against the state's touched keys.  The state is never exchanged —
-      only scanned narrowly — which is the shape that matters when |V|
-      is itself huge (the 100-TB view): shuffled bytes per batch drop
-      from O(|V|) to O(|ΔV|).  This is the DataFrame expression of what
-      a lakehouse MERGE INTO would do, and mirrors the aux relation's
-      touched-key advance (operators/auxstate.py).
+      broadcast it, and combine it into the state without exchanging
+      the state — it is only scanned narrowly, so shuffled bytes per
+      batch drop from O(|V|) to O(|ΔV|), the shape that matters when
+      |V| is itself huge.  Grouped state LEFT-joins the fold and takes
+      brand-new groups by an anti join (:func:`_patch_combine`);
+      projection views take the touched-split form of :func:`recount`.
 
-    Global aggregates (no keys) and projection-view bag merges always
-    take their dedicated paths regardless of ``strategy``.
+    Global aggregates (no keys) always take their dedicated path.
     """
     if view.is_aggregate:
         return _merge_aggregate(state, delta_v, view, derived or {}, strategy)
     return _merge_bag(state, delta_v, view, strategy)
+
+
+def _folds(iview: ViewDef) -> list:
+    """One fold per aggregate over signed rows (``_SIGN`` ±1, state rows
+    +1) to one row per key — the shuffle merge's regroup and the patch
+    merge's ΔV fold.  MIN/MAX fold insert-side rows only: a delete-bearing
+    batch either raised (no aux state) or has its value overwritten by
+    ``auxstate.patch_merged``.  The other non-additive columns keep any
+    row's value: AVG/variance are recomputed from their hidden companions
+    in :func:`finalize`, DISTINCT sums and order statistics are
+    overwritten by the aux patch."""
+    folds = []
+    for a in iview.aggregates:
+        c = q(a.alias)
+        if a.fn in ("sum", "count", "count_distinct"):
+            # COUNT(DISTINCT) is not additive across batches; merging it as
+            # a sum is exact only through the aux patch that overwrites it
+            e = f"sum({c} * {_SIGN})"
+            if a.fn != "sum":
+                e = f"CAST({e} AS BIGINT)"
+        elif a.fn in ("min", "max"):
+            e = f"{a.fn}(CASE WHEN {_SIGN} > 0 THEN {c} END)"
+        else:
+            e = f"first({c})"
+        folds.append(F.expr(f"{e} AS {c}"))
+    return folds
 
 
 def _patch_combine(
@@ -319,81 +327,35 @@ def _patch_combine(
     """Combine ΔV into grouped state without exchanging the state (see
     :func:`merge`, strategy="patch").  Returns rows in internal shape,
     pre net-zero-group filtering."""
-    from ivm_extension_spark.operators import colops
-
-    from ivm_extension_spark.operators.colops import q
-
-    d = colops.signed(delta_v, MULT_COL, _SIGN)
-    folds = []
-    for a in iview.aggregates:
-        c = q(a.alias)
-        if a.fn in ("sum", "count", "count_distinct"):
-            e = f"sum({c} * {_SIGN})"
-            if a.fn in ("count", "count_distinct"):
-                e = f"CAST({e} AS BIGINT)"
-        elif a.fn == "min":
-            # insert-side extremum only: deletes either rejected upstream
-            # (no aux state) or overwritten by auxstate.patch_merged
-            e = f"min(CASE WHEN {_SIGN} > 0 THEN {c} END)"
-        elif a.fn == "max":
-            e = f"max(CASE WHEN {_SIGN} > 0 THEN {c} END)"
-        else:  # avg / variance public columns: finalize() recomputes
-            e = f"first({c})"
-        folds.append(F.expr(f"{e} AS {q(a.alias)}"))
+    keyq = [q(k) for k in keys]
+    aggs = [a.alias for a in iview.aggregates]
     # one row per touched key; eager checkpoint — O(|ΔV|) rows reused by
     # the combine join, the touched-key probe, and the anti join
     dvagg = (
-        d.groupBy(*[F.col(k) for k in keys]).agg(*folds).localCheckpoint(eager=True)
+        colops.signed(delta_v, MULT_COL, _SIGN)
+        .groupBy(*keyq)
+        .agg(*_folds(iview))
+        .localCheckpoint(eager=True)
     )
-
-    def _keyed(df: DataFrame, prefix: str) -> DataFrame:
-        return colops.renamed(df, keys, prefix)
-
-    def _cond(prefix: str):
-        return colops.ns_eq(keys, prefix)
-
-    agg_aliases = [a.alias for a in iview.aggregates]
-    from ivm_extension_spark.operators.colops import q
-
-    dren = dvagg.selectExpr(
-        *[f"{q(k)} AS {q('__ivm_dk_' + k)}" for k in keys],
-        *[f"{q(a)} AS {q('__ivm_dv_' + a)}" for a in agg_aliases],
-    )
-    joined = state.join(F.broadcast(dren), _cond("__ivm_dk_"), "left")
+    dren = dvagg.selectExpr(*keyq, *[f"{q(a)} AS {q('__ivm_dv_' + a)}" for a in aggs])
+    joined = colops.keyed_join(state, dren, keys, "left")
     combined = []
     for a in iview.aggregates:
         s, dd = q(a.alias), q(f"__ivm_dv_{a.alias}")
         if a.fn in ("sum", "count", "count_distinct"):
-            na = (
-                f"CASE WHEN {dd} IS NULL THEN {s} WHEN {s} IS NULL THEN {dd}"
-                f" ELSE {s} + {dd} END"
-            )
-            if a.fn in ("count", "count_distinct"):
-                na = f"CAST({na} AS BIGINT)"
-        elif a.fn == "min":
-            na = (
-                f"CASE WHEN {dd} IS NULL THEN {s} WHEN {s} IS NULL THEN {dd}"
-                f" ELSE least({s}, {dd}) END"
-            )
-        elif a.fn == "max":
-            na = (
-                f"CASE WHEN {dd} IS NULL THEN {s} WHEN {s} IS NULL THEN {dd}"
-                f" ELSE greatest({s}, {dd}) END"
-            )
+            na = f"coalesce({s} + {dd}, {s}, {dd})"
+        elif a.fn in ("min", "max"):
+            # least/greatest skip a NULL operand
+            na = f"{'least' if a.fn == 'min' else 'greatest'}({s}, {dd})"
         else:
             na = s
-        combined.append(f"{na} AS {q(a.alias)}")
-    existing = joined.selectExpr(*[q(k) for k in keys], *combined)
+        combined.append(f"{na} AS {s}")
+    existing = joined.selectExpr(*keyq, *combined)
     # brand-new groups: fold keys with no state row.  The state-side
     # probe is a broadcast SEMI join (state scanned narrowly, never
     # exchanged) whose result is O(|ΔV|); the fold anti-joins against it.
-    touched = state.selectExpr(*[q(k) for k in keys]).join(
-        F.broadcast(_keyed(dvagg, "__ivm_dk_")), _cond("__ivm_dk_"), "leftsemi"
-    )
-    fresh = dvagg.join(
-        F.broadcast(_keyed(touched, "__ivm_tk_")), _cond("__ivm_tk_"), "left_anti"
-    ).selectExpr(*[q(k) for k in keys], *[q(a) for a in agg_aliases])
-    return existing.unionByName(fresh)
+    touched = colops.keyed_join(state.selectExpr(*keyq), dvagg, keys, "left_semi")
+    return existing.unionByName(colops.keyed_join(dvagg, touched, keys, "left_anti"))
 
 
 def _merge_aggregate(
@@ -453,45 +415,13 @@ def _merge_aggregate(
     if strategy == "patch" and key_aliases:
         out = _patch_combine(state, delta_v, iview, key_aliases)
     else:
-        from ivm_extension_spark.operators import colops
-
         s = state.selectExpr("*", f"1 AS {_SIGN}")
         d = colops.signed(delta_v, MULT_COL, _SIGN)
-        unioned = s.unionByName(d)
-
-        from ivm_extension_spark.operators.colops import q
-
-        merged_aggs = []
-        for a in iview.aggregates:
-            c = q(a.alias)
-            if a.fn in ("sum", "count"):
-                e = f"sum({c} * {_SIGN})"
-                if a.fn == "count":
-                    e = f"CAST({e} AS BIGINT)"
-            elif a.fn == "min":
-                e = f"min({c})"
-            elif a.fn == "max":
-                e = f"max({c})"
-            elif a.fn == "count_distinct":
-                # insert-only: distinct counts are NOT additive across batches;
-                # merging them as sum over-counts overcounts overlaps.  Approximate
-                # merge is deliberate and documented; exact needs per-value state.
-                e = f"CAST(sum({c} * {_SIGN}) AS BIGINT)"
-            elif (
-                a.fn == "avg"
-                or a.fn in ("sum_distinct", "avg_distinct")
-                or a.fn in VARIANCE_AGGS
-                or a.fn in ORDERED_AGGS
-            ):
-                # never merged directly: AVG/variance recompute from hidden
-                # companions in finalize(); median/mode/percentile are
-                # overwritten by the aux-relation patch
-                e = f"first({c})"
-            else:  # pragma: no cover
-                raise NotImplementedError(a.fn)
-            merged_aggs.append(F.expr(f"{e} AS {q(a.alias)}"))
-
-        out = unioned.groupBy(*[F.col(k) for k in key_aliases]).agg(*merged_aggs)
+        out = (
+            s.unionByName(d)
+            .groupBy(*[q(k) for k in key_aliases])
+            .agg(*_folds(iview))
+        )
     if key_aliases:
         out = out.filter(F.col(HIDDEN_COUNT) > 0)  # net-zero groups disappear
     else:
@@ -517,69 +447,84 @@ def _merge_aggregate(
                 for c in out.columns
             ]
         )
-    from ivm_extension_spark.operators.colops import q as _q
-
-    out = out.selectExpr(*[_q(a) for a in (*key_aliases, *agg_aliases)])
+    out = out.selectExpr(*[q(a) for a in (*key_aliases, *agg_aliases)])
     return auxstate.patch_merged(out, iview, derived)
+
+
+_N = "__ivm_n"
+_DELTA_WEIGHT = f"CASE WHEN {q(MULT_COL)} THEN 1 ELSE -1 END"
+
+
+def _counted(df: DataFrame, cols: list[str], weight: str) -> DataFrame:
+    """``cols`` of ``df`` plus the count column ``_N`` = ``weight`` (SQL)."""
+    return df.selectExpr(*[q(c) for c in cols], f"{weight} AS {q(_N)}")
+
+
+def _regroup(df: DataFrame, cols: list[str], n_col: str = _N) -> DataFrame:
+    """One row per distinct ``cols`` tuple with its summed count."""
+    n = q(n_col)
+    return df.groupBy(*[q(c) for c in cols]).agg(
+        F.expr(f"CAST(sum({n}) AS BIGINT) AS {n}")
+    )
+
+
+def _exploded(counts: DataFrame, cols: list[str]) -> DataFrame:
+    """A counted multiset back as rows: each tuple repeated ``_N`` times."""
+    return counts.selectExpr(
+        *[q(c) for c in cols], f"explode(sequence(1, {q(_N)})) AS `__ivm_i`"
+    ).drop("__ivm_i")
+
+
+def recount(
+    state: DataFrame,
+    delta: DataFrame,
+    cols: list[str],
+    n_col: str = _N,
+    split: bool = False,
+    signed: bool = False,
+) -> DataFrame:
+    """The signed re-count S ⊎ Δ — the one ⊎ over a counted multiset.
+
+    ``state`` and ``delta`` hold ``cols`` plus a count column ``n_col``
+    (the delta's counts signed).  Returns one row per distinct tuple with
+    its net count, non-positive counts dropped (``signed``: only zero
+    counts — a signed diff, not a multiset).  Groupings and joins are
+    NULL-safe.  Two forms, chosen by the caller:
+
+    - full (default): one union and one regroup — ONE exchange of
+      O(|S| + |Δ|).
+    - touched split (``split``): state rows whose tuple is absent from
+      the delta pass through a NARROW broadcast anti join, and only the
+      semi-joined touched slice is re-counted with the delta.  The state
+      is never exchanged: the shape for a state far larger than its
+      delta.  The delta is read three times, so the caller passes it
+      folded and pinned.
+    """
+    def net(df: DataFrame) -> DataFrame:
+        keep = f"{q(n_col)} {'!=' if signed else '>'} 0"
+        return _regroup(df, cols, n_col).filter(keep)
+
+    if not split:
+        return net(state.unionByName(delta))
+    untouched = colops.keyed_join(state, delta, cols, "left_anti")
+    touched = colops.keyed_join(state, delta, cols, "left_semi")
+    return untouched.unionByName(net(touched.unionByName(delta)))
 
 
 def _merge_bag(
     state: DataFrame, delta_v: DataFrame, view: ViewDef, strategy: str = "shuffle"
 ) -> DataFrame:
-    """Projection-view bag merge.
-
-    - ``"shuffle"``: union state and ΔV, re-count every distinct tuple —
-      ONE exchange of O(|V| + |ΔV|).
-    - ``"patch"``: fold ΔV to net counts per tuple (O(|ΔV|)), broadcast
-      that tuple set; state rows for untouched tuples pass through a
-      NARROW broadcast anti-join, and only the touched slice (bounded by
-      the live multiplicity of ΔV's tuples) is re-counted with the fold.
-      The state is never exchanged — the same MERGE-INTO shape as the
-      grouped patch path, which is what a 100-TB bag view needs.
-    All joins/groupings are null-safe (outer-join views legitimately
-    carry NULL columns)."""
-    from ivm_extension_spark.operators.colops import q
-
-    cols = [a for a in view.output_order]
-    colsq = [q(c) for c in cols]
-    s = state.selectExpr(*colsq, f"1 AS {_SIGN}")
-    d = delta_v.selectExpr(
-        *colsq, f"CASE WHEN {q(MULT_COL)} THEN 1 ELSE -1 END AS {_SIGN}"
-    )
-    explode_counts = lambda counts: counts.selectExpr(  # noqa: E731
-        *colsq, "explode(sequence(1, __ivm_n)) AS `__ivm_i`"
-    ).drop("__ivm_i")
-    if strategy != "patch":
-        counts = (
-            s.unionByName(d)
-            .groupBy(*colsq)
-            .agg(F.sum(_SIGN).alias("__ivm_n"))
-            .filter(F.col("__ivm_n") > 0)
-        )
-        return explode_counts(counts)
-    # patch: one row per touched tuple, checkpointed — reused by the
-    # anti probe, the semi probe, and the re-count union
-    from ivm_extension_spark.operators import colops
-
-    dcnt = (
-        d.groupBy(*colsq)
-        .agg(F.sum(_SIGN).alias("__ivm_n"))
-        .localCheckpoint(eager=True)
-    )
-    probe = colops.renamed(dcnt, cols, "__ivm_pk_")
-    cond = colops.ns_eq(cols, "__ivm_pk_")
-    base = state.selectExpr(*colsq)
-    untouched = base.join(F.broadcast(probe), cond, "left_anti")
-    touched = base.join(F.broadcast(probe), cond, "left_semi")
-    recounted = (
-        touched.groupBy(*colsq)
-        .agg(F.count(F.lit(1)).alias("__ivm_n"))
-        .unionByName(dcnt)
-        .groupBy(*colsq)
-        .agg(F.sum("__ivm_n").alias("__ivm_n"))
-        .filter(F.col("__ivm_n") > 0)
-    )
-    return untouched.unionByName(explode_counts(recounted))
+    """Projection-view bag merge: the state's rows count +1 each, ΔV's
+    ±1, and :func:`recount` re-counts them — the full form for
+    ``"shuffle"``; for ``"patch"`` ΔV is first folded to one net count
+    per tuple and the touched-split form re-counts only the state rows of
+    those tuples, never exchanging the state."""
+    cols = list(view.output_order)
+    d = _counted(delta_v, cols, _DELTA_WEIGHT)
+    split = strategy == "patch"
+    if split:
+        d = _regroup(d, cols).localCheckpoint(eager=True)
+    return _exploded(recount(_counted(state, cols, "1"), d, cols, split=split), cols)
 
 
 def bag_diff_cdc(
@@ -591,48 +536,26 @@ def bag_diff_cdc(
     input plans twice (each exceptAll is its own union+count+replicate
     subtree — Spark's RewriteExceptAll cannot share work across the two
     calls), which for the window/as-of delta rules means four window
-    recomputes per batch where two suffice.  Here each side is tagged
-    ±1, aggregated once over all columns, and rows with a non-zero net
-    count are replicated |net| times carrying ``sign(net) > 0`` as the
-    multiplicity — exactly the multiset the two exceptAlls produce.
+    recomputes per batch where two suffice.  Here ``new`` counts +1 and
+    ``old`` −1 in one signed :func:`recount`, and rows with a non-zero
+    net count are replicated |net| times carrying ``sign(net) > 0`` as
+    the multiplicity — exactly the multiset the two exceptAlls produce.
     NULL/NaN grouping equality matches exceptAll's comparison rules."""
-    from ivm_extension_spark.operators.colops import q
-
-    cols = [c for c in old.columns]
-    colsq = [q(c) for c in cols]
-    tagged = new.selectExpr(*colsq, f"1 AS {_SIGN}").unionByName(
-        old.selectExpr(*colsq, f"-1 AS {_SIGN}")
+    cols = list(old.columns)
+    net = recount(
+        _counted(new, cols, "1"), _counted(old, cols, "-1"), cols, signed=True
     )
-    net = (
-        tagged.groupBy(*cols)
-        .agg(F.sum(_SIGN).alias("__ivm_net"))
-        .filter(F.col("__ivm_net") != 0)
-    )
+    n = q(_N)
     return net.selectExpr(
-        *colsq,
-        "explode(array_repeat(`__ivm_net` > 0, CAST(abs(`__ivm_net`) AS INT)))"
-        f" AS {q(mult_col)}",
+        *[q(c) for c in cols],
+        f"explode(array_repeat({n} > 0, CAST(abs({n}) AS INT))) AS {q(mult_col)}",
     )
 
 
 def apply_delta_to_table(base: DataFrame, delta: DataFrame) -> DataFrame:
     """Apply a delta table to its base table (bag semantics): the ground
     truth T' = T ∪ Δ⁺ ∖ Δ⁻ used by full refresh and the IVM invariant
-    tests (merge(q(T), ΔV) == q(T'))."""
-    from ivm_extension_spark.operators.colops import q
-
-    cols = [c for c in base.columns]
-    colsq = [q(c) for c in cols]
-    s = base.selectExpr("*", f"1 AS {_SIGN}")
-    d = delta.selectExpr(
-        *colsq, f"CASE WHEN {q(MULT_COL)} THEN 1 ELSE -1 END AS {_SIGN}"
-    )
-    counts = (
-        s.unionByName(d)
-        .groupBy(*cols)
-        .agg(F.sum(_SIGN).alias("__ivm_n"))
-        .filter(F.col("__ivm_n") > 0)
-    )
-    return counts.selectExpr(
-        *colsq, "explode(sequence(1, __ivm_n)) AS `__ivm_i`"
-    ).drop("__ivm_i")
+    tests (merge(q(T), ΔV) == q(T')) — the full form of :func:`recount`."""
+    cols = list(base.columns)
+    d = _counted(delta, cols, _DELTA_WEIGHT)
+    return _exploded(recount(_counted(base, cols, "1"), d, cols), cols)

@@ -90,7 +90,7 @@ def multi_window_view_delta(
         bag_diff_cdc,
     )
 
-    from ivm_extension_spark.operators.colops import ns_eq, q
+    from ivm_extension_spark.operators.colops import keyed_join, q
 
     def _flag_pass(
         df: DataFrame, keysets: list[DataFrame], prefix: str
@@ -98,13 +98,8 @@ def multi_window_view_delta(
         flags: list[str] = []
         for n, (L, ks) in enumerate(zip(lists, keysets)):
             fname = f"__mw_{prefix}{n}"
-            kpfx = f"__mwk_{prefix}{n}_"
-            kd = ks.selectExpr(
-                *[f"{q(c)} AS {q(kpfx + c)}" for c in L], f"true AS {q(fname)}"
-            )
-            df = df.join(F.broadcast(kd), on=ns_eq(L, kpfx), how="left").drop(
-                *[kpfx + c for c in L]
-            )
+            kd = ks.selectExpr(*[q(c) for c in L], f"true AS {q(fname)}")
+            df = keyed_join(df, kd, L, "left")
             flags.append(fname)
         return df, flags
 

@@ -26,3 +26,13 @@ def spark():
 def rows(df):
     """Order-insensitive golden compare helper: sorted list of tuples."""
     return sorted([tuple(r) for r in df.collect()], key=lambda t: tuple(map(str, t)))
+
+
+def force_merge(monkeypatch, strategy):
+    """Route every view merge to ``strategy`` ("patch" or "shuffle") by
+    moving the state-row threshold the engine picks the path with."""
+    from ivm_extension_spark import engine
+
+    monkeypatch.setattr(
+        engine, "PATCH_MIN_STATE_ROWS", 0 if strategy == "patch" else 10**18
+    )

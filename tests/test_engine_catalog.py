@@ -37,6 +37,24 @@ def test_drop_view_clears_aux_state(spark):
     assert "v" not in eng._aux
 
 
+def test_drop_view_forgets_last_merge_strategy(spark):
+    """A view re-created under a dropped name reports no merge strategy
+    until it merges itself."""
+    eng = IVMEngine(spark)
+    eng.register_table("t", spark.createDataFrame([(1, "x")], "a int, b string"))
+    eng.create_immv("v", sql="SELECT b, sum(a) AS s FROM t GROUP BY b")
+    eng.register_delta(
+        "t",
+        spark.createDataFrame([(2, "x", True)], f"a int, b string, {MULT_COL} boolean"),
+    )
+    eng.maintain("v")
+    assert eng.stats("v")["last_merge_strategy"] == "shuffle"
+    eng.drop_view("v")
+    eng.create_immv("v", sql="SELECT b, sum(a) AS s FROM t GROUP BY b")
+    st = eng.stats("v")
+    assert (st["last_merge_strategy"], st["merges_applied"]) == (None, 0)
+
+
 def test_execute_sql_front_door(spark):
     # reference entry-point parity: CREATE IMMV AS (ivm_parser.cpp:14-52,
     # unfinished there), PRAGMA ivm_upsert (ivm_extension.cpp:95-110),
@@ -272,12 +290,15 @@ def test_maintain_all_skips_delta_only_views(spark):
     assert rows(eng.table("t")) == [("a", 1), ("a", 10), ("b", 2)]
 
 
-def test_stats_merge_strategy_is_per_view(spark):
+def test_stats_merge_strategy_is_per_view(spark, monkeypatch):
     """stats(name)['last_merge_strategy'] must report THAT view's last
     strategy, not the engine-global most-recent one (round-1 advice)."""
     from pyspark.sql import functions as F
 
-    eng = IVMEngine(spark, merge_strategy="auto", patch_min_state_rows=2)
+    from ivm_extension_spark import engine
+
+    monkeypatch.setattr(engine, "PATCH_MIN_STATE_ROWS", 2)
+    eng = IVMEngine(spark)
     base = spark.createDataFrame(
         [("a", 1), ("b", 2), ("c", 3)], "k string, x int"
     )

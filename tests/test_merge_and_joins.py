@@ -11,7 +11,7 @@ from ivm_extension_spark import IVMEngine
 from ivm_extension_spark.operators.rewrite import MULT_COL as MULT_COL_NAME
 from ivm_extension_spark.operators.rewrite import IVMError
 
-from tests.conftest import rows
+from tests.conftest import force_merge, rows
 
 SCHEMA = "a int, b string, c string"
 DELTA_SCHEMA = "a int, b string, c string, _duckdb_ivm_multiplicity boolean"
@@ -604,12 +604,12 @@ def test_left_join_aggregate_counts_null_matches(spark):
 
 
 @pytest.mark.parametrize("strategy", ["shuffle", "patch"])
-def test_unaliased_qualified_select_item_merges(spark, strategy):
+def test_unaliased_qualified_select_item_merges(spark, monkeypatch, strategy):
     """An unaliased ``cust.ck`` keeps the output name ``cust.ck``; the bag
     merge must group by it as one quoted name, not as qualifier ``cust`` plus
     column ``ck``."""
     eng = lj_engine(spark, dord=[(14, 3, True), (12, 2, False)])
-    eng.merge_strategy = strategy
+    force_merge(monkeypatch, strategy)
     lj_check(eng, "SELECT cust.ck, seg, ok FROM cust LEFT JOIN orders ON cust.ck = ck2")
     assert eng.stats("v")["last_merge_strategy"] == strategy
 

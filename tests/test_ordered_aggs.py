@@ -314,11 +314,11 @@ def test_median_over_join_view_with_deletes(spark):
 def test_touched_group_derive_slice(spark):
     """With many groups and a narrow delta, the aux re-derivation runs
     over the touched slice only (adaptive: needs the measured state
-    size, i.e. merge_strategy='auto', and a small touched fraction) —
+    size, measured after every merge, and a small touched fraction) —
     and stays exact, including untouched groups keeping their values."""
     rows_ = [(f"g{i}", i * 10 + j, "s") for i in range(20) for j in range(3)]
     base = spark.createDataFrame(rows_, "k string, x int, s string")
-    eng = IVMEngine(spark, merge_strategy="auto")
+    eng = IVMEngine(spark)
     eng.register_table("t", base)
     eng.create_immv(
         "v", sql="SELECT k, median(x) AS med, max(x) AS hi, count(x) AS n "

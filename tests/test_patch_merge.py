@@ -19,13 +19,14 @@ from pyspark.sql import functions as F
 from ivm_extension_spark import IVMEngine
 from ivm_extension_spark.operators.rewrite import MULT_COL
 
-from tests.conftest import rows
+from tests.conftest import force_merge, rows
 
 SF = "/root/testdata/sf0.001"
 
 
-def _mk(spark, merge_strategy, deltas=("lineitem",)):
-    eng = IVMEngine(spark, merge_strategy=merge_strategy)
+def _mk(spark, monkeypatch, merge_strategy, deltas=("lineitem",)):
+    force_merge(monkeypatch, merge_strategy)
+    eng = IVMEngine(spark)
     for t in ("lineitem", "orders", "customer"):
         eng.register_table(t, f"{SF}/{t}.parquet")
     defs = {
@@ -53,18 +54,19 @@ VIEW_SQLS = {
 
 
 @pytest.mark.parametrize("vname", sorted(VIEW_SQLS))
-def test_patch_equals_shuffle(spark, vname):
+def test_patch_equals_shuffle(spark, monkeypatch, vname):
     results = {}
     for strat in ("patch", "shuffle"):
-        eng = _mk(spark, strat)
+        eng = _mk(spark, monkeypatch, strat)
         eng.create_immv("v", sql=VIEW_SQLS[vname])
         eng.ivm_upsert("v")
         results[strat] = rows(eng.merge_view("v"))
     assert results["patch"] == results["shuffle"]
 
 
-def test_patch_merge_new_and_deleted_groups(spark):
-    eng = IVMEngine(spark, merge_strategy="patch")
+def test_patch_merge_new_and_deleted_groups(spark, monkeypatch):
+    force_merge(monkeypatch, "patch")
+    eng = IVMEngine(spark)
     base = spark.createDataFrame(
         [("a", 1), ("a", 2), ("b", 5)], "k string, x int"
     )
@@ -81,8 +83,9 @@ def test_patch_merge_new_and_deleted_groups(spark):
     assert rows(eng.merge_view("v")) == [("a", 13, 3), ("c", 7, 1)]
 
 
-def test_patch_merge_null_group_key(spark):
-    eng = IVMEngine(spark, merge_strategy="patch")
+def test_patch_merge_null_group_key(spark, monkeypatch):
+    force_merge(monkeypatch, "patch")
+    eng = IVMEngine(spark)
     base = spark.createDataFrame([(None, 1), ("x", 2)], "k string, x int")
     eng.register_table("t", base)
     eng.create_immv("v", sql="SELECT k, sum(x) AS s FROM t GROUP BY k")
@@ -95,11 +98,11 @@ def test_patch_merge_null_group_key(spark):
     assert rows(eng.merge_view("v")) == [(None, 5), ("x", 2)]
 
 
-def test_patch_merge_multibatch_minmax_distinct(spark):
+def test_patch_merge_multibatch_minmax_distinct(spark, monkeypatch):
     # aux-state aggregates compose with the patch path: derived values
     # are patched on top of the combined state, batch after batch
     for strat in ("patch", "shuffle"):
-        eng = _mk(spark, strat, deltas=("orders",))
+        eng = _mk(spark, monkeypatch, strat, deltas=("orders",))
         eng.create_immv(
             "v",
             sql="SELECT o_orderstatus, min(o_custkey) AS mn, max(o_custkey) AS mx, "
@@ -118,8 +121,8 @@ def test_patch_merge_multibatch_minmax_distinct(spark):
         assert got == want, strat
 
 
-def test_patch_merge_plan_never_exchanges_state(spark):
-    eng = _mk(spark, "patch")
+def test_patch_merge_plan_never_exchanges_state(spark, monkeypatch):
+    eng = _mk(spark, monkeypatch, "patch")
     eng.create_immv("v", sql=VIEW_SQLS["groupby"])
     eng.ivm_upsert("v")
     # build the merge plan against pinned state without executing the
@@ -143,10 +146,13 @@ def test_patch_merge_plan_never_exchanges_state(spark):
     assert "BroadcastHashJoin" in plan, plan
 
 
-def test_auto_strategy_is_adaptive(spark):
+def test_auto_strategy_is_adaptive(spark, monkeypatch):
     # small state → shuffle; once the measured state crosses the
     # threshold, the next batch patches (the aux-advance policy shape)
-    eng = IVMEngine(spark, merge_strategy="auto", patch_min_state_rows=2)
+    from ivm_extension_spark import engine
+
+    monkeypatch.setattr(engine, "PATCH_MIN_STATE_ROWS", 2)
+    eng = IVMEngine(spark)
     base = spark.createDataFrame([("a", 1), ("b", 2), ("c", 3)], "k string, x int")
     eng.register_table("t", base)
     eng.create_immv("v", sql="SELECT k, sum(x) AS s FROM t GROUP BY k")
@@ -160,13 +166,13 @@ def test_auto_strategy_is_adaptive(spark):
         return out
 
     batch([("a", 10, True)])
-    assert eng._last_merge_strategy == "shuffle"  # size unknown on batch 1
+    assert eng.stats("v")["last_merge_strategy"] == "shuffle"  # size unknown on batch 1
     batch([("b", 20, True)])
-    assert eng._last_merge_strategy == "patch"  # measured 3 rows >= 2
+    assert eng.stats("v")["last_merge_strategy"] == "patch"  # measured 3 rows >= 2
     assert rows(eng.read_view("v")) == [("a", 11), ("b", 22), ("c", 3)]
 
 
-def test_patch_bag_merge_equals_shuffle(spark):
+def test_patch_bag_merge_equals_shuffle(spark, monkeypatch):
     """Projection-view (bag) patch merge: same result as the shuffle
     path, including NULL columns from outer joins and multiplicity > 1."""
     sql = (
@@ -175,7 +181,7 @@ def test_patch_bag_merge_equals_shuffle(spark):
     )
     results = {}
     for strat in ("shuffle", "patch"):
-        eng = _mk(spark, strat, deltas=("orders", "customer"))
+        eng = _mk(spark, monkeypatch, strat, deltas=("orders", "customer"))
         eng.create_immv("v", sql=sql)
         eng.ivm_upsert("v")
         results[strat] = rows(eng.merge_view("v"))
@@ -183,10 +189,10 @@ def test_patch_bag_merge_equals_shuffle(spark):
     assert len(results["patch"]) > 0
 
 
-def test_patch_bag_merge_plan_never_exchanges_state(spark):
+def test_patch_bag_merge_plan_never_exchanges_state(spark, monkeypatch):
     """The bag patch plan must not shuffle the state: broadcast
     anti/semi probes plus an O(|touched|+|ΔV|) re-count only."""
-    eng = _mk(spark, "patch", deltas=("orders",))
+    eng = _mk(spark, monkeypatch, "patch", deltas=("orders",))
     eng.create_immv(
         "v", sql="SELECT o_orderkey, o_orderstatus FROM orders"
     )

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from ivm_extension_spark import IVMEngine
 from ivm_extension_spark.operators.rewrite import MULT_COL
 
-from tests.conftest import rows
+from tests.conftest import force_merge, rows
 
 SF = "/root/testdata/sf0.001"
 
@@ -221,7 +221,7 @@ def test_lakehouse_group_deletion_empties_bucket(spark, tmp_path):
     assert rows(store.read("v").select("k", "s", "n")) == [("a", 1, 1)]
 
 
-def test_lakehouse_patch_merge_no_state_exchange(spark, tmp_path):
+def test_lakehouse_patch_merge_no_state_exchange(spark, tmp_path, monkeypatch):
     """The MERGE INTO property end-to-end: with store-backed (parquet)
     state, the patch merge plan still never exchanges the state side."""
     import io
@@ -232,7 +232,8 @@ def test_lakehouse_patch_merge_no_state_exchange(spark, tmp_path):
     from ivm_extension_spark.sources.lakehouse import LakehouseStore
 
     store = LakehouseStore(spark, str(tmp_path / "lake"), n_buckets=8)
-    eng = IVMEngine(spark, merge_strategy="patch", state_store=store)
+    force_merge(monkeypatch, "patch")
+    eng = IVMEngine(spark, state_store=store)
     eng.register_table("lineitem", f"{SF}/lineitem.parquet")
     eng.create_immv(
         "v",

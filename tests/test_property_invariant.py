@@ -13,7 +13,7 @@ from hypothesis import HealthCheck, assume, given, settings, strategies as st
 
 from ivm_extension_spark import IVMEngine
 
-from tests.conftest import rows
+from tests.conftest import force_merge, rows
 
 KEYS = ["k0", "k1", "k2"]
 
@@ -306,12 +306,15 @@ PATCH_SHAPES = [
     delete_mask=st.lists(st.booleans(), min_size=12, max_size=12),
     shape=st.sampled_from(PATCH_SHAPES),
 )
-def test_patch_merge_equals_shuffle_merge(spark, base, inserts, delete_mask, shape):
+def test_patch_merge_equals_shuffle_merge(
+    spark, monkeypatch, base, inserts, delete_mask, shape
+):
     deletes = [r for r, m in zip(base, delete_mask) if m]
     delta = [(*r, True) for r in inserts] + [(*r, False) for r in deletes]
     results = {}
     for strat in ("patch", "shuffle"):
-        eng = IVMEngine(spark, merge_strategy=strat)
+        force_merge(monkeypatch, strat)
+        eng = IVMEngine(spark)
         eng.register_table(
             "t", spark.createDataFrame(base, schema="a int, b string, c string")
         )

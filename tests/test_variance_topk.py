@@ -7,7 +7,7 @@ supported view).  Both are natural closure:
 - var_pop/var_samp/stddev_pop/stddev_samp are maintained exactly through
   hidden SUM(x), SUM(x*x), COUNT(x) companions — all linear, so the
   delta/merge algebra is the SUM/COUNT one — and recomposed on read
-  (operators/merge.py: variance_col).
+  (operators/merge.py: variance_oracle_sql).
 - ORDER BY/LIMIT apply on read like HAVING: maintained state is the full
   pre-limit relation (a row's rank can move under later deltas).
 """
