@@ -3698,9 +3698,9 @@ def _q_ivm_multibatch_window_multilist(spark: SparkSession, sf_dir: str) -> Data
     out = None
     for d in (b1, b2):
         eng.register_delta("orders", d)
-        eng.ivm_upsert("v")
-        # state merge ∥ base fold (engine.merge_and_advance) — identical
-        # result, the two independent checkpoint jobs overlap per batch
+        # ΔV built over the pinned delta, state merge ∥ base fold
+        # (engine.merge_and_advance) — identical result, the delta read
+        # once and the two independent checkpoint jobs overlap per batch
         out = eng.merge_and_advance("v", "orders")
     return out
 

@@ -58,9 +58,11 @@ _PARTITION_RX = re.compile(
 
 
 class BaseFoldError(IVMError):
-    """``merge_and_advance``: the view merge COMMITTED but the base fold
-    did not — the base table and its registered delta are untouched, so
-    recovery must redo only the fold, never the merge."""
+    """The batch drive (``maintain_all`` / ``maintain`` /
+    ``merge_and_advance``): every view merge COMMITTED but a base fold
+    did not — no base table was swapped and the deltas stay registered,
+    so recovery must redo only the folds (``apply_delta`` per table),
+    never the merges."""
 
 
 def _qualify_partition_keys(qualify: str) -> list[str] | None:
@@ -171,7 +173,13 @@ class IVMEngine:
 
     def register_delta(self, name: str, df: DataFrame) -> None:
         """Register ``delta_<name>``: base columns + _duckdb_ivm_multiplicity
-        BOOL appended last (README.md:18-23 convention)."""
+        BOOL appended last (README.md:18-23 convention).
+
+        The frame is kept as the caller's declarative plan: ``ivm_upsert``
+        and a standalone ``merge_view`` read it as such, so the ΔV they
+        return keeps its pushdown and broadcast shapes auditable.  Only
+        the batch drive (:meth:`_drive_batch`) pins it, for the length of
+        one batch.  A pinned delta this call replaces is freed."""
         if name not in self._tables:
             raise IVMError(f"base table {name!r} is not registered")
         if MULT_COL not in df.columns:
@@ -186,7 +194,16 @@ class IVMEngine:
         from ivm_extension_spark.operators.colops import q
 
         self._insert_only_deltas.discard(name)  # new delta: no assumption
-        self._deltas[name] = df.selectExpr(*[q(c) for c in (*base_cols, MULT_COL)])
+        df = df.selectExpr(*[q(c) for c in (*base_cols, MULT_COL)])
+        self._drop_delta(name)
+        self._deltas[name] = df
+
+    def _drop_delta(self, name: str) -> None:
+        """Unregister ``delta_<name>``; a delta the batch drive pinned
+        frees its blocks too."""
+        d = self._deltas.pop(name, None)
+        if getattr(d, "_ivm_delta_pin", False):
+            pin.release(d)
 
     def table(self, name: str) -> DataFrame:
         if name not in self._tables:
@@ -266,7 +283,7 @@ class IVMEngine:
                 f"table {name!r} is referenced by views {users}; drop them first"
             )
         self._tables.pop(name)
-        self._deltas.pop(name, None)
+        self._drop_delta(name)
 
     # -- view lifecycle ----------------------------------------------------
 
@@ -687,19 +704,25 @@ class IVMEngine:
         """Compute ΔV for ``name`` (the reference's
         ``PRAGMA ivm_upsert``).  Returns view columns + multiplicity;
         caches the internal-shape ΔV for a subsequent merge_view()."""
-        if name in self._sketch_specs:
-            spec = self._sketch_specs[name]
-            dv = spec.delta_state(
-                self.delta(spec.source),
-                MULT_COL,
-                insert_only=spec.source in self._insert_only_deltas,
-            )
-            self._delta_views[name] = dv
-            return dv
-        vdef = self.view(name)
-        dv = self._delta_plan_for(name)
+        dv = self._view_delta(name)
         self._delta_views[name] = dv
-        return merge_ops.finalize(dv, vdef)
+        if name in self._sketch_specs:
+            return dv
+        return merge_ops.finalize(dv, self._views[name])
+
+    def _view_delta(self, name: str) -> DataFrame:
+        """ΔV in internal shape over the registered deltas; a sketch
+        view's is the sketch of its source's delta (monotone kinds
+        raise here on a delete-bearing delta)."""
+        spec = self._sketch_specs.get(name)
+        if spec is None:
+            self.view(name)  # unknown names: 'is not registered'
+            return self._delta_plan_for(name)
+        return spec.delta_state(
+            self.delta(spec.source),
+            MULT_COL,
+            insert_only=spec.source in self._insert_only_deltas,
+        )
 
     def _delta_plan_for(self, name: str) -> DataFrame:
         if name in self._composites:
@@ -1060,13 +1083,15 @@ class IVMEngine:
         return out
 
     def maintain_all(self) -> dict[str, DataFrame]:
-        """Advance EVERY view affected by the registered deltas, then fold
-        the deltas into their base tables — the multi-view batch verb.
+        """Advance EVERY view affected by the registered deltas and fold
+        every registered delta into its base table — the multi-view
+        batch verb, one :meth:`_drive_batch` over the whole catalog.
 
         All views merge against the PRE-delta base world (their delta
-        rules require it), then the deltas are applied once.  Delta plans
-        for every affected view are built up front, so a view whose shape
-        is rejected (e.g. a theta outer/semi/anti chain over tables that
+        rules require it); each delta is read once for the whole batch
+        and the base folds run beside the merges.  Delta plans for every
+        affected view are built up front, so a view whose shape is
+        rejected (e.g. a theta outer/semi/anti chain over tables that
         share a column name) raises BEFORE any state has advanced: the
         catalog is never left half-merged.
 
@@ -1077,63 +1102,125 @@ class IVMEngine:
         delta; multi-PARTITION-BY window views are ordinary fused views
         here (one delta plan, one merge).
         """
-        def _tables(v: str) -> tuple[str, ...]:
-            if v in self._composites:
-                # a composite window view is affected through its INNER
-                # join view's base tables (the snapshot delta is derived)
-                return self._views[self._composites[v][0]].tables
-            if v in self._union_branches:
-                return tuple(
-                    t for b in self._union_branches[v] for t in b.tables
-                )
-            return self._views[v].tables
-
         # composite INNERS advance inside their outer's merge epilogue —
-        # driving them standalone here would double-apply their delta
+        # driving them standalone here would double-apply their delta;
+        # their snapshot tables are republished there, never folded
         comp_inner = {i for i, _ in self._composites.values()}
+        snaps = {s for _, s in self._composites.values()}
         affected = [
             v
-            for v in self._views
+            for v in [*self._views, *self._sketch_specs]
             if v not in comp_inner
             and v in self._state  # ΔV-only views (materialize=False) have no
             # state to advance: skip them — their next ivm_upsert simply
             # runs against the post-apply base with fresh deltas.  Checked
             # up front so merge_view can never raise 'was not materialized'
             # after earlier views have already merged (never-half-merged).
-            and any(t in self._deltas for t in _tables(v))
+            and any(t in self._deltas for t in self._view_tables(v))
         ]
-        sketch_affected = [
-            n
-            for n, s in self._sketch_specs.items()
-            if n in self._state and s.source in self._deltas
-        ]
-        plans = {v: self._delta_plan_for(v) for v in affected}  # may raise
-        sk_plans = {  # monotone kinds raise here on delete-bearing deltas
-            n: self._sketch_specs[n].delta_state(
-                self.delta(self._sketch_specs[n].source),
-                MULT_COL,
-                insert_only=self._sketch_specs[n].source
-                in self._insert_only_deltas,
-            )
-            for n in sketch_affected
-        }
-        for v in affected:
-            self._delta_views[v] = plans[v]
-        for n in sketch_affected:
-            self._delta_views[n] = sk_plans[n]
-        ordered = affected + sketch_affected
-        # affected views are pairwise independent by construction (user
-        # cascades stay manual; composite inners advance inside their
-        # outer's epilogue) — merge them concurrently, same thread-per-
-        # view drive as merge_views; then the independent per-table base
-        # folds (distinct engine keys), concurrent by the same argument
-        out = dict(zip(ordered, pin.build_all(
-            *[lambda v=v: self.merge_view(v) for v in ordered], limit=8
-        )))
-        pin.build_all(
-            *[lambda t=t: self.apply_delta(t) for t in self._deltas], limit=8
+        return self._drive_batch(
+            affected, [t for t in self._deltas if t not in snaps]
         )
-        return out
+
+    def _view_tables(self, name: str) -> tuple[str, ...]:
+        """Base tables whose deltas advance ``name``: a sketch view's
+        source, a composite window view's INNER join tables (its
+        snapshot delta is derived), every UNION ALL branch's tables (the
+        registered ViewDef is only the first branch)."""
+        if name in self._sketch_specs:
+            return (self._sketch_specs[name].source,)
+        if name in self._composites:
+            return self._views[self._composites[name][0]].tables
+        return tuple(dict.fromkeys(
+            t for b in self._union_branches.get(name, [self._views[name]])
+            for t in b.tables
+        ))
+
+    def _drive_batch(
+        self, views: list[str], tables: list[str]
+    ) -> dict[str, DataFrame]:
+        """Merge ``views`` and fold the deltas of ``tables`` into their
+        bases — the one batch drive behind ``maintain_all``, ``maintain``
+        and ``merge_and_advance``.  Returns {view -> new public view}.
+
+        Cost model.  Each delta of ``tables`` is swapped for a LAZY
+        ``localCheckpoint`` of itself: the first job that reads it
+        (typically a ΔV branch's broadcast build) stores its blocks, and
+        every later reader — each ΔV branch of each view, the aux
+        advances, the base fold — reads those blocks instead of
+        re-running the caller's delta plan (a ``createDataFrame`` delta
+        is a Python-worker scan per read).  The pin adds no Spark job.
+        The ΔV plans are built concurrently over the pinned deltas before
+        any merge starts.  Then every merge and every base-fold
+        checkpoint run in ONE fan-out: a fold reads only its base and its
+        pinned delta, never view state, and no merge reads a folded base
+        (the swap waits for every merge), so the O(|T|) folds run beside
+        the merges instead of after the slowest one.
+
+        Failure contract.  A rejected ΔV shape raises before any merge.
+        A failed merge waits for the folds, frees their checkpoints,
+        puts back the caller's delta frames and re-raises: bases and
+        deltas are unchanged, but a sibling view whose merge committed
+        has advanced.  When every merge committed but a fold
+        failed, the successful folds are freed, no base is swapped and
+        ``BaseFoldError`` names the tables; their deltas stay registered
+        (pinned: what the merges read) for the redo."""
+        originals = {t: self.delta(t) for t in tables}
+        pins = {t: d.localCheckpoint(eager=False) for t, d in originals.items()}
+        for p in pins.values():
+            p._ivm_delta_pin = True
+        self._deltas.update(pins)
+
+        def unpin() -> None:
+            self._deltas.update(originals)
+            for p in pins.values():
+                pin.release(p)
+
+        # unmaterialized or unknown views get no plan: merge_view raises
+        # its own error for them inside the fan-out
+        planned = [v for v in views if v in self._state]
+        try:
+            plans = pin.build_all(
+                *[lambda v=v: self._view_delta(v) for v in planned], limit=8
+            )
+        except BaseException:
+            unpin()
+            raise
+        self._delta_views.update(zip(planned, plans))
+        futs = pin.settle(
+            *[lambda v=v: self.merge_view(v) for v in views],
+            *[
+                lambda t=t: merge_ops.apply_delta_to_table(
+                    self.table(t), self.delta(t)
+                ).localCheckpoint(eager=True)
+                for t in tables
+            ],
+            limit=8,
+        )
+        merged, folded = futs[: len(views)], futs[len(views) :]
+        errors = [f.exception() for f in futs]
+        bases = {
+            t: f.result() for t, f in zip(tables, folded) if f.exception() is None
+        }
+        if any(e is not None for e in errors):
+            for b in bases.values():
+                pin.release(b)
+        failed = next((e for e in errors[: len(views)] if e is not None), None)
+        if failed is not None:
+            for v in views:  # an uncommitted ΔV reads the pins
+                self._delta_views.pop(v, None)
+            unpin()
+            raise failed
+        bad = [t for t in tables if t not in bases]
+        if bad:
+            raise BaseFoldError(
+                f"base fold for {bad} failed after the merges of {views} "
+                "committed; redo only the fold"
+            ) from next(e for e in errors if e is not None)
+        self._tables.update(bases)
+        for t in tables:
+            self._drop_delta(t)
+        return {v: f.result() for v, f in zip(views, merged)}
 
     def _advance_aux(self, name: str) -> dict[str, DataFrame]:
         """Advance the view's auxiliary value multisets with the current
@@ -1435,7 +1522,7 @@ class IVMEngine:
         ``full_refresh`` and later delta rules would compute against a
         world the state never saw."""
         self.delta(name)  # reference-style missing-delta error
-        self._deltas.pop(name, None)
+        self._drop_delta(name)
 
     def apply_delta(self, name: str) -> DataFrame:
         """Fold delta_<name> into the base table (bag semantics) and clear
@@ -1443,49 +1530,24 @@ class IVMEngine:
         new_base = merge_ops.apply_delta_to_table(self.table(name), self.delta(name))
         new_base = new_base.localCheckpoint(eager=True)
         self._tables[name] = new_base
-        self._deltas.pop(name, None)
+        self._drop_delta(name)
         return new_base
 
     def merge_and_advance(self, name: str, table: str) -> DataFrame:
         """``merge_view(name)`` ∥ ``apply_delta(table)`` — the per-batch
-        tail of every multi-batch drive.  The two are independent: the
-        merge's ΔV plan captured the PRE-fold base relation (rebinding
-        ``self._tables`` never mutates an existing plan), and the fold
-        never reads view state — so their blocking checkpoint jobs can
-        overlap (guide §2.6, the same thread-per-unit submission
-        ``merge_views`` uses across views).  All engine-dict mutations
-        for the fold happen on the caller thread only after BOTH
-        finished, so a concurrent ``_advance_aux`` still sees the
-        registered delta.
+        tail of a streaming micro-batch, one :meth:`_drive_batch`: the
+        delta is read once, by the ΔV plan (built here, over the pinned
+        delta) and the base fold alike, and the fold checkpoint runs
+        beside the merge.  A ΔV cached by an earlier ``ivm_upsert`` is
+        rebuilt: it reads the caller's unpinned delta.
 
         Failure contract (what a streaming replay needs to know):
         merge failed → nothing committed, full redo is safe;
         merge committed but the fold failed → ``BaseFoldError`` — the
-        base and delta are untouched, so the caller must redo ONLY the
-        fold (`register_delta` + `apply_delta`), never the merge."""
-        fold_plan = merge_ops.apply_delta_to_table(
-            self.table(table), self.delta(table)
-        )
-        f_merge = pin.submit(lambda: self.merge_view(name))
-        f_base = pin.submit(lambda: fold_plan.localCheckpoint(eager=True))
-        try:
-            out = f_merge.result()
-        except BaseException:
-            # merge failure: world unchanged — let the fold finish and
-            # drop its checkpoint before re-raising
-            if f_base.exception() is None:
-                pin.release(f_base.result())
-            raise
-        try:
-            new_base = f_base.result()
-        except Exception as e:
-            raise BaseFoldError(
-                f"base fold for {table!r} failed after the merge of "
-                f"{name!r} committed; redo only the fold"
-            ) from e
-        self._tables[table] = new_base
-        self._deltas.pop(table, None)
-        return out
+        base is untouched and the delta still registered, so the caller
+        must redo ONLY the fold (`register_delta` + `apply_delta`),
+        never the merge."""
+        return self._drive_batch([name], [table])[name]
 
     # -- SQL front door (reference entry-point parity) ---------------------
 
@@ -1700,53 +1762,25 @@ class IVMEngine:
         return eng
 
     def maintain(self, name: str) -> DataFrame:
-        """Advance view ``name`` through ALL registered deltas and return
-        the new public view — upsert + merge + apply in one call, the
-        engine's "process this batch" verb.
+        """Advance view ``name`` through ALL registered deltas of its
+        tables and return the new public view — upsert + merge + apply
+        in one call, the engine's "process this batch" verb: one
+        :meth:`_drive_batch` over this view and its tables' deltas (each
+        delta read once, the base folds beside the merge).
 
-        This is ivm_upsert → merge_view → apply_delta per table for every
-        shape the delta rules cover — including multi-table delta batches
-        on outer/semi/anti chains, which the rewrite folds in one ΔV
-        (operators/rewrite.py, ``_fold_joins``).
+        It covers every shape the delta rules cover — including
+        multi-table delta batches on outer/semi/anti chains, which the
+        rewrite folds in one ΔV (operators/rewrite.py, ``_fold_joins``).
 
         Note this CONSUMES the deltas (bases advance, delta registrations
         clear), unlike ivm_upsert/merge_view which leave the base world
-        untouched.  At lakehouse scale each apply_delta step is the
-        storage layer's MERGE INTO on the base table.
+        untouched.  At lakehouse scale each base fold is the storage
+        layer's MERGE INTO on the base table.
         """
-        if name in self._sketch_specs:
-            src = self._sketch_specs[name].source
-            self.ivm_upsert(name)  # missing-delta error surfaces here
-            out = self.merge_view(name)
-            self.apply_delta(src)
-            return out
-        vdef = self.view(name)
-        # a UNION ALL view's registered ViewDef is only its first
-        # branch — consult every branch (like maintain_all/drop_table)
-        # or a branch-2-only delta raises a bogus missing-delta error
-        # and a consumed branch-2 delta stays registered, DOUBLE-
-        # applying on the next maintain
-        if name in self._composites:
-            # the user-facing base tables of a composite window view are
-            # the INNER join view's (its snapshot delta is derived, and
-            # consumed by the merge epilogue — never user-applied)
-            vtabs = dict.fromkeys(
-                self._views[self._composites[name][0]].tables
-            )
-        else:
-            vtabs = dict.fromkeys(
-                t
-                for b in self._union_branches.get(name, [vdef])
-                for t in b.tables
-            )
+        if name not in self._sketch_specs:
+            self.view(name)  # unknown names: 'is not registered'
+        vtabs = self._view_tables(name)
         tabs = [t for t in vtabs if t in self._deltas]
         if not tabs:
-            self.delta(next(iter(vtabs)))  # reference-style missing-delta error
-        self.ivm_upsert(name)
-        out = self.merge_view(name)
-        # the per-table base folds are independent eager checkpoints over
-        # DISTINCT engine keys — drive them concurrently, the same
-        # thread-per-unit submission as merge_views (engine bookkeeping
-        # is per-name keyed; Spark's scheduler is thread-safe)
-        pin.build_all(*[lambda t=t: self.apply_delta(t) for t in tabs])
-        return out
+            self.delta(vtabs[0])  # reference-style missing-delta error
+        return self._drive_batch([name], tabs)[name]

@@ -176,12 +176,12 @@ def asof_join_delta(
     pruning a key-bucketed store gives a MERGE INTO.  Deltas carry the
     bool multiplicity; output = view columns + the multiplicity bool.
     """
+    from ivm_extension_spark.operators.colops import keyed_join
     from ivm_extension_spark.operators.merge import (
         apply_delta_to_table,
         bag_diff_cdc,
     )
     from ivm_extension_spark.operators.rewrite import MULT_COL
-    from ivm_extension_spark.operators.countjoin import _ns_join
 
     if d_left is None and d_right is None:
         raise ValueError("at least one side needs a delta")
@@ -195,7 +195,7 @@ def asof_join_delta(
     def _affected(df: DataFrame) -> DataFrame:
         # NULL-safe: a NULL key is a real as-of group (window partitions
         # group NULLs), so NULL-key delta rows must restrict it too
-        return _ns_join(df, ak, keys, "leftsemi")
+        return keyed_join(df, ak, keys, "left_semi")
 
     # the two affected-side restrictions are independent plans — pin
     # them CONCURRENTLY so the narrow checkpoint jobs overlap (pin.py)

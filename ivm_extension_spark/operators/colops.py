@@ -82,11 +82,12 @@ def sql_over(text: str, **dfs: DataFrame) -> DataFrame:
     )
 
 
-def ns_eq(cols, prefix: str) -> Column:
+def ns_eq(cols, prefix: str, op: str = "<=>") -> Column:
     """NULL-SAFE equality of each ``c`` against ``prefix + c`` as ONE
     parsed expression — the broadcast-probe join condition every delta
-    rule uses (`<=>` is exactly ``Column.eqNullSafe``)."""
-    return F.expr(" AND ".join(f"{q(c)} <=> {q(prefix + c)}" for c in cols))
+    rule uses (`<=>` is exactly ``Column.eqNullSafe``; ``op="="`` is
+    plain equality)."""
+    return F.expr(" AND ".join(f"{q(c)} {op} {q(prefix + c)}" for c in cols))
 
 
 def renamed(df: DataFrame, cols, prefix: str, keep_rest: bool = False) -> DataFrame:
@@ -98,16 +99,20 @@ def renamed(df: DataFrame, cols, prefix: str, keep_rest: bool = False) -> DataFr
     return df.selectExpr(*exprs)
 
 
-def keyed_join(df: DataFrame, other: DataFrame, keys, how: str) -> DataFrame:
+def keyed_join(
+    df: DataFrame, other: DataFrame, keys, how: str, null_safe: bool = True
+) -> DataFrame:
     """``df`` joined with broadcast ``other`` on NULL-SAFE equality of
-    ``keys`` — a NULL key matches a NULL key, as GROUP BY groups them.
-    ``how`` is ``left``, ``left_semi`` or ``left_anti``.  ``other``'s key
-    copies are renamed apart for the condition and never reach the
-    result; on a left join its other columns follow ``df``'s."""
+    ``keys`` — a NULL key matches a NULL key, as GROUP BY groups them —
+    or plain equality when not ``null_safe``.  ``how`` is ``inner``,
+    ``left``, ``left_semi`` or ``left_anti``.  ``other``'s key copies
+    are renamed apart for the condition and never reach the result; on
+    an inner or left join its other (payload) columns follow ``df``'s."""
     prefix = "__ivm_jk_"
     semi = how in ("left_semi", "left_anti")
     probe = renamed(other, keys, prefix, keep_rest=not semi)
-    out = df.join(F.broadcast(probe), ns_eq(keys, prefix), how)
+    cond = ns_eq(keys, prefix, "<=>" if null_safe else "=")
+    out = df.join(F.broadcast(probe), cond, how)
     return out if semi else out.drop(*[prefix + k for k in keys])
 
 

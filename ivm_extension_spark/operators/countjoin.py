@@ -94,43 +94,6 @@ _SIGN = "__ivm_sign"
 _TAG_L, _TAG_R = "__cj_dl", "__cj_dr"
 
 
-def _ns_join(
-    side: DataFrame, keys: DataFrame, cols: list[str], how: str, null_safe: bool = True
-) -> DataFrame:
-    """NULL-safe join of ``side`` against the small ``keys`` relation
-    on ``cols`` (keys is broadcast; its non-key payload columns ride
-    along on inner joins) — plain equality when not ``null_safe``.
-
-    One SQL text (rename + hinted join + the inner-join drop of the
-    probe's key copies) — same plan as the Dataset-API form it fused."""
-    ksub = ", ".join(
-        [f"{q(c)} AS {q('__mk_' + c)}" for c in cols]
-        + [q(c) for c in keys.columns if c not in cols]
-    )
-    eq = "<=>" if null_safe else "="
-    on = " AND ".join(f"__s.{q(c)} {eq} __k.{q('__mk_' + c)}" for c in cols)
-    if how == "inner":
-        proj = ", ".join(
-            ["__s.*"] + [f"__k.{q(c)}" for c in keys.columns if c not in cols]
-        )
-    elif how in ("left_anti", "leftsemi"):
-        proj = "__s.*"
-    else:
-        proj = "__s.*, __k.*"
-    jkind = {
-        "inner": "JOIN",
-        "left": "LEFT JOIN",
-        "left_anti": "LEFT ANTI JOIN",
-        "leftsemi": "LEFT SEMI JOIN",
-    }[how]
-    return colops.sql_over(
-        f"SELECT /*+ BROADCAST(__k) */ {proj} FROM {{s}} AS __s "
-        f"{jkind} (SELECT {ksub} FROM {{k}}) AS __k ON {on}",
-        s=side,
-        k=keys,
-    )
-
-
 def _null_pad(
     side: DataFrame,
     matched_keys: DataFrame,
@@ -322,8 +285,8 @@ def semi_anti_join(
     never compared row by row."""
     kp = m.kp_l
     mk = _proj(m.pairs(_proj(left, kp).distinct(), _proj(right, m.kp_r), None), kp)
-    return _ns_join(
-        left, mk.distinct(), kp, "left_anti" if anti else "leftsemi", m.null_safe
+    return colops.keyed_join(
+        left, mk.distinct(), kp, "left_anti" if anti else "left_semi", m.null_safe
     )
 
 
@@ -414,7 +377,7 @@ def outer_delta(
     # ΔR — a key ENTERING the matched set retracts its pad row
     def _left_anti2() -> list[DataFrame]:
         flips = _flips(m, left, dr, _proj(right, kp_r), "__wr", True)
-        t2 = _ns_join(left, flips, kp_l, "inner", m.null_safe)
+        t2 = colops.keyed_join(left, flips, kp_l, "inner", m.null_safe)
         return [t2.selectExpr(
             *[q(c) for c in left.columns],
             *colops.null_lit_exprs(
@@ -428,7 +391,7 @@ def outer_delta(
     # terms cancel against the matched/term-1 branches)
     def _right_anti2() -> list[DataFrame]:
         flips = _flips(m, right, dl, _proj(left, kp_l), "__wl", False)
-        t2r = _ns_join(right, flips, kp_r, "inner", m.null_safe)
+        t2r = colops.keyed_join(right, flips, kp_r, "inner", m.null_safe)
         null_l = [
             q(c) if c in key_cols
             else f"CAST(NULL AS {left.schema[c].dataType.simpleString()}) AS {q(c)}"
@@ -479,14 +442,14 @@ def semi_anti_delta(
         m_pos = _positive_keys(
             m.pairs(_proj(dl, kp).distinct(), rprime, "left"), kp, "__wr"
         )
-        t1 = _ns_join(
-            dl, m_pos, kp, "left_anti" if anti else "leftsemi", m.null_safe
+        t1 = colops.keyed_join(
+            dl, m_pos, kp, "left_anti" if anti else "left_semi", m.null_safe
         )
         return t1.selectExpr(*lcq, f"`__wl` AS {_SIGN}")
 
     def _term2() -> DataFrame:
         flips = _flips(m, left, dr, rproj, "__wr", True)
-        t2 = _ns_join(left, flips, kp, "inner", m.null_safe)
+        t2 = colops.keyed_join(left, flips, kp, "inner", m.null_safe)
         fsign = "-`__flip`" if anti else "`__flip`"
         return t2.selectExpr(*lcq, f"{fsign} AS {_SIGN}")
 

@@ -183,6 +183,14 @@ def build_all(*thunks, limit: "int | None" = None):
     failure in input order wins."""
     if len(thunks) <= 1:
         return [t() for t in thunks]
+    return [f.result() for f in settle(*thunks, limit=limit)]
+
+
+def settle(*thunks, limit: "int | None" = None) -> "list[Future]":
+    """Run ``thunks`` concurrently like :func:`build_all` (same ``limit``
+    slots) and return their futures in input order once EVERY one has
+    finished — for a caller that must tell which thunks failed and
+    clean up after the ones that did not."""
     slots = threading.Semaphore(limit) if limit else None
     futs = []
     for t in thunks:
@@ -194,4 +202,4 @@ def build_all(*thunks, limit: "int | None" = None):
             f.add_done_callback(lambda _: slots.release())
         futs.append(f)
     wait(futs)
-    return [f.result() for f in futs]
+    return futs

@@ -161,11 +161,11 @@ def window_view_delta(
     every window it uses partitions by (at least) ``partition_cols``, so
     restricting its input to whole partitions commutes with it.  Returns
     view columns + the bool multiplicity."""
+    from ivm_extension_spark.operators.colops import keyed_join
     from ivm_extension_spark.operators.merge import (
         apply_delta_to_table,
         bag_diff_cdc,
     )
-    from ivm_extension_spark.operators.countjoin import _ns_join
 
     keys = list(partition_cols)
     # EAGER pins: t_a feeds the old- and new-side window recomputes —
@@ -180,7 +180,7 @@ def window_view_delta(
     # blocks inside t_a's broadcast build)
     delta = delta.localCheckpoint(eager=True)
     ak = delta.select(*keys).distinct()
-    t_a = _ns_join(table, ak, keys, "leftsemi").localCheckpoint(eager=True)
+    t_a = keyed_join(table, ak, keys, "left_semi").localCheckpoint(eager=True)
     t_new = apply_delta_to_table(t_a, delta)
     # old- and new-side window recomputes: independent constructions
     # over the pinned t_a — build them concurrently (pin.build_all)

@@ -103,11 +103,11 @@ class StreamingViewMaintainer:
         # engine state is eagerly localCheckpoint'ed on merge, so nothing
         # keeps referencing this micro-batch's source after the batch ends
         self.engine.register_delta(self.table, batch_df)
-        self.engine.ivm_upsert(self.view_name)
         try:
-            # state merge ∥ base fold — overlapped (engine.merge_and_advance);
-            # on BaseFoldError the merge committed and only the fold remains,
-            # exactly the state the _merged_batch_id replay path redoes
+            # one batch drive (engine.merge_and_advance): the micro-batch is
+            # read once, state merge ∥ base fold; on BaseFoldError the merge
+            # committed and only the fold remains, exactly the state the
+            # _merged_batch_id replay path redoes
             self.engine.merge_and_advance(self.view_name, self.table)
         except BaseFoldError:
             self._merged_batch_id = batch_id

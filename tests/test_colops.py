@@ -114,11 +114,23 @@ def test_null_lit_exprs_ddl(spark):
     assert dict(out.dtypes)["d"] == "date"
 
 
-def test_ns_join_across_foreach_batch_clone_session(spark, tmp_path):
+def test_keyed_join_inner_payload_and_plain_equality(spark):
+    side = spark.createDataFrame([(1, "a"), (None, "n"), (2, "b")], "k int, v string")
+    keys = spark.createDataFrame([(1, 10), (None, 20)], "k int, p int")
+    ns = colops.keyed_join(side, keys, ["k"], "inner")
+    assert ns.columns == ["k", "v", "p"]  # payload after side, key copy gone
+    assert sorted(map(tuple, ns.collect()), key=str) == sorted(
+        [(1, "a", 10), (None, "n", 20)], key=str
+    )
+    plain = colops.keyed_join(side, keys, ["k"], "inner", null_safe=False)
+    assert [tuple(r) for r in plain.collect()] == [(1, "a", 10)]
+
+
+def test_keyed_join_across_foreach_batch_clone_session(spark, tmp_path):
     # foreachBatch hands the callback a micro-batch on a CLONED session:
-    # the one-SQL-text constructions must resolve frames of both the
+    # the NULL-safe broadcast join must resolve frames of both the
     # engine's session and the clone, whichever comes first
-    from ivm_extension_spark.operators.countjoin import _ns_join
+    keyed_join = colops.keyed_join
 
     table = spark.createDataFrame(
         [(1, "a"), (2, "b"), (None, "n"), (3, "c")], "k int, v string"
@@ -130,10 +142,10 @@ def test_ns_join_across_foreach_batch_clone_session(spark, tmp_path):
 
     def on_batch(batch, _batch_id):
         got["table_first"] = sorted(
-            r.v for r in _ns_join(table, batch, ["k"], "leftsemi").collect()
+            r.v for r in keyed_join(table, batch, ["k"], "left_semi").collect()
         )
         got["batch_first"] = sorted(
-            ((r.k, r.v) for r in _ns_join(batch, table, ["k"], "inner").collect()),
+            ((r.k, r.v) for r in keyed_join(batch, table, ["k"], "inner").collect()),
             key=str,
         )
 
